@@ -160,6 +160,36 @@ def test_anti_join_reads_only_keys(spark, tmp_path):
     ), "sink scan must read only (city, utc)"
 
 
+def test_upsert_job_count(spark, tmp_path):
+    """An upsert into an existing sink runs the anti-join's shuffle or
+    broadcast stages and one write job: no schema-inference job, no
+    cache-then-count, no second pass to count the appended rows."""
+    import uuid
+
+    from weather_etl_docker_airflow_project_spark.fixtures import CANNED_WEATHER
+    from weather_etl_docker_airflow_project_spark.functions.weather import (
+        transform_weather,
+    )
+    from weather_etl_docker_airflow_project_spark.operators.upsert import upsert_parquet
+    from weather_etl_docker_airflow_project_spark.sources.rest import records_to_df
+    from weather_etl_docker_airflow_project_spark.streaming.pipeline import run_cycle
+
+    sink = str(tmp_path / "sink")
+    run_cycle(spark, lambda: CANNED_WEATHER, sink)
+    newer = [dict(r, dt=r["dt"] + 600) for r in CANNED_WEATHER]
+    incoming = transform_weather(records_to_df(spark, CANNED_WEATHER + newer))
+    sc = spark.sparkContext
+    group = f"upsert-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "upsert job-count guard")
+    try:
+        assert upsert_parquet(spark, incoming, sink, ["city", "utc"]) == len(newer)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, f"upsert ran {len(jobs)} Spark jobs"
+
+
 def test_salted_agg_spreads_hot_key(spark):
     """a13: the two-phase salted aggregate must (a) group by (key, _salt)
     in phase 1 — the plan carries TWO aggregate exchanges, the first

@@ -4,6 +4,8 @@ micro-batch stream cycle."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from weather_etl_docker_airflow_project_spark.fixtures import (
@@ -130,3 +132,46 @@ def test_upsert_self_heals_torn_empty_sink_dir(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     assert upsert_parquet(spark, df, sink, ["k"]) == 2
     assert upsert_parquet(spark, df, sink, ["k"]) == 0  # idempotent after heal
+
+    # A killed call's staging dir: written, never moved into the sink. It
+    # holds a live key (3) and a stale copy of a stored one (2); neither
+    # may reach readers or the next call's key read.
+    killed = os.path.join(sink, "_upsert-" + "0" * 32)
+    spark.createDataFrame([(2, "stale"), (3, "c")], "k long, v string").write.parquet(killed)
+    assert sorted(map(tuple, spark.read.parquet(sink).collect())) == [(1, "a"), (2, "b")]
+    more = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
+    assert upsert_parquet(spark, more, sink, ["k"]) == 1
+    assert sorted(map(tuple, spark.read.parquet(sink).collect())) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def _sink_parquet_files(sink: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(root, f), sink)
+        for root, _, files in os.walk(sink)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_upsert_file_contract(spark, tmp_path):
+    """Every upsert that appends rows adds exactly one file for a small
+    batch, and an all-duplicate batch adds none: no empty part file and
+    no leftover staging directory (nor a sink, on a zero-row first call)."""
+    rows = [(f"City{i % 50}", f"2026-01-01 {i // 50:02d}:00:00", float(i)) for i in range(400)]
+    schema = "city string, utc string, temperature double"
+    sink = str(tmp_path / "sink")
+    first = spark.createDataFrame(rows[:200], schema)
+    assert upsert_parquet(spark, first.limit(0), sink, DEDUP_KEYS) == 0
+    assert not os.path.exists(sink)
+    assert upsert_parquet(spark, first, sink, DEDUP_KEYS) == 200
+    before = _sink_parquet_files(sink)
+
+    assert upsert_parquet(spark, first, sink, DEDUP_KEYS) == 0
+    assert _sink_parquet_files(sink) == before
+    assert [n for n in os.listdir(sink) if n.startswith("_upsert-")] == []
+
+    second = spark.createDataFrame(rows[100:300], schema)  # 100 stored, 100 new
+    assert upsert_parquet(spark, second, sink, DEDUP_KEYS) == 100
+    added = sorted(set(_sink_parquet_files(sink)) - set(before))
+    assert len(added) == 1 and os.sep not in added[0], added
+    assert spark.read.parquet(sink).count() == 300

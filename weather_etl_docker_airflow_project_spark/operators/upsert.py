@@ -7,18 +7,38 @@ left-anti join of the whole incoming batch against the sink keys
 (SURVEY.md §2.3 J5 / §2.9 T2): one plan, one pass, >=10^4 rows/s instead
 of 1 row per 2-minute run.
 
-Scale notes: the anti-join shuffles on the natural key unless the existing
-key-set is small enough to broadcast; we read ONLY the key columns from the
-sink (column pruning reaches the parquet scan). For a true 100 TB sink the
-right answer is a storage-level MERGE (Delta/Iceberg) or partition-pruned
-key read (e.g. restrict existing keys to the incoming batch's date range);
-``key_pruning_filter`` exposes that hook.
+Scale notes — the contract of ``upsert_parquet``:
+
+- One write job. The sink's key columns are read with an explicit schema
+  taken from the incoming batch, so no footer-inference job runs and the
+  scan is pruned to the keys. The anti-join feeds the write directly; the
+  appended-row count is an observed metric of that same write, so the
+  only other jobs are the join's own shuffle/broadcast stages.
+- AQE-sized files. Nothing is cached: a cached plan pins its output
+  partitioning (``canChangeCachedPlanOutputPartitioning`` is off), so
+  every write would land one tiny file per non-empty shuffle partition.
+  Uncached, AQE coalesces the final partitions, so a small batch lands as
+  one file and a large one is split by measured size.
+- No file on an all-duplicate batch. Spark writes an empty ``part-00000``
+  even for zero rows, so the write goes to a ``_upsert-*`` staging
+  directory inside the sink (readers skip ``_``-prefixed paths) and its
+  parquet files are renamed into the sink only when rows were appended.
+  The staging directory is always removed; one left by a killed call is
+  invisible to readers and to the next call's key read.
+
+For a true 100 TB sink the right answer is a storage-level MERGE
+(Delta/Iceberg) or partition-pruned key read (e.g. restrict existing keys
+to the incoming batch's date range); ``key_pruning_filter`` exposes that
+hook.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
+import uuid
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def dedup_new_rows(incoming: DataFrame, existing_keys: DataFrame, keys: list[str]) -> DataFrame:
@@ -39,36 +59,38 @@ def upsert_parquet(
 ) -> int:
     """Append only never-seen-before rows to a parquet sink; returns the
     number of appended rows. Idempotent: running twice with the same batch
-    appends zero the second time (reference semantics,
+    appends zero the second time and adds no file (reference semantics,
     ``weather_etl.py:158-187``)."""
-    # Probe the sink with the Hadoop FileSystem API rather than a
-    # read-then-catch(AnalysisException): the failed read makes the JVM
-    # log a full stack trace to stderr on every fresh sink (it polluted
-    # the r5 bench tail), and the FS check works identically on local FS,
-    # HDFS, and S3A. The except stays as the recovery path for a sink
-    # DIRECTORY that exists but holds no readable parquet (a killed
-    # first write leaving only _temporary/ or an empty dir): treat it as
-    # fresh and self-heal instead of wedging every later upsert.
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    # The Hadoop FileSystem API works identically on local FS, HDFS and
+    # S3A. A sink directory holding no committed parquet (a killed first
+    # write left only _temporary/, or a staging dir) reads as empty under
+    # the explicit schema, so it self-heals instead of wedging.
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    jpath = Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    existing = None
-    if fs.exists(jpath):
-        try:
-            existing = spark.read.parquet(path).select(*keys)
-            if key_pruning_filter is not None:
-                existing = existing.filter(key_pruning_filter)
-        except AnalysisException:  # torn/empty sink dir: no committed data
-            existing = None
-    if existing is None:  # first write: sink holds no readable data yet
-        existing = spark.createDataFrame([], incoming.select(*keys).schema)
+    key_schema = StructType([incoming.schema[k] for k in keys])
+    created = not fs.exists(jpath)
+    if created:
+        existing = spark.createDataFrame([], key_schema)
+    else:
+        existing = spark.read.schema(key_schema).parquet(path)
+        if key_pruning_filter is not None:
+            existing = existing.filter(key_pruning_filter)
 
-    new_rows = dedup_new_rows(incoming, existing, keys)
-    # Two actions on new_rows: cache so the count doesn't recompute the join.
-    new_rows = new_rows.cache()
+    obs = Observation()
+    new_rows = dedup_new_rows(incoming, existing, keys).observe(obs, F.count(F.lit(1)).alias("n"))
+    staging = Path(jpath, f"_upsert-{uuid.uuid4().hex}")
+    n = 0
     try:
-        n = new_rows.count()
+        new_rows.write.parquet(staging.toString())
+        n = obs.get["n"]
         if n:
-            new_rows.write.mode("append").parquet(path)
+            for st in fs.listStatus(staging):
+                name = st.getPath().getName()
+                if name.endswith(".parquet") and not fs.rename(st.getPath(), Path(jpath, name)):
+                    raise OSError(f"upsert: could not move {name} into {path}")
     finally:
-        new_rows.unpersist()
+        fs.delete(staging, True)
+        if created and not n:  # leave no empty sink behind a zero-row first call
+            fs.delete(jpath, True)
     return n

@@ -111,8 +111,8 @@ def start_stream(
     raw = reader.json(landing_dir)
 
     def _on_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # An empty batch needs no guard (each would cost a Spark job): a
+        # zero-row upsert writes nothing.
         require_utc_session(batch_df)
         upsert_parquet(spark, transform_weather(batch_df), sink_path, DEDUP_KEYS)
 
