@@ -155,15 +155,15 @@ def test_rename_lost_race_leaves_layout_and_stats_untouched(spark, tmp_path):
     class RacedTable(VersionedTable):
         raced = False
 
-        def _publish_manifest(self, dirs, version, **kw):
-            if not RacedTable.raced and kw.get("op") == "rename_column":
+        def _publish_manifest(self, manifest, version):
+            if not RacedTable.raced and manifest.op == "rename_column":
                 RacedTable.raced = True
                 # interloper append lands first, taking our version slot
                 VersionedTable(self.spark, self.dir).commit(
                     self.spark.createDataFrame([Row(k=999, val=0.0)]),
                     mode="append",
                 )
-            return super()._publish_manifest(dirs, version, **kw)
+            return super()._publish_manifest(manifest, version)
 
     t = RacedTable(spark, str(tmp_path / "t"))
     t.enable_column_mapping()

@@ -240,3 +240,41 @@ def test_optimize_rebases_over_concurrent_append(spark, tmp_path, monkeypatch):
     v2 = cluster_rewrite(t, ["x"], n_chunks=2, bits=5, incremental=True)
     assert all(_dir_zchunk(d) for d in t._manifest(v2))
     assert t.read().count() == 2050
+
+
+def test_mor_key_delete_rebases_over_concurrent_append(
+    spark, tmp_path, monkeypatch
+):
+    """merge-on-read delete_by_keys ∥ append: the vector covers only the
+    base snapshot's dirs, which an append never touches, so the lost CAS
+    rebases onto the append and both commits land with no caller retry."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(_mk(spark, [(i, f"v{i}") for i in range(10)]))
+    real = t._publish_manifest
+    fired = []
+
+    def raced(manifest, version):
+        if not fired:
+            fired.append(version)
+            VersionedTable(spark, t.dir).commit(
+                _mk(spark, [(100, "B"), (3, "again")]), mode="append"
+            )
+        return real(manifest, version)
+
+    monkeypatch.setattr(t, "_publish_manifest", raced)
+    v = delete_by_keys(
+        t,
+        spark.createDataFrame([Row(k=3), Row(k=4)]),
+        keys=["k"],
+        merge_on_read=True,
+    )
+    # the interloper took version 2; the rebase republished ours as 3
+    assert fired == [2] and v == 3
+    assert [h["op"] for h in t.history()] == [
+        "append", "append", "delete (merge-on-read)"
+    ]
+    snap = {r.k: r.v for r in t.read().collect()}
+    # the appended key 3 lands in an uncovered dir and survives
+    # (delete-as-of-read); 4 and the base row 3 are gone
+    assert snap[100] == "B" and snap[3] == "again" and 4 not in snap
+    assert len(snap) == 10

@@ -194,8 +194,8 @@ def test_pdv_commutes_with_append_interloper(spark, tmp_path, monkeypatch):
     orig = t._publish_manifest
     state = {"raced": False}
 
-    def _racing(dirs, version, **kw):
-        if not state["raced"] and kw.get("op") == "delete (merge-on-read)":
+    def _racing(manifest, version):
+        if not state["raced"] and manifest.op == "delete (merge-on-read)":
             state["raced"] = True
             t2 = VersionedTable(spark, t.dir)
             t2.commit(
@@ -204,7 +204,7 @@ def test_pdv_commutes_with_append_interloper(spark, tmp_path, monkeypatch):
                 ),
                 mode="append",
             )
-        return orig(dirs, version, **kw)
+        return orig(manifest, version)
 
     monkeypatch.setattr(t, "_publish_manifest", _racing)
     v = delete_where(t, "k < 10", merge_on_read=True)

@@ -27,10 +27,11 @@ def _grow(t: VersionedTable, upto: int) -> None:
     v1 batch dirs — pure manifest I/O (no Spark jobs), so a 1,000-commit
     log builds in well under a second. Every publish goes through the
     real ``_publish_manifest`` (CAS + carries + checkpoint hook)."""
-    dirs = t._manifest(1)
-    schema = t.snapshot_schema(1)
+    m = V.Manifest(
+        dirs=t._manifest(1), schema=t.snapshot_schema(1), op="append"
+    )
     for v in range(len(t.versions()) + 1, upto + 1):
-        t._publish_manifest(dirs, v, schema=schema, op="append")
+        t._publish_manifest(m, v)
 
 
 def test_checkpoint_published_every_interval(spark, tmp_path):
@@ -128,10 +129,12 @@ def test_carry_state_served_from_checkpoint(spark, tmp_path):
     latest — zero-length tail)."""
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.commit(spark.range(3).select(F.col("id").alias("k")))
-    dirs, schema = t._manifest(1), t.snapshot_schema(1)
     t._publish_manifest(
-        dirs, 2, schema=schema, op="append",
-        extra_headers=["#idhwm=k::77", "#sbatch=appX:5"],
+        V.Manifest(
+            dirs=t._manifest(1), schema=t.snapshot_schema(1), op="append",
+            idhwm=("k", 77), sbatch={"appX": 5},
+        ),
+        2,
     )
     _grow(t, V.CHECKPOINT_INTERVAL)
     ck = t.checkpoint()
@@ -139,8 +142,8 @@ def test_carry_state_served_from_checkpoint(spark, tmp_path):
     assert ck["idhwm"] == "#idhwm=k::77"
     assert ck["sbatch"] == {"appX": "#sbatch=appX:5"}
     # sanity: carries also resolve normally (total per-publish carry)
-    assert t._latest_idhwm_line() == "#idhwm=k::77"
-    assert t._latest_sbatch_lines() == ["#sbatch=appX:5"]
+    assert t._carry().idhwm == ("k", 77)
+    assert t._carry().sbatch == {"appX": 5}
     # simulate a legacy/stripped tail: a checkpoint whose version is
     # the latest serves the state directly (tail is empty)
     state = json.load(open(t._ckpt_path))
@@ -180,9 +183,9 @@ def test_colmap_ids_never_reused_via_checkpoint(spark, tmp_path):
 
 def _grow_mapped(t: VersionedTable, upto: int) -> None:
     base = t.latest_version()
-    dirs, schema = t._manifest(base), t.snapshot_schema(base)
-    colmap = t.column_mapping(base)
+    m = V.Manifest(
+        dirs=t._manifest(base), schema=t.snapshot_schema(base),
+        colmap=t.column_mapping(base), op="append",
+    )
     for v in range(base + 1, upto + 1):
-        t._publish_manifest(
-            dirs, v, schema=schema, colmap=colmap, op="append"
-        )
+        t._publish_manifest(m, v)

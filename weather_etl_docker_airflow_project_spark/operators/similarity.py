@@ -396,23 +396,6 @@ def embedding_band_buckets(
     ).select(id_col, F.col("band").cast("long").alias("band"), "bucket")
 
 
-def batch_int_dot():
-    """Arrow-vectorized exact int64 dot product (pandas_udf): the verify
-    stage computes one dot per CANDIDATE pair — at a low cosine threshold
-    LSH prunes weakly, so candidate volume is large and the per-row
-    higher-order-function dot (CodegenFallback, interpreted) becomes the
-    bottleneck; one numpy matmul per Arrow batch is ~5-10x faster and
-    bit-identical (int64 arithmetic both ways)."""
-
-    @F.pandas_udf("long")
-    def pdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = np.stack(a.to_numpy()).astype(np.int64)
-        bv = np.stack(b.to_numpy()).astype(np.int64)
-        return pd.Series((av * bv).sum(axis=1))
-
-    return pdot
-
-
 def pack_qv_int32():
     """Quantized vector (array<long>, |q| <= ~1e6 << 2^31) packed as a
     little-endian int32 BINARY blob: half the Arrow bytes of list<int64>
@@ -428,25 +411,6 @@ def pack_qv_int32():
         return pd.Series([row.tobytes() for row in m])
 
     return pack
-
-
-def packed_int_dot():
-    """Exact int64 dot over two int32-packed binary vectors
-    (``pack_qv_int32``): one frombuffer + matmul per Arrow batch."""
-
-    @F.pandas_udf("long")
-    def pdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series([], dtype="int64")
-        av = np.frombuffer(b"".join(a.to_numpy()), dtype="<i4").reshape(
-            len(a), -1
-        ).astype(np.int64)
-        bv = np.frombuffer(b"".join(b.to_numpy()), dtype="<i4").reshape(
-            len(b), -1
-        ).astype(np.int64)
-        return pd.Series((av * bv).sum(axis=1))
-
-    return pdot
 
 
 def blocked_pairs_within(

@@ -12,16 +12,12 @@ Layout under ``table_dir``::
     _stats_cols                    optional data-skipping columns (one/line)
     _column_mapping                opt-in flag: physical col_<id> names
 
-Manifest HEADER lines (every one rides the same atomic CAS write as the
-dir list, so none can tear apart from the data)::
-
-    #ts=<epoch>                commit wall-clock (TIMESTAMP AS OF, S36)
-    #op=<operation>            DESCRIBE HISTORY operation kind (S39)
-    #schema=<json>             the snapshot's logical schema (S31)
-    #dv=<path>::<covered...>   deletion vector + its covered dirs (S32)
-    #stats=<json>              per-dir min/max/null skipping stats (S33)
-    #colmap=<json>             logical->physical column map (S38)
-    #idhwm=<col>::<n>          identity high-water mark (S40)
+Each manifest is one :class:`Manifest` record — the dir list plus its
+commit metadata (timestamp, operation, schema, column map, deletion
+vectors, skipping stats, change-feed dir, streaming and identity
+watermarks). ``Manifest.parse``/``Manifest.dumps`` are the one place
+its line format is defined; every field rides the same atomic CAS
+write as the dir list, so none can tear apart from the data.
 
 With a declared layout (:meth:`VersionedTable.set_layout`) every batch
 is written partitioned by ``bkt = pmod(xxhash64(keys...), n_buckets)``
@@ -59,9 +55,13 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: partition-column name for bucketed batches. No leading underscore —
 #: Hadoop's default PathFilter hides `_`/`.`-prefixed paths, and the
@@ -80,7 +80,7 @@ BUCKET_COL = "bkt"
 #: five times (schema, colmap, DVs, PDVs, dir list) and commit-heavy
 #: paths (publish carries, CDC walks) re-parsed every version per call
 #: — the r13 bench regression on the pure read-path queries.
-_MANIFEST_CACHE: dict[tuple[str, int], dict] = {}
+_MANIFEST_CACHE: dict[tuple[str, int], tuple] = {}
 _MANIFEST_CACHE_MAX = 4096  # ~a few MB; FIFO-evicted
 
 #: commits between checkpoint refreshes (Delta checkpoints its log every
@@ -90,71 +90,160 @@ _MANIFEST_CACHE_MAX = 4096  # ~a few MB; FIFO-evicted
 #: wrong result.
 CHECKPOINT_INTERVAL = 10
 
+#: publish attempts per commit before a writer that keeps losing the
+#: CAS race gives up (one cap for every writer — see NOTES.md)
+PUBLISH_ATTEMPTS = 10
 
-def _parse_manifest(path: str) -> dict:
-    """One-pass parse of a manifest file into every field the accessors
-    serve. Decodes eagerly (the cache makes each decode once-per-file):
-    schema JSON -> StructType, colmap/stats JSON -> dicts, dv/pdv lines
-    -> {"path", "covers"} records."""
-    from pyspark.sql.types import StructType
 
-    dirs: list[str] = []
+@dataclass(frozen=True)
+class Manifest:
+    """One version's commit record, and the ONLY code that knows the
+    ``_versions/<n>`` line format: a ``#<key>=<value>`` line per header
+    field, then one line per data dir (the format every earlier release
+    wrote, so old logs read unchanged). Header kinds:
+
+    - ``ts`` commit wall-clock (TIMESTAMP AS OF), ``op`` DESCRIBE
+      HISTORY operation, ``schema`` logical schema (JSON), ``colmap``
+      logical->physical column map (JSON), ``cdf`` the commit's
+      change-data dir;
+    - ``dv``/``pdv`` key-set / position deletion vectors, one line each:
+      ``<path>::<covered dir>::...``;
+    - ``stats`` per-dir skipping stats, one JSON line per dir;
+    - ``sbatch`` streaming exactly-once watermark, one ``<app>:<batch>``
+      line per txn app; ``idhwm`` identity high-water ``<col>::<n>``.
+
+    Paths cannot hold a newline, and vector paths cannot hold ``::``.
+    Instances are shared through the manifest cache: treat the list and
+    dict fields as read-only."""
+
+    dirs: list[str] = field(default_factory=list)
     ts: float | None = None
     op: str | None = None
-    schema = None
-    colmap: dict | None = None
+    schema: StructType | None = None
+    colmap: dict[str, str] | None = None
     cdf: str | None = None
-    dvs: list[dict] = []
-    pdvs: list[dict] = []
-    stats: dict[str, dict] = {}
-    sbatch: list[str] = []
-    idhwm: str | None = None
-    with open(path) as f:
-        for raw in f:
-            line = raw.strip()
-            if not line:
-                continue
+    dvs: list[dict] = field(default_factory=list)
+    pdvs: list[dict] = field(default_factory=list)
+    stats: dict[str, dict] = field(default_factory=dict)
+    sbatch: dict[str, int] = field(default_factory=dict)
+    idhwm: tuple[str, int] | None = None
+
+    @classmethod
+    def parse(cls, text: str) -> Manifest:
+        f: dict = dict(dirs=[], dvs=[], pdvs=[], stats={}, sbatch={})
+        for line in text.split("\n"):
             if not line.startswith("#"):
-                dirs.append(line)
+                if line:
+                    f["dirs"].append(line)
                 continue
-            if line.startswith("#ts="):
-                ts = float(line[len("#ts="):])
-            elif line.startswith("#op="):
-                op = line[len("#op="):]
-            elif line.startswith("#schema="):
-                schema = StructType.fromJson(
-                    json.loads(line[len("#schema="):])
-                )
-            elif line.startswith("#colmap="):
-                colmap = json.loads(line[len("#colmap="):])
-            elif line.startswith("#cdf="):
-                cdf = line[len("#cdf="):]
-            elif line.startswith("#dv="):
-                parts = line[len("#dv="):].split("::")
-                dvs.append({"path": parts[0], "covers": parts[1:]})
-            elif line.startswith("#pdv="):
-                parts = line[len("#pdv="):].split("::")
-                pdvs.append({"path": parts[0], "covers": parts[1:]})
-            elif line.startswith("#stats="):
-                rec = json.loads(line[len("#stats="):])
-                stats[rec["dir"]] = rec["cols"]
-            elif line.startswith("#sbatch="):
-                sbatch.append(line)
-            elif line.startswith("#idhwm="):
-                idhwm = line
-    return {
-        "dirs": dirs,
-        "ts": ts,
-        "op": op,
-        "schema": schema,
-        "colmap": colmap,
-        "cdf": cdf,
-        "dvs": dvs,
-        "pdvs": pdvs,
-        "stats": stats,
-        "sbatch": sbatch,
-        "idhwm": idhwm,
-    }
+            key, _, val = line[1:].partition("=")
+            if key == "ts":
+                f["ts"] = float(val)
+            elif key in ("op", "cdf"):
+                f[key] = val
+            elif key == "schema":
+                f["schema"] = StructType.fromJson(json.loads(val))
+            elif key == "colmap":
+                f["colmap"] = json.loads(val)
+            elif key in ("dv", "pdv"):
+                path, *covers = val.split("::")
+                f[key + "s"].append({"path": path, "covers": covers})
+            elif key == "stats":
+                rec = json.loads(val)
+                f["stats"][rec["dir"]] = rec["cols"]
+            elif key == "sbatch":
+                app, _, bid = val.rpartition(":")
+                f["sbatch"][app] = int(bid)
+            elif key == "idhwm":
+                col, _, n = val.rpartition("::")
+                f["idhwm"] = (col, int(n))
+        return cls(**f)
+
+    def dumps(self) -> str:
+        out = [f"#ts={self.ts!r}"] if self.ts is not None else []
+        for key, val in (("op", self.op), ("cdf", self.cdf)):
+            out += [f"#{key}={val}"] if val is not None else []
+        out += [f"#sbatch={a}:{b}" for a, b in self.sbatch.items()]
+        if self.idhwm is not None:
+            out.append(f"#idhwm={self.idhwm[0]}::{self.idhwm[1]}")
+        if self.schema is not None:
+            out.append(f"#schema={json.dumps(self.schema.jsonValue())}")
+        for key, vectors in (("dv", self.dvs), ("pdv", self.pdvs)):
+            out += [
+                f"#{key}=" + "::".join([v["path"], *v["covers"]])
+                for v in vectors
+            ]
+        if self.colmap is not None:
+            out.append(f"#colmap={json.dumps(self.colmap)}")
+        out += [
+            "#stats=" + json.dumps({"dir": d, "cols": self.stats[d]})
+            for d in sorted(self.stats)
+        ]
+        return "\n".join(out + self.dirs) + "\n"
+
+    def carry_lines(self) -> dict:
+        """The ``sbatch``/``idhwm`` watermarks as header lines — also the
+        form the log checkpoint stores them in (``{"idhwm": line|None,
+        "sbatch": {app: line}}``), read back by :meth:`from_carry_lines`."""
+
+        def line(**mark) -> str:
+            return Manifest(**mark).dumps().rstrip("\n")
+
+        return {
+            "idhwm": line(idhwm=self.idhwm) if self.idhwm else None,
+            "sbatch": {a: line(sbatch={a: b}) for a, b in self.sbatch.items()},
+        }
+
+    @classmethod
+    def from_carry_lines(cls, state: dict) -> Manifest:
+        lines = [state.get("idhwm") or ""]
+        lines += (state.get("sbatch") or {}).values()
+        return cls.parse("\n".join(lines))
+
+    def derive(self, **changes) -> Manifest:
+        """The next commit's manifest over this one's table state: the
+        per-commit fields (``ts``, ``op``, ``cdf`` and this commit's own
+        watermarks — the publish re-carries the newest ones) start
+        empty, ``changes`` override any field."""
+        fresh = dict(ts=None, op=None, cdf=None, sbatch={}, idhwm=None)
+        return replace(self, **{**fresh, **changes})
+
+    def references(self) -> set[str]:
+        """Every path this version keeps alive: its data dirs, each
+        vector file with its covered dirs, and its change-data dir."""
+        refs = set(self.dirs)
+        for dv in self.dvs + self.pdvs:
+            refs.add(dv["path"])
+            refs.update(dv["covers"])
+        if self.cdf:
+            refs.add(self.cdf)
+        return refs
+
+
+def _parse_manifest(path: str) -> Manifest:
+    with open(path) as f:
+        return Manifest.parse(f.read())
+
+
+def _stamp_cached(key: tuple[str, int], path: str, load):
+    """``load(path)``, memoized in :data:`_MANIFEST_CACHE` under ``key``
+    and validated against the file's (mtime_ns, size) stamp. Raises
+    FileNotFoundError when the file does not exist."""
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _MANIFEST_CACHE.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = load(path)
+    while len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
+        _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
+    _MANIFEST_CACHE[key] = (stamp, value)
+    return value
+
+
+def _load_json(path: str):
+    with open(path) as f:
+        return json.load(f)
 
 
 def _bucket_column(keys: list[str], n_buckets: int) -> Column:
@@ -420,6 +509,49 @@ class ConstraintViolation(ValueError):
     :func:`vacuum` reclaims it."""
 
 
+def _publish_loop(
+    table: VersionedTable,
+    base: int,
+    build: Callable[[int], Manifest | None],
+    rebase: Callable[[int], int | None],
+    what: str,
+) -> int | None:
+    """The ONE optimistic-commit path every writer publishes through
+    (Delta's OptimisticTransaction in miniature). Each attempt builds
+    the manifest against ``base`` (0 = empty table) and CASes it in as
+    ``base + 1``. On a lost race the caller's commutation rule
+    ``rebase(base)`` names the new base to rebuild against, or None when
+    the interloper conflicts (or the base did not advance — a stale
+    view) — then the :class:`ConcurrentCommitError` propagates and the
+    caller re-runs. ``build`` may raise to refuse, or return None to
+    declare the commit a no-op (nothing is published; returns None).
+    Everything a retry redoes is manifest metadata; staged data is
+    never rewritten.
+
+    Retries back off linearly (5 ms x attempt): a loser re-reading
+    metadata in lockstep with the winner's next publish can starve
+    inside the cap (seen at 2 writers x 7 commits); a few ms of skew
+    breaks the lockstep at zero cost to the uncontended path."""
+    for attempt in range(PUBLISH_ATTEMPTS):
+        if attempt:
+            time.sleep(0.005 * attempt)
+        manifest = build(base)
+        if manifest is None:
+            return None
+        try:
+            table._publish_manifest(manifest, base + 1)
+            return base + 1
+        except ConcurrentCommitError as lost:
+            nxt = rebase(base)
+            if nxt is None or nxt <= base:  # conflict, or a stale view
+                raise
+            base, last = nxt, lost
+    raise ConcurrentCommitError(
+        f"{what} at {table.dir} lost {PUBLISH_ATTEMPTS} publish races in "
+        "a row; re-run against the new base"
+    ) from last
+
+
 class VersionedTable:
     def __init__(self, spark: SparkSession, table_dir: str):
         self.spark = spark
@@ -440,7 +572,8 @@ class VersionedTable:
         """The manifest-log CHECKPOINT (Delta's ``_last_checkpoint`` in
         miniature, round 14): a single JSON file summarizing commit-log
         state as of a version — ``{"version", "ts", "idhwm", "sbatch":
-        {app: line}, "colmap_used": [ids]}`` — refreshed every
+        {app: line}, "colmap_used": [ids]}`` (the watermarks in
+        :meth:`Manifest.carry_lines` form) — refreshed every
         :data:`CHECKPOINT_INTERVAL` commits by ``_publish_manifest``.
         It bounds every O(all-commits) metadata walk to O(commits since
         the checkpoint): latest-version resolution stops probing at the
@@ -457,28 +590,13 @@ class VersionedTable:
         file is re-parsed only when its (mtime_ns, size) changes):
         ``latest_version()`` consults it on every read/commit and the
         stream source on every trigger."""
-        try:
-            st = os.stat(self._ckpt_path)
-        except OSError:
-            return None
-        stamp = (st.st_mtime_ns, st.st_size)
         key = (self._versions_key, -1)  # versions are >= 1: no clash
-        hit = _MANIFEST_CACHE.get(key)
-        if hit is not None and hit["stamp"] == stamp:
-            return hit["state"]
         try:
-            with open(self._ckpt_path) as f:
-                state = json.load(f)
-        except FileNotFoundError:
-            return None
+            return _stamp_cached(key, self._ckpt_path, _load_json)
         except (json.JSONDecodeError, OSError):
-            # a torn/unreadable checkpoint must never fail a read —
-            # it is derivable state; the full walk answers instead
+            # a missing/torn/unreadable checkpoint must never fail a
+            # read — it is derivable state; the full walk answers instead
             return None
-        while len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
-            _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _MANIFEST_CACHE[key] = {"stamp": stamp, "state": state}
-        return state
 
     def latest_version(self) -> int | None:
         """The newest committed version, in O(commits since the last
@@ -541,32 +659,27 @@ class VersionedTable:
         at ``version`` (the interval gate lives in
         :meth:`_maybe_checkpoint`; vacuum calls this directly to re-home
         a checkpoint whose version it is about to retire)."""
-        import time as _time
-
         base = int(prev["version"]) if prev else 0
         try:
-            parsed = self._parsed(version)
-        except (FileNotFoundError, OSError):
+            m = self._parsed(version)
+        except OSError:
             return
-        sbatch: dict[str, str] = dict(prev["sbatch"]) if prev else {}
-        for line in parsed["sbatch"]:
-            app, sep, _bid = line[len("#sbatch="):].rpartition(":")
-            if sep:
-                sbatch[app] = line
-        idhwm = parsed["idhwm"] or (prev["idhwm"] if prev else None)
+        carry = Manifest.from_carry_lines(prev or {})
+        carry = Manifest(
+            sbatch={**carry.sbatch, **m.sbatch}, idhwm=m.idhwm or carry.idhwm
+        )
         used: set[str] = set(prev.get("colmap_used") or []) if prev else set()
         for v in range(base + 1, version + 1):
             try:
-                cm = self._parsed(v)["colmap"]
-            except (FileNotFoundError, OSError):
+                cm = self._parsed(v).colmap
+            except OSError:
                 continue  # vacuumed mid-walk: its ids live in a newer map
             if cm:
                 used.update(cm.values())
         state = {
             "version": version,
-            "ts": _time.time(),
-            "idhwm": idhwm,
-            "sbatch": sbatch,
+            "ts": time.time(),
+            **carry.carry_lines(),
             "colmap_used": sorted(used) if used else None,
         }
         cur = self.checkpoint()
@@ -585,26 +698,15 @@ class VersionedTable:
             except OSError:
                 pass
 
-    def _parsed(self, version: int) -> dict:
+    def _parsed(self, version: int) -> Manifest:
         """The version's manifest, parsed once per (file, stamp) — see
-        :data:`_MANIFEST_CACHE`. Raises FileNotFoundError exactly like
-        the direct open did when the manifest does not exist. Callers
-        must treat the returned containers as read-only; the public
-        accessors copy."""
+        :data:`_MANIFEST_CACHE`. Raises FileNotFoundError when the
+        manifest does not exist. Callers must treat the returned
+        record's containers as read-only; the public accessors copy."""
         path = os.path.join(self._versions, str(version))
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-        key = (self._versions_key, version)
-        hit = _MANIFEST_CACHE.get(key)
-        if hit is not None and hit["stamp"] == stamp:
-            return hit
-        parsed = _parse_manifest(path)
-        parsed["stamp"] = stamp
-        parsed["mtime"] = st.st_mtime
-        while len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
-            _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _MANIFEST_CACHE[key] = parsed
-        return parsed
+        return _stamp_cached(
+            (self._versions_key, version), path, _parse_manifest
+        )
 
     def set_constraints(self, exprs: list[str]) -> None:
         """Declare table-level CHECK constraints (Delta's ``ALTER TABLE
@@ -764,7 +866,7 @@ class VersionedTable:
         caller's mutation poisoned every later reader in the process)."""
         return {
             d: {c: dict(s) for c, s in cols.items()}
-            for d, cols in self._parsed(version)["stats"].items()
+            for d, cols in self._parsed(version).stats.items()
         }
 
     def _collect_dir_stats(
@@ -859,7 +961,7 @@ class VersionedTable:
         return sorted(int(f) for f in os.listdir(self._versions) if f.isdigit())
 
     def _manifest(self, version: int) -> list[str]:
-        return list(self._parsed(version)["dirs"])
+        return list(self._parsed(version).dirs)
 
     def snapshot_schema(self, version: int):
         """The snapshot's LOGICAL schema as recorded in the version's
@@ -871,11 +973,9 @@ class VersionedTable:
         Returns a fresh StructType per call (r14 ADVICE: handing out the
         cache-shared instance let an external ``.add()`` poison every
         later reader in the process)."""
-        cached = self._parsed(version)["schema"]
+        cached = self._parsed(version).schema
         if cached is None:
             return None
-        from pyspark.sql.types import StructType
-
         return StructType.fromJson(cached.jsonValue())
 
     def enable_column_mapping(self) -> None:
@@ -937,12 +1037,12 @@ class VersionedTable:
         """The version's materialized change-data dir (``#cdf=`` manifest
         header), or None (pure appends and pre-CDF commits record
         none)."""
-        return self._parsed(version)["cdf"]
+        return self._parsed(version).cdf
 
     def _stage_cdf(self, change_df: DataFrame, version: int) -> str:
         """Stage a commit's change rows (logical column names +
-        ``_change_type``) as an immutable cdf dir; the caller rides the
-        returned ``#cdf=`` header line on its manifest publish. A torn
+        ``_change_type``) as an immutable cdf dir; the caller records the
+        returned path as its manifest's ``cdf`` field. A torn
         commit leaves the dir unreferenced — vacuum bait, same as any
         staged batch."""
         cdf_dir = os.path.join(
@@ -954,7 +1054,7 @@ class VersionedTable:
     def column_mapping(self, version: int) -> dict[str, str] | None:
         """The version's logical→physical column map (``#colmap=``
         manifest header), or None for unmapped tables."""
-        colmap = self._parsed(version)["colmap"]
+        colmap = self._parsed(version).colmap
         return dict(colmap) if colmap is not None else None
 
     def _next_colmap(self, df_columns: list[str], base_version: int | None):
@@ -985,7 +1085,7 @@ class VersionedTable:
         else:
             scan = self.versions()
         for v in scan:
-            used.update((self._parsed(v)["colmap"] or {}).values())
+            used.update((self._parsed(v).colmap or {}).values())
         next_id = 1
         out = dict(prev)
         for c in df_columns:
@@ -1001,7 +1101,7 @@ class VersionedTable:
         """The version's recorded operation (``#op=`` header) — Delta's
         DESCRIBE HISTORY operation column. Pre-tracking manifests answer
         'unknown'."""
-        op = self._parsed(version)["op"]
+        op = self._parsed(version).op
         return op if op is not None else "unknown"
 
     def history(self) -> list[dict]:
@@ -1026,50 +1126,40 @@ class VersionedTable:
             )
         return out
 
-    def _latest_sbatch_lines(self) -> list[str]:
-        """The newest ``#sbatch=`` marker PER txn app across the commit
-        log (the streaming sink's exactly-once watermarks). Every
-        publish re-emits these (the #idhwm survival pattern): without
-        the carry, a vacuum that drops the marker's manifest would let
-        a crash-redelivered micro-batch append twice."""
-        seen: dict[str, str] = {}
+    def _carry(self) -> Manifest:
+        """The newest watermarks across the commit log, as a Manifest
+        holding only ``sbatch`` (the streaming sink's exactly-once
+        watermark per txn app) and ``idhwm`` (the identity high-water
+        mark). Every publish re-emits both, so VACUUM retiring the
+        manifest that first recorded one can never let a redelivered
+        micro-batch append twice or identity allocation restart.
+        Because the carry is TOTAL per publish, the newest manifest
+        bearing a mark is complete and the walk stops there; a tail
+        without marks falls back to the checkpoint's aggregated state —
+        O(commits since the checkpoint), never O(all versions)."""
+        sbatch: dict | None = None
+        idhwm = None
         tail, ck = self._tail_versions_desc()
         for v in tail:
-            for line in self._parsed(v)["sbatch"]:
-                body = line[len("#sbatch="):]
-                app, sep, _bid = body.rpartition(":")
-                if sep and app not in seen:
-                    seen[app] = line
-            if seen:
-                # the carry is TRANSITIVE: any marker-bearing manifest
-                # re-emitted every app's newest marker when it was
-                # published, so the newest such manifest is complete —
-                # the walk is O(commits since the last stream write),
-                # not O(all versions), on every publish
+            m = self._parsed(v)
+            sbatch = sbatch or m.sbatch or None
+            idhwm = idhwm or m.idhwm
+            if sbatch and idhwm:
                 break
-        if not seen and ck:
-            # tail had no markers: the checkpoint's aggregated state is
-            # authoritative for everything at or before its version
-            seen = dict(ck.get("sbatch") or {})
-        return list(seen.values())
-
-    def _latest_idhwm_line(self) -> str | None:
-        """The newest ``#idhwm=`` header across all manifests (or None):
-        carried forward by every publish so vacuum can never retire the
-        identity watermark."""
-        tail, ck = self._tail_versions_desc()
-        for v in tail:
-            line = self._parsed(v)["idhwm"]
-            if line is not None:
-                return line
-        return ck.get("idhwm") if ck else None
+        if ck is not None:
+            ck_carry = Manifest.from_carry_lines(ck)
+            sbatch = sbatch or ck_carry.sbatch
+            idhwm = idhwm or ck_carry.idhwm
+        return Manifest(sbatch=dict(sbatch or {}), idhwm=idhwm)
 
     def commit_timestamp(self, version: int) -> float:
         """The version's commit wall-clock (``#ts=`` manifest header).
         Pre-tracking manifests fall back to the manifest file's mtime —
         the same fallback Delta applies to pre-ICT commits."""
-        parsed = self._parsed(version)
-        return parsed["ts"] if parsed["ts"] is not None else parsed["mtime"]
+        ts = self._parsed(version).ts
+        if ts is not None:
+            return ts
+        return os.path.getmtime(os.path.join(self._versions, str(version)))
 
     def version_at_timestamp(self, ts: float) -> int:
         """TIMESTAMP AS OF resolution: the LATEST version whose commit
@@ -1101,7 +1191,7 @@ class VersionedTable:
         dir and is visible again, exactly like Delta's per-file DVs."""
         return [
             {"path": dv["path"], "covers": list(dv["covers"])}
-            for dv in self._parsed(version)["dvs"]
+            for dv in self._parsed(version).dvs
         ]
 
     def position_dvs(self, version: int) -> list[dict]:
@@ -1119,7 +1209,7 @@ class VersionedTable:
         creation — later appends are untouched."""
         return [
             {"path": dv["path"], "covers": list(dv["covers"])}
-            for dv in self._parsed(version)["pdvs"]
+            for dv in self._parsed(version).pdvs
         ]
 
     def commit(
@@ -1129,12 +1219,14 @@ class VersionedTable:
         expected_base_version: int | None = None,
         allow_schema_evolution: bool = False,
         op: str | None = None,
-        extra_headers: list[str] | None = None,
+        extra: dict | Callable[[], dict] | None = None,
     ) -> int:
         """Write ``df`` as a new immutable batch and publish the next
         version. ``mode='append'`` extends the previous version's
         manifest; ``mode='overwrite'`` starts the new version from just
-        this batch (old versions stay readable).
+        this batch (old versions stay readable). ``extra`` holds this
+        commit's own :class:`Manifest` fields (``cdf``, ``sbatch``,
+        ``idhwm``); a callable is resolved once, after the batch write.
 
         Concurrency: publication is optimistic CAS — the manifest lands
         via atomic create-if-absent (``os.link``), so when two writers
@@ -1250,91 +1342,63 @@ class VersionedTable:
                                 "via a full rewrite (overwrite commit) "
                                 "instead"
                             )
-        if expected_base_version is not None:
-            base = existing[-1] if existing else 0
-            if base != expected_base_version:
-                raise ConcurrentCommitError(
-                    f"commit at {self.dir} expected base version "
-                    f"{expected_base_version} but latest is {base}: a "
-                    "concurrent commit landed after this writer's read; "
-                    "re-read and retry"
-                )
-            version = expected_base_version + 1
-        else:
-            version = (existing[-1] + 1) if existing else 1
+        base = existing[-1] if existing else 0
+        if expected_base_version is not None and base != expected_base_version:
+            raise ConcurrentCommitError(
+                f"commit at {self.dir} expected base version "
+                f"{expected_base_version} but latest is {base}: a "
+                "concurrent commit landed after this writer's read; "
+                "re-read and retry"
+            )
         # overwrite keeps carried physical ids for same-named columns —
         # stable ids are what make renames/drops metadata-only later
         colmap = self._next_colmap(
             df.columns, existing[-1] if existing else None
         )
-        new_dirs = self._write_batch(df, version, colmap=colmap)
-        if callable(extra_headers):
-            # deferred header staging (a CDF dir written concurrently
-            # with the batch write — guide §2.6): resolve ONCE, after
-            # our own write, before any publish attempt
-            extra_headers = extra_headers()
-        if existing and mode == "append":
-            dirs = self._manifest(existing[-1]) + new_dirs
-            # active deletion vectors (both kinds) ride along unchanged:
-            # they cover only the dirs they already covered, never the
-            # new batch
-            dvs = self.deletion_vectors(existing[-1])
-            pdvs = self.position_dvs(existing[-1])
-            stats = self._stats_for_commit(
-                new_dirs, existing[-1], dirs, colmap=colmap
-            )
-        else:
-            dirs, dvs, pdvs = new_dirs, [], []
-            stats = self._stats_for_commit(new_dirs, None, dirs, colmap=colmap)
-        last_err: ConcurrentCommitError | None = None
-        for attempt in range(10):
-            if attempt:
-                # linear backoff under contention: a loser re-reading
-                # metadata in lockstep with the winner's next publish
-                # can starve inside the cap (seen as a rare test flake
-                # at 2 writers x 7 commits); a few ms of skew breaks
-                # the lockstep at zero cost to the uncontended path
-                import time as _time
+        new_dirs = self._write_batch(df, base + 1, colmap=colmap)
+        # deferred staging (a CDF dir written concurrently with the
+        # batch write — guide §2.6): resolve ONCE, after our own write,
+        # before any publish attempt
+        own = (extra() if callable(extra) else extra) or {}
 
-                _time.sleep(0.005 * attempt)
-            try:
-                self._publish_manifest(
-                    dirs, version, schema=df.schema, dvs=dvs, stats=stats,
-                    colmap=colmap, op=op or mode, extra_headers=extra_headers,
-                    pdvs=pdvs,
-                )
-                return version
-            except ConcurrentCommitError as e:
-                # AUTO-REBASE for blind appends (Delta's
-                # OptimisticTransaction: append∥append always commutes).
-                # The batch is already staged and immutable — only the
-                # METADATA is recomputed against the new latest, so a
-                # lost race costs one manifest read, not a batch
-                # rewrite. Pinned commits (expected_base_version) and
-                # overwrites are read-modify-writes and never rebase;
-                # neither does an append whose validated schema or
-                # colmap no longer matches the new latest (an
-                # interloper evolution would be silently reverted by
-                # republishing ours).
-                if mode != "append" or expected_base_version is not None:
-                    raise
-                last_err = e
-                latest = self.latest_version()
-                cur_schema = self.snapshot_schema(latest)
-                if cur_schema is not None and {
-                    (f.name, f.dataType) for f in cur_schema.fields
-                } != {(f.name, f.dataType) for f in df.schema.fields}:
-                    raise
-                if (self.column_mapping(latest) or {}) != (colmap or {}):
-                    raise
-                version = latest + 1
-                dirs = self._manifest(latest) + new_dirs
-                dvs = self.deletion_vectors(latest)
-                pdvs = self.position_dvs(latest)
-                stats = self._stats_for_commit(
-                    new_dirs, latest, dirs, colmap=colmap
-                )
-        raise last_err
+        def build(b: int) -> Manifest:
+            # an append extends the base manifest; its active deletion
+            # vectors (both kinds) ride along unchanged — they cover
+            # only the dirs they already covered, never the new batch
+            carried = b if b and mode == "append" else None
+            prev = self._parsed(carried) if carried else Manifest()
+            dirs = prev.dirs + new_dirs
+            return prev.derive(
+                dirs=dirs, schema=df.schema, colmap=colmap, op=op or mode,
+                stats=self._stats_for_commit(
+                    new_dirs, carried, dirs, colmap=colmap
+                ),
+                **own,
+            )
+
+        def rebase(b: int) -> int | None:
+            # AUTO-REBASE for blind appends (Delta's OptimisticTransaction:
+            # append∥append always commutes). The batch is already staged
+            # and immutable — only the METADATA is recomputed against the
+            # new latest, so a lost race costs one manifest read, not a
+            # batch rewrite. Pinned commits (expected_base_version) and
+            # overwrites are read-modify-writes and never rebase; neither
+            # does an append whose validated schema or colmap no longer
+            # matches the new latest (an interloper evolution would be
+            # silently reverted by republishing ours).
+            if mode != "append" or expected_base_version is not None:
+                return None
+            latest = self.latest_version()
+            cur = self._parsed(latest)
+            if cur.schema is not None and {
+                (f.name, f.dataType) for f in cur.schema.fields
+            } != {(f.name, f.dataType) for f in df.schema.fields}:
+                return None
+            if (cur.colmap or {}) != (colmap or {}):
+                return None
+            return latest
+
+        return _publish_loop(self, base, build, rebase, f"{mode} commit")
 
     def _stats_for_commit(
         self,
@@ -1342,8 +1406,8 @@ class VersionedTable:
         base_version: int | None,
         final_dirs: list[str],
         colmap: dict | None = None,
-    ) -> dict | None:
-        """Stats lines for a commit publishing ``final_dirs``: carried
+    ) -> dict[str, dict]:
+        """Stats for a commit publishing ``final_dirs``: carried
         dirs keep the bounds their ORIGINAL commit recorded (data files
         are immutable, so recorded stats never go stale), new dirs get a
         footer harvest. Carrying survives even when stats collection has
@@ -1356,9 +1420,7 @@ class VersionedTable:
                 for d, s in self.dir_stats(base_version).items()
                 if d in final
             }
-        new = self._collect_dir_stats(new_dirs, colmap=colmap)
-        merged = {**carried, **new}
-        return merged or None
+        return {**carried, **self._collect_dir_stats(new_dirs, colmap=colmap)}
 
     def _write_batch(
         self,
@@ -1462,84 +1524,29 @@ class VersionedTable:
             )
         return [batch]
 
-    def _publish_manifest(
-        self,
-        dirs: list[str],
-        version: int,
-        schema=None,
-        dvs=None,
-        stats=None,
-        colmap=None,
-        op: str | None = None,
-        extra_headers: list[str] | None = None,
-        pdvs=None,
-    ) -> None:
-        """Publish ``dirs`` as version ``version`` via the atomic
+    def _publish_manifest(self, manifest: Manifest, version: int) -> None:
+        """Publish ``manifest`` as version ``version`` via the atomic
         create-if-absent CAS (``os.link``): when two writers race for the
         same version number exactly one wins and the other gets
         :class:`ConcurrentCommitError`. A plain rename would silently
         REPLACE the winner's manifest and lose its batch from every later
         version. Requires a store with atomic put-if-absent (POSIX link,
         HDFS create, S3 If-None-Match / DynamoDB lock — the same
-        substrate Delta's commit protocol needs). ``schema`` (a
-        StructType) is recorded as a ``#schema=`` header line — the
-        snapshot's logical schema rides the same atomic metadata write
-        as the file list, so schema and data can never tear apart."""
-        import time as _time
-
+        substrate Delta's commit protocol needs). The record is stamped
+        with the commit wall-clock and the newest watermarks
+        (:meth:`_carry`; the commit's own ``sbatch``/``idhwm`` win), all
+        in the same atomic write as the dir list."""
+        carry = self._carry()
+        manifest = replace(
+            manifest,
+            ts=time.time(),
+            sbatch={**carry.sbatch, **manifest.sbatch},
+            idhwm=manifest.idhwm or carry.idhwm,
+        )
         os.makedirs(self._versions, exist_ok=True)
         tmp = os.path.join(self._versions, f".{version}.tmp")
         with open(tmp, "w") as f:
-            # commit wall-clock for TIMESTAMP AS OF resolution — rides
-            # the same atomic metadata write as everything else
-            f.write(f"#ts={_time.time():.6f}\n")
-            if op:
-                f.write(f"#op={op}\n")
-            headers = list(extra_headers or [])
-            # streaming exactly-once watermarks must survive VACUUM the
-            # same way the identity mark does: every publish re-emits
-            # the newest #sbatch per app (the commit's own marker, if
-            # any, supersedes that app's carried line)
-            own_apps = {
-                h.split("=", 1)[1].rpartition(":")[0]
-                for h in headers
-                if h.startswith("#sbatch=")
-            }
-            headers.extend(
-                line
-                for line in self._latest_sbatch_lines()
-                if line.split("=", 1)[1].rpartition(":")[0] not in own_apps
-            )
-            if not any(h.startswith("#idhwm=") for h in headers):
-                # the identity high-water mark must survive VACUUM: if
-                # only newer manifests remain and none carries the line,
-                # allocation would restart at 1 and COLLIDE with issued
-                # ids (caught by the lifecycle gate) — so every publish
-                # re-emits the newest mark
-                carry = self._latest_idhwm_line()
-                if carry:
-                    headers.append(carry)
-            for h in headers:
-                if not h.startswith("#"):
-                    raise ValueError(f"manifest header must start with #: {h!r}")
-                f.write(h.rstrip("\n") + "\n")
-            if schema is not None:
-                f.write(f"#schema={json.dumps(schema.jsonValue())}\n")
-            for dv in dvs or []:
-                f.write("#dv=" + "::".join([dv["path"]] + dv["covers"]) + "\n")
-            for dv in pdvs or []:
-                f.write(
-                    "#pdv=" + "::".join([dv["path"]] + dv["covers"]) + "\n"
-                )
-            if colmap is not None:
-                f.write(f"#colmap={json.dumps(colmap)}\n")
-            for d in sorted(stats or {}):
-                f.write(
-                    "#stats="
-                    + json.dumps({"dir": d, "cols": stats[d]})
-                    + "\n"
-                )
-            f.write("\n".join(dirs) + "\n")
+            f.write(manifest.dumps())
             f.flush()
             os.fsync(f.fileno())
         final = os.path.join(self._versions, str(version))
@@ -1611,7 +1618,7 @@ class VersionedTable:
         covering DV key sets, groups union back. A dir added after a DV
         was created is uncovered, so re-inserted keys stay visible."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField
 
         reader = self.spark.read
         schema = self.snapshot_schema(version)
@@ -2399,7 +2406,7 @@ def compact_incremental(
             return _CompactReport(base_version, n_files_before, n_files_before)
         rewritten = table._read_dirs(scope, base_version)
         version = _commit_granular(
-            table, rewritten, carry, base_version, op="compact",
+            table, rewritten, scope, base_version, op="compact",
             write_partitions=len(touched_buckets),
         )
     else:
@@ -2422,7 +2429,7 @@ def compact_incremental(
         carry = [d for d in dirs if d not in set(scope)]
         rewritten = table._read_dirs(scope, base_version).coalesce(n_parts)
         version = _commit_scoped_rewrite(
-            table, base_version, scope, carry, rewritten, "compact", None
+            table, base_version, scope, rewritten, "compact", None
         )
     n_after = sum(
         _dir_file_stats(d)[0] for d in table._manifest(version)
@@ -2542,26 +2549,13 @@ def _clone_referenced_dirs(roots: list[str], skip_versions_dir: str) -> set[str]
                 continue
             if os.path.realpath(dirpath) == skip_real:
                 continue
+            other = VersionedTable(None, os.path.dirname(dirpath))
             for fname in filenames:
-                if not fname.isdigit():
-                    continue
-                with open(os.path.join(dirpath, fname)) as f:
-                    for line in f:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        if line.startswith("#dv=") or line.startswith(
-                            "#pdv="
-                        ):
-                            # a deletion vector (either kind) references
-                            # its vector file and every covered dir
-                            body = line.split("=", 1)[1]
-                            for p in body.split("::"):
-                                refs.add(os.path.realpath(p))
-                        elif line.startswith("#cdf="):
-                            refs.add(os.path.realpath(line[len("#cdf="):]))
-                        elif not line.startswith("#"):
-                            refs.add(os.path.realpath(line))
+                if fname.isdigit():
+                    refs.update(
+                        os.path.realpath(p)
+                        for p in other._parsed(int(fname)).references()
+                    )
     return refs
 
 
@@ -2616,14 +2610,13 @@ def vacuum(
     and reclaim immediately regardless of age. ``staged_grace_seconds=0``
     restores unconditional reclaim (single-writer maintenance)."""
     import shutil
-    import time as _time
 
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1")
     committed = table.versions()
     keep = committed[-retain_versions:]
     if retain_hours is not None:
-        cutoff = _time.time() - retain_hours * 3600.0
+        cutoff = time.time() - retain_hours * 3600.0
         kept = set(keep) | {
             v for v in committed if table.commit_timestamp(v) >= cutoff
         }
@@ -2640,13 +2633,7 @@ def vacuum(
     referenced = set()
     ever_referenced: set[str] = set()  # by ANY manifest, kept or dropped
     for v in committed:
-        refs = set(table._manifest(v))
-        for dv in table.deletion_vectors(v) + table.position_dvs(v):
-            refs.add(dv["path"])
-            refs.update(dv["covers"])
-        cdf = table.cdf_path(v)
-        if cdf:
-            refs.add(cdf)
+        refs = table._parsed(v).references()
         ever_referenced.update(os.path.realpath(p) for p in refs)
         if v in keep:
             referenced.update(refs)
@@ -2663,7 +2650,7 @@ def vacuum(
     removed: list[str] = []
     protected: list[str] = []
     deferred: list[str] = []
-    now = _time.time()
+    now = time.time()
 
     # Recursive reclaim (manifests may reference dirs at ANY depth under
     # a batch dir — a bucketed batch via bkt=* children, a bucketed
@@ -3023,7 +3010,7 @@ def merge_upsert(
         cdf_fut = cdf_pool.submit(
             table._stage_cdf, change_df, base_version + 1
         )
-        cdf_headers = lambda: [f"#cdf={cdf_fut.result()}"]  # noqa: E731
+        cdf_headers = lambda: {"cdf": cdf_fut.result()}  # noqa: E731
     headers_cb = cdf_headers
     if val_fut is not None:
         # fold the deferred duplicate-key check into the pre-publish
@@ -3040,20 +3027,18 @@ def merge_upsert(
                     "a target row would match multiple source rows "
                     "(ambiguous merge, the Delta error contract)"
                 )
-            if callable(_base_headers):
-                return _base_headers()
-            return _base_headers or []
+            return _base_headers() if _base_headers else {}
 
     try:
         if split is not None:
             return _commit_granular(
-                table, merged, carry, base_version, extra_headers=headers_cb,
+                table, merged, touched_dirs, base_version, extra=headers_cb,
                 write_partitions=n_touched_buckets,
             )
         return table.commit(
             merged, mode="overwrite", expected_base_version=base_version,
             op="merge", allow_schema_evolution=bool(extra),
-            extra_headers=headers_cb,
+            extra=headers_cb,
         )
     finally:
         # an abort path must not leak staging/validation jobs past this call
@@ -3132,68 +3117,59 @@ def _granular_split(
     return carry, touched_dirs, extra, len(touched)
 
 
-def _commit_headers(table: VersionedTable, version: int) -> tuple:
-    """The commit-commutation-relevant header lines of a manifest: DV
-    lines (both key-set ``#dv=`` and position ``#pdv=``, sorted), the
-    schema line, the colmap line. ``#ts``/``#op``/``#idhwm`` are
-    deliberately excluded — they never affect whether a rewrite's
-    result is still valid."""
-    dv, schema, colmap = [], None, None
-    with open(os.path.join(table._versions, str(version))) as f:
-        for line in f:
-            if line.startswith("#dv=") or line.startswith("#pdv="):
-                dv.append(line.strip())
-            elif line.startswith("#schema="):
-                schema = line.strip()
-            elif line.startswith("#colmap="):
-                colmap = line.strip()
-    return (sorted(dv), schema, colmap)
-
-
 def _commuting_rebase(
     table: VersionedTable,
     base_version: int,
     touched_dirs: list[str],
     forbid_buckets: set | None,
-) -> tuple[int, list[str]] | None:
+) -> int | None:
     """Decide whether the commits that landed after ``base_version``
     COMMUTE with an in-flight rewrite of ``touched_dirs``, and if so
-    return ``(latest_version, rebased_carry_dirs)`` — Delta's
+    return the latest version to rebase onto — Delta's
     OptimisticTransaction conflict check, keyed on the bucket layout
     instead of file-level predicates (the r11 verdict's item 2: S28
     makes bucket-disjointness checkable from pure manifest metadata).
 
     Commutation rules, checked per interloper commit:
 
-    - DV / schema / colmap header lines must be UNCHANGED (a DV could
-      cover our touched dirs — our rewrite would resurrect its deleted
-      rows; an evolution would be silently reverted by our republish);
+    - deletion vectors (both kinds), schema and colmap must be
+      UNCHANGED (a DV could cover our touched dirs — our rewrite would
+      resurrect its deleted rows; an evolution would be silently
+      reverted by our republish); ``ts``/``op``/watermarks never affect
+      whether a rewrite's result is still valid;
     - no interloper removed any of our touched dirs (it rewrote data
       we are also rewriting — a true write-write conflict);
     - with ``forbid_buckets`` (granular merge/delete): every dir an
       interloper added OR removed must be bucket-tagged and live in a
       bucket DISJOINT from ours — an append into one of our buckets
       could hold rows matching our merge keys, which our already-
-      computed output has not seen. Without it (scoped OPTIMIZE — a
-      row-preserving rewrite with no key semantics), add-only commits
-      anywhere commute: the added dirs simply join the carry list
-      un-clustered, for the next incremental run to pick up.
+      computed output has not seen (an untagged dir of our own, bucket
+      None, makes every interloper a conflict). Without it (scoped
+      OPTIMIZE — a row-preserving rewrite with no key semantics),
+      add-only commits anywhere commute: the added dirs simply join the
+      carry list un-clustered, for the next incremental run to pick up.
 
     Everything here is manifest metadata — O(interloper commits) header
     reads, no data I/O, so a lost race on a 100 TB table costs a few
     KB of re-planning instead of a caller-level re-run of the rewrite."""
+    if forbid_buckets is not None and None in forbid_buckets:
+        return None
     committed = table.versions()
     latest = committed[-1]
     if latest <= base_version or base_version not in committed:
         return None
     touched_real = {os.path.realpath(d) for d in touched_dirs}
-    base_hdrs = _commit_headers(table, base_version)
-    span = [v for v in committed if base_version <= v <= latest]
-    prev_dirs = {os.path.realpath(d) for d in table._manifest(span[0])}
-    for v in span[1:]:
-        if _commit_headers(table, v) != base_hdrs:
+
+    def _key(m: Manifest) -> tuple:
+        return m.dvs, m.pdvs, m.schema, m.colmap
+
+    base = table._parsed(base_version)
+    prev_dirs = {os.path.realpath(d) for d in base.dirs}
+    for v in committed[committed.index(base_version) + 1:]:
+        m = table._parsed(v)
+        if _key(m) != _key(base):
             return None
-        cur_dirs = {os.path.realpath(d) for d in table._manifest(v)}
+        cur_dirs = {os.path.realpath(d) for d in m.dirs}
         removed = prev_dirs - cur_dirs
         added = cur_dirs - prev_dirs
         if removed & touched_real:
@@ -3204,28 +3180,71 @@ def _commuting_rebase(
                 if b is None or b in forbid_buckets:
                     return None
         prev_dirs = cur_dirs
-    carry = [
-        d
-        for d in table._manifest(latest)
-        if os.path.realpath(d) not in touched_real
-    ]
-    return latest, carry
+    return latest
+
+
+def _publish_rewrite(
+    table: VersionedTable,
+    base_version: int,
+    scope: list[str],
+    new_dirs: list[str],
+    schema,
+    colmap: dict | None,
+    op: str,
+    extra: dict | None = None,
+    forbid_buckets: set | None = None,
+) -> int:
+    """Publish a scoped rewrite: the already-staged ``new_dirs`` replace
+    the ``scope`` dirs, and every other dir of the base carries BY
+    REFERENCE (with its recorded stats). Deletion vectors survive for
+    carried dirs only: the scope was read WITH its vectors applied, so
+    the rewrite materialized those deletions. A lost CAS race attempts
+    the metadata-only rebase of :func:`_commuting_rebase` (with
+    ``forbid_buckets`` for keyed granular rewrites) — the already-staged
+    batch is republished on top of the new latest, the carry list
+    recomputed from it."""
+    scope_real = {os.path.realpath(d) for d in scope}
+
+    def build(b: int) -> Manifest:
+        base = table._parsed(b)
+        carry = [d for d in base.dirs if os.path.realpath(d) not in scope_real]
+        return base.derive(
+            dirs=carry + new_dirs,
+            schema=schema,
+            colmap=colmap,
+            op=op,
+            dvs=_restrict_cover(base.dvs, carry),
+            pdvs=_restrict_cover(base.pdvs, carry),
+            stats=table._stats_for_commit(
+                new_dirs, b, carry + new_dirs, colmap=colmap
+            ),
+            **(extra or {}),
+        )
+
+    return _publish_loop(
+        table,
+        base_version,
+        build,
+        lambda b: _commuting_rebase(table, b, scope, forbid_buckets),
+        op,
+    )
 
 
 def _commit_granular(
     table: VersionedTable,
     rewritten: DataFrame,
-    carry_dirs: list[str],
+    touched_dirs: list[str],
     base_version: int,
     op: str = "merge",
-    extra_headers: list[str] | None = None,
+    extra: dict | Callable[[], dict] | None = None,
     write_partitions: int | None = None,
 ) -> int:
     """Publish a bucket-granular rewrite: stage the rewritten buckets as
-    a new batch (layout-aware writer -> per-bucket dirs) and publish
-    ``carry_dirs + new bucket dirs`` as base+1. The read-modify-write
-    guard is the version pin itself: a concurrent commit landing after
-    our base read takes base+1 first and our ``os.link`` CAS loses.
+    a new batch (layout-aware writer -> per-bucket dirs) replacing the
+    ``touched_dirs`` of the base, every other bucket dir carried. The
+    read-modify-write guard is the version pin itself: a concurrent
+    commit landing after our base read takes base+1 first and our
+    ``os.link`` CAS loses.
 
     A lost race then attempts an AUTO-REBASE (:func:`_commuting_rebase`)
     instead of failing straight back to the caller: interloper commits
@@ -3236,62 +3255,24 @@ def _commit_granular(
     change, or schema change still raises
     :class:`ConcurrentCommitError` (caller re-runs against the new
     base), Delta's OptimisticTransaction contract."""
-    version = base_version + 1
     # _next_colmap, not the base version's map verbatim: a granular
     # merge with allow_schema_evolution=True introduces logical columns
     # the base map has never seen — they need FRESH physical ids (same
     # rule as the full-rewrite commit path; a stale map would KeyError
-    # in _write_batch and, worse, publish a #colmap= line missing the
-    # evolved column)
+    # in _write_batch and, worse, publish a colmap missing the evolved
+    # column)
     colmap = table._next_colmap(rewritten.columns, base_version)
     new_dirs = table._write_batch(
-        rewritten, version, colmap=colmap, write_partitions=write_partitions
+        rewritten, base_version + 1, colmap=colmap,
+        write_partitions=write_partitions,
     )
-    if callable(extra_headers):
-        # deferred header staging (see commit()): resolve once, after
-        # our own batch write, before any publish attempt
-        extra_headers = extra_headers()
-    touched_dirs = [
-        d
-        for d in table._manifest(base_version)
-        if d not in set(carry_dirs)
-    ]
-    our_buckets = {_dir_bucket(d) for d in touched_dirs} | {
-        _dir_bucket(d) for d in new_dirs
-    }
-
-    for _attempt in range(5):
-        try:
-            table._publish_manifest(
-                carry_dirs + new_dirs,
-                version,
-                schema=rewritten.schema,
-                # deletion vectors survive for CARRIED dirs only: the
-                # rewritten buckets were read WITH their DVs applied
-                dvs=_restrict_dvs(table, base_version, carry_dirs),
-                pdvs=_restrict_pdvs(table, base_version, carry_dirs),
-                stats=table._stats_for_commit(
-                    new_dirs, base_version, carry_dirs + new_dirs,
-                    colmap=colmap,
-                ),
-                colmap=colmap,
-                op=op,
-                extra_headers=extra_headers,
-            )
-            return version
-        except ConcurrentCommitError:
-            if None in our_buckets:
-                raise
-            rebase = _commuting_rebase(
-                table, base_version, touched_dirs, our_buckets
-            )
-            if rebase is None:
-                raise
-            base_version, carry_dirs = rebase
-            version = base_version + 1
-    raise ConcurrentCommitError(
-        f"granular {op} at {table.dir} lost 5 publish races in a row; "
-        "re-run against the new base"
+    # deferred staging (see commit()): resolve once, after our own
+    # batch write, before any publish attempt
+    own = extra() if callable(extra) else extra
+    our_buckets = {_dir_bucket(d) for d in touched_dirs + new_dirs}
+    return _publish_rewrite(
+        table, base_version, touched_dirs, new_dirs, rewritten.schema,
+        colmap, op, own, forbid_buckets=our_buckets,
     )
 
 
@@ -3358,7 +3339,7 @@ def delete_by_keys(
         change_df = deleted.withColumn("_change_type", F.lit("delete"))
         pool = ThreadPoolExecutor(max_workers=1)
         fut = pool.submit(table._stage_cdf, change_df, base_version + 1)
-        return (lambda: [f"#cdf={fut.result()}"]), pool
+        return (lambda: {"cdf": fut.result()}), pool
 
     if merge_on_read:
         version = base_version + 1
@@ -3381,61 +3362,39 @@ def delete_by_keys(
             delete_keys.select(*keys).distinct().write.mode(
                 "overwrite"
             ).parquet(dv_dir)
-            if callable(cdf_headers):
-                cdf_headers = cdf_headers()
+            cdf = cdf_headers() if cdf_headers else {}
         finally:
             if cdf_pool is not None:
                 cdf_pool.shutdown(wait=True)
+        # the vector covers the BASE snapshot's dirs only — a rebased
+        # publish keeps that scope (delete-as-of-read semantics: rows an
+        # interloper appended after our read land in uncovered dirs and
+        # survive, exactly like a post-delete insert). Data dirs are
+        # unchanged, so their recorded bounds carry: a DV only REMOVES
+        # rows, which can loosen but never invalidate a min/max bound.
         base_dirs = table._manifest(base_version)
-        for _attempt in range(5):
-            dirs = table._manifest(base_version)
-            dvs = table.deletion_vectors(base_version) + [
-                # the vector covers the BASE snapshot's dirs only — a
-                # rebased publish keeps that scope (delete-as-of-read
-                # semantics: rows an interloper appended after our read
-                # land in uncovered dirs and survive, exactly like a
-                # post-delete insert)
-                {"path": dv_dir, "covers": list(base_dirs)}
-            ]
-            try:
-                table._publish_manifest(
-                    dirs,
-                    version,
-                    schema=table.snapshot_schema(base_version),
-                    dvs=dvs,
-                    pdvs=table.position_dvs(base_version),
-                    # data dirs are unchanged, so their recorded bounds
-                    # carry: a DV only REMOVES rows, which can loosen but
-                    # never invalidate a min/max bound
-                    stats=table.dir_stats(base_version) or None,
-                    colmap=table.column_mapping(base_version),
-                    op="delete (merge-on-read)",
-                    extra_headers=cdf_headers,
-                )
-                return version
-            except ConcurrentCommitError:
-                # a DV commit commutes with PURE APPENDS (coverage is
-                # scoped to the base dirs, which appends never touch);
-                # an interloper that REWROTE any base dir read it
-                # without our pending vector — its output would
-                # resurrect our deletes — so any removal, DV change, or
-                # schema/colmap move stays a hard conflict. Passing the
-                # full base-dir list as `touched` makes _commuting_
-                # rebase refuse every removal.
-                rebase = _commuting_rebase(
-                    table, base_version, base_dirs, None
-                )
-                if rebase is None:
-                    raise
-                base_version = rebase[0]
-                version = base_version + 1
-        raise ConcurrentCommitError(
-            f"merge-on-read delete at {table.dir} lost 5 publish races; "
-            "re-run"
+        dv = {"path": dv_dir, "covers": base_dirs}
+        return _publish_loop(
+            table,
+            base_version,
+            lambda b: table._parsed(b).derive(
+                dvs=table._parsed(b).dvs + [dv],
+                op="delete (merge-on-read)",
+                **cdf,
+            ),
+            # a DV commit commutes with PURE APPENDS (coverage is
+            # scoped to the base dirs, which appends never touch); an
+            # interloper that REWROTE any base dir read it without our
+            # pending vector — its output would resurrect our deletes —
+            # so any removal, DV change, or schema/colmap move stays a
+            # hard conflict: the full base-dir list as `touched` makes
+            # _commuting_rebase refuse every removal.
+            lambda b: _commuting_rebase(table, b, base_dirs, None),
+            "merge-on-read delete",
         )
     split = _granular_split(table, base_version, delete_keys, keys)
     if split is not None:
-        carry, touched_dirs, _, n_touched = split
+        _carry, touched_dirs, _, n_touched = split
         if not touched_dirs:  # no bucket holds any of these keys
             base = table.read(version=base_version).limit(0)
         else:
@@ -3446,9 +3405,8 @@ def delete_by_keys(
         )
         try:
             return _commit_granular(
-                table, kept, carry, base_version, op="delete",
-                extra_headers=cdf_headers,
-                write_partitions=n_touched,
+                table, kept, touched_dirs, base_version, op="delete",
+                extra=cdf_headers, write_partitions=n_touched,
             )
         finally:
             if cdf_pool is not None:
@@ -3461,7 +3419,7 @@ def delete_by_keys(
     try:
         return table.commit(
             kept, mode="overwrite", expected_base_version=base_version,
-            op="delete", extra_headers=cdf_headers,
+            op="delete", extra=cdf_headers,
         )
     finally:
         if cdf_pool is not None:
@@ -3565,26 +3523,14 @@ def cluster_rewrite(
     if not committed:
         raise ValueError(f"versioned table at {table.dir} has no commits")
     base_version = committed[-1]
-    dirs = table._manifest(base_version)
-    scope = list(dirs)
+    scope = table._manifest(base_version)
     if incremental:
         scope = [d for d in scope if not _dir_zchunk(d)]
     if pred_dnf is not None:
-        stats = table.dir_stats(base_version)
-        stats_real = {os.path.realpath(d): s for d, s in stats.items()}
-        scope = [
-            d
-            for d in scope
-            if (
-                (s := stats.get(d) or stats_real.get(os.path.realpath(d)))
-                is None
-                or _dnf_may_match(s, pred_dnf)
-            )
-        ]
+        in_pred = set(_predicate_scope(table, base_version, pred_dnf))
+        scope = [d for d in scope if d in in_pred]
     if not scope:
         return base_version  # nothing in scope: no-op, no empty commit
-    scope_set = {os.path.realpath(d) for d in scope}
-    carry = [d for d in dirs if os.path.realpath(d) not in scope_set]
     df = table._read_dirs(scope, base_version)
     orig_cols = df.columns
     dtypes = dict(df.dtypes)
@@ -3676,40 +3622,16 @@ def cluster_rewrite(
             )
         else:
             new_dirs.append(zfull)
-    for _attempt in range(5):
-        try:
-            table._publish_manifest(
-                carry + new_dirs,
-                version,
-                schema=df.select(*orig_cols).schema,
-                # DVs covering rewritten dirs were materialized by the
-                # scoped read; coverage restricted to carried dirs
-                # survives (same rule as _commit_granular)
-                dvs=_restrict_dvs(table, base_version, carry),
-                pdvs=_restrict_pdvs(table, base_version, carry),
-                stats=table._stats_for_commit(
-                    new_dirs, base_version, carry + new_dirs, colmap=colmap
-                ),
-                colmap=colmap,
-                op="zorder",
-            )
-            return version
-        except ConcurrentCommitError:
-            # OPTIMIZE ∥ ingest is THE common maintenance race: the
-            # rewrite is row-preserving with no key semantics, so ANY
-            # interloper that only ADDED dirs (appends — even into
-            # z-scoped value ranges) commutes: its dirs join the carry
-            # list un-clustered, and the next incremental run picks
-            # them up. Interlopers that removed one of our scope dirs
-            # (rewrote data we re-clustered) or changed DV/schema/
-            # colmap lines still raise — caller re-runs.
-            rebase = _commuting_rebase(table, base_version, scope, None)
-            if rebase is None:
-                raise
-            base_version, carry = rebase
-            version = base_version + 1
-    raise ConcurrentCommitError(
-        f"zorder at {table.dir} lost 5 publish races in a row; re-run"
+    # OPTIMIZE ∥ ingest is THE common maintenance race: the rewrite is
+    # row-preserving with no key semantics, so ANY interloper that only
+    # ADDED dirs (appends — even into z-scoped value ranges) commutes:
+    # its dirs join the carry list un-clustered, and the next
+    # incremental run picks them up. Interlopers that removed one of our
+    # scope dirs (rewrote data we re-clustered) or changed DV/schema/
+    # colmap still raise — caller re-runs.
+    return _publish_rewrite(
+        table, base_version, scope, new_dirs, df.select(*orig_cols).schema,
+        colmap, "zorder",
     )
 
 
@@ -3723,25 +3645,6 @@ def _restrict_cover(vectors: list[dict], carried: list[str]) -> list[dict]:
         if covers:
             kept.append({"path": dv["path"], "covers": covers})
     return kept
-
-
-def _restrict_dvs(
-    table: VersionedTable, version: int, carried: list[str]
-) -> list[dict]:
-    """The version's deletion vectors restricted to ``carried`` dirs —
-    the shared rule of every scoped rewrite: rewritten dirs were read
-    WITH their DVs applied (deletions materialize), so coverage survives
-    only for dirs staying in the manifest by reference; a DV covering
-    nothing disappears."""
-    return _restrict_cover(table.deletion_vectors(version), carried)
-
-
-def _restrict_pdvs(
-    table: VersionedTable, version: int, carried: list[str]
-) -> list[dict]:
-    """Position vectors follow the same scoped-rewrite coverage rule as
-    key-set DVs (:func:`_restrict_dvs`)."""
-    return _restrict_cover(table.position_dvs(version), carried)
 
 
 #: triple ops accepted in the legacy list-of-triples predicate form
@@ -3781,26 +3684,23 @@ def _dnf_may_match(colstats: dict, dnf: list[list[tuple]]) -> bool:
 
 def _predicate_scope(
     table: VersionedTable, base_version: int, dnf: list[list[tuple]]
-) -> tuple[list[str], list[str]]:
-    """Split the base manifest into (scope, carry) for a predicate-
-    scoped rewrite: ``scope`` = dirs whose recorded S33 stats MAY hold a
-    matching row (dirs without stats conservatively in scope), ``carry``
-    = dirs PROVABLY free of matches, carried by reference. Sound for
-    row-rewriting DML because a carried dir's rows all fail the
-    predicate — there is nothing to update/delete there. ``dnf`` comes
-    from :func:`_normalize_predicates`; under disjunction a dir carries
-    only when every disjunct misses it."""
-    dirs = table._manifest(base_version)
+) -> list[str]:
+    """The scope of a predicate-scoped rewrite: the base manifest's dirs
+    whose recorded S33 stats MAY hold a matching row (dirs without stats
+    conservatively in scope). Every other dir is PROVABLY free of
+    matches and carries by reference — sound for row-rewriting DML
+    because a carried dir's rows all fail the predicate, so there is
+    nothing to update/delete there. ``dnf`` comes from
+    :func:`_normalize_predicates`; under disjunction a dir carries only
+    when every disjunct misses it."""
     stats = table.dir_stats(base_version)
     stats_real = {os.path.realpath(d): s for d, s in stats.items()}
-    scope, carry = [], []
-    for d in dirs:
-        s = stats.get(d) or stats_real.get(os.path.realpath(d))
-        if s is None or _dnf_may_match(s, dnf):
-            scope.append(d)
-        else:
-            carry.append(d)
-    return scope, carry
+    return [
+        d
+        for d in table._manifest(base_version)
+        if (s := stats.get(d) or stats_real.get(os.path.realpath(d))) is None
+        or _dnf_may_match(s, dnf)
+    ]
 
 
 def _predicate_condition(predicates: list[tuple]) -> Column:
@@ -3837,45 +3737,22 @@ def _commit_scoped_rewrite(
     table: VersionedTable,
     base_version: int,
     scope: list[str],
-    carry: list[str],
     rewritten: DataFrame,
     op: str,
-    cdf_headers: list[str] | None,
+    extra: dict | None,
 ) -> int:
     """Publish a predicate-scoped DML rewrite: stage ``rewritten`` (the
     scope dirs' surviving rows) through the layout-aware batch writer
-    and publish ``carry + new dirs``. Lost CAS races attempt the
+    and publish it in place of ``scope``. Lost CAS races attempt the
     add-only commuting rebase (an interloper APPEND's rows arrived
     after this DML's read — as-of-read semantics leave them untouched,
     exactly like a post-commit write); interlopers that removed a scope
     dir rewrote rows this DML also rewrote — hard conflict."""
     colmap = table.column_mapping(base_version)
-    version = base_version + 1
-    new_dirs = table._write_batch(rewritten, version, colmap=colmap)
-    for _attempt in range(5):
-        try:
-            table._publish_manifest(
-                carry + new_dirs,
-                version,
-                schema=rewritten.schema,
-                dvs=_restrict_dvs(table, base_version, carry),
-                pdvs=_restrict_pdvs(table, base_version, carry),
-                stats=table._stats_for_commit(
-                    new_dirs, base_version, carry + new_dirs, colmap=colmap
-                ),
-                colmap=colmap,
-                op=op,
-                extra_headers=cdf_headers,
-            )
-            return version
-        except ConcurrentCommitError:
-            rebase = _commuting_rebase(table, base_version, scope, None)
-            if rebase is None:
-                raise
-            base_version, carry = rebase
-            version = base_version + 1
-    raise ConcurrentCommitError(
-        f"{op} at {table.dir} lost 5 publish races in a row; re-run"
+    new_dirs = table._write_batch(rewritten, base_version + 1, colmap=colmap)
+    return _publish_rewrite(
+        table, base_version, scope, new_dirs, rewritten.schema, colmap, op,
+        extra,
     )
 
 
@@ -3924,7 +3801,7 @@ def update_where(
         raise ValueError(f"versioned table at {table.dir} has no commits")
     base_version = committed[-1]
     dnf, cond = _normalize_predicates(predicates)
-    scope, carry = _predicate_scope(table, base_version, dnf)
+    scope = _predicate_scope(table, base_version, dnf)
     if not scope:
         return base_version
     df = table._read_dirs(scope, base_version)
@@ -3942,7 +3819,7 @@ def update_where(
             for c in df.columns
         ]
     )
-    cdf_headers = None
+    cdf = None
     if table.change_data_feed_enabled():
         # post-images: apply the SET to the matched rows directly (a
         # join-back would be wrong under duplicates) — one extra scoped
@@ -3956,11 +3833,9 @@ def update_where(
             ]
         )
         change_df = post.withColumn("_change_type", F.lit("update"))
-        cdf_headers = [
-            f"#cdf={table._stage_cdf(change_df, base_version + 1)}"
-        ]
+        cdf = {"cdf": table._stage_cdf(change_df, base_version + 1)}
     return _commit_scoped_rewrite(
-        table, base_version, scope, carry, rewritten, "update", cdf_headers
+        table, base_version, scope, rewritten, "update", cdf
     )
 
 
@@ -3998,7 +3873,7 @@ def delete_where(
         raise ValueError(f"versioned table at {table.dir} has no commits")
     base_version = committed[-1]
     dnf, cond = _normalize_predicates(predicates)
-    scope, carry = _predicate_scope(table, base_version, dnf)
+    scope = _predicate_scope(table, base_version, dnf)
     if not scope:
         return base_version
     if merge_on_read:
@@ -4007,16 +3882,14 @@ def delete_where(
         )
     df = table._read_dirs(scope, base_version)
     kept = df.filter(~F.coalesce(cond, F.lit(False)))
-    cdf_headers = None
+    cdf = None
     if table.change_data_feed_enabled():
         change_df = df.filter(cond).withColumn(
             "_change_type", F.lit("delete")
         )
-        cdf_headers = [
-            f"#cdf={table._stage_cdf(change_df, base_version + 1)}"
-        ]
+        cdf = {"cdf": table._stage_cdf(change_df, base_version + 1)}
     return _commit_scoped_rewrite(
-        table, base_version, scope, carry, kept, "delete", cdf_headers
+        table, base_version, scope, kept, "delete", cdf
     )
 
 
@@ -4038,7 +3911,7 @@ def _delete_where_positions(
     identity from ``_metadata.file_path`` with the ``file:`` URI prefix
     stripped to match the manifest's plain paths."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructField
 
     from functools import reduce
 
@@ -4161,67 +4034,50 @@ def _delete_where_positions(
 
             shutil.rmtree(pdv_dir, ignore_errors=True)
             return base_version
-        cdf_headers = None
+        cdf = {}
         if table.change_data_feed_enabled():
             # the persisted matched set is the feed, minus the
             # position identity
             change_df = matched.drop(FCOL, PCOL).withColumn(
                 "_change_type", F.lit("delete")
             )
-            cdf_headers = [f"#cdf={table._stage_cdf(change_df, version)}"]
+            cdf = {"cdf": table._stage_cdf(change_df, version)}
     finally:
         matched.unpersist()
-    scope_dirs = list(scope)
-    for _attempt in range(5):
-        try:
-            table._publish_manifest(
-                table._manifest(base_version),
-                version,
-                schema=table.snapshot_schema(base_version),
-                dvs=table.deletion_vectors(base_version),
-                pdvs=table.position_dvs(base_version)
-                + [{"path": pdv_dir, "covers": scope_dirs}],
-                # data dirs unchanged: recorded bounds stay valid (a DV
-                # only removes rows — bounds loosen, never break)
-                stats=table.dir_stats(base_version) or None,
-                colmap=table.column_mapping(base_version),
-                op="delete (merge-on-read)",
-                extra_headers=cdf_headers,
-            )
-            return version
-        except ConcurrentCommitError:
-            # commutes with interlopers that left every SCOPE dir in
-            # place (pure appends, disjoint granular rewrites): our
-            # positions reference immutable files that are still
-            # referenced. An interloper that REWROTE a scope dir read
-            # it without our pending vector — hard conflict.
-            rebase = _commuting_rebase(table, base_version, scope_dirs, None)
-            if rebase is None:
-                raise
-            base_version = rebase[0]
-            version = base_version + 1
-    raise ConcurrentCommitError(
-        f"merge-on-read delete at {table.dir} lost 5 publish races; re-run"
+    pdv = {"path": pdv_dir, "covers": list(scope)}
+    return _publish_loop(
+        table,
+        base_version,
+        # data dirs unchanged: recorded bounds stay valid (a DV only
+        # removes rows — bounds loosen, never break)
+        lambda b: table._parsed(b).derive(
+            pdvs=table._parsed(b).pdvs + [pdv],
+            op="delete (merge-on-read)",
+            **cdf,
+        ),
+        # commutes with interlopers that left every SCOPE dir in place
+        # (pure appends, disjoint granular rewrites): our positions
+        # reference immutable files that are still referenced. An
+        # interloper that REWROTE a scope dir read it without our
+        # pending vector — hard conflict.
+        lambda b: _commuting_rebase(table, b, scope, None),
+        "merge-on-read delete",
     )
 
 
 def identity_high_water(table: VersionedTable, id_col: str) -> int:
-    """The table's current IDENTITY high-water mark: the most recent
-    ``#idhwm=`` manifest header, scanned latest-first so non-identity
-    commits interleaved between identity commits are transparent. Pure
-    metadata — O(versions) header reads."""
-    for v in reversed(table.versions()):
-        with open(os.path.join(table._versions, str(v))) as f:
-            for line in f:
-                if line.startswith("#idhwm="):
-                    hcol, hval = line[len("#idhwm="):].strip().split("::")
-                    if hcol != id_col:
-                        raise ValueError(
-                            f"table identity column is {hcol!r}, "
-                            f"not {id_col!r}"
-                        )
-                    return int(hval)
-    return 0
+    """The table's current IDENTITY high-water mark: the carried
+    ``idhwm`` watermark (:meth:`VersionedTable._carry` — every publish
+    re-emits it, so non-identity commits between identity commits are
+    transparent). Pure metadata, bounded by the log checkpoint."""
+    hwm = table._carry().idhwm
+    if hwm is None:
+        return 0
+    if hwm[0] != id_col:
+        raise ValueError(
+            f"table identity column is {hwm[0]!r}, not {id_col!r}"
+        )
+    return hwm[1]
 
 
 def commit_with_identity(
@@ -4234,7 +4090,7 @@ def commit_with_identity(
     """Commit with an IDENTITY column (Delta's ``GENERATED ALWAYS AS
     IDENTITY``, made DETERMINISTIC): this commit's rows are numbered
     ``hwm+1 .. hwm+n`` in ``order_cols`` order, and the new high-water
-    mark rides an ``#idhwm=`` header in the SAME atomic manifest write
+    mark rides the manifest's ``idhwm`` field in the SAME atomic write
     as the batch's file list — allocation and data can never tear
     apart, and a writer that loses the CAS race publishes nothing, so
     ids are never burned by a lost race. Reading the hwm makes this a
@@ -4305,7 +4161,7 @@ def commit_with_identity(
         mode=mode,
         expected_base_version=base_version,
         op=f"{mode} (identity)",
-        extra_headers=[f"#idhwm={id_col}::{hwm + int(n_rows)}"],
+        extra={"idhwm": (id_col, hwm + int(n_rows))},
     )
 
 
@@ -4367,13 +4223,14 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
     if not committed:
         raise ValueError(f"versioned table at {table.dir} has no commits")
     base = committed[-1]
+    m = table._parsed(base)
     schema = table.snapshot_schema(base)
     names = [f.name for f in schema.fields]
     if old not in names:
         raise ValueError(f"no column {old!r} (have {names})")
     if new in names:
         raise ValueError(f"column {new!r} already exists")
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructField
 
     new_schema = StructType(
         [
@@ -4381,12 +4238,12 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
             for f in schema.fields
         ]
     )
-    colmap = dict(table.column_mapping(base))
+    colmap = dict(m.colmap)
     colmap[new] = colmap.pop(old)
     stats = {
         d: {(new if c == old else c): s for c, s in cols.items()}
-        for d, cols in table.dir_stats(base).items()
-    } or None
+        for d, cols in m.stats.items()
+    }
     # CAS FIRST, side files after: _layout and _stats_cols are
     # unversioned, so mutating them before the manifest publish would —
     # on a lost concurrent-commit race — leave the table with the OLD
@@ -4394,14 +4251,10 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
     # bucket/collect stats under a column the schema doesn't have).
     # Publishing first makes a lost race a clean no-op.
     table._publish_manifest(
-        table._manifest(base),
+        m.derive(
+            schema=new_schema, stats=stats, colmap=colmap, op="rename_column"
+        ),
         base + 1,
-        schema=new_schema,
-        dvs=table.deletion_vectors(base),
-        pdvs=table.position_dvs(base),
-        stats=stats,
-        colmap=colmap,
-        op="rename_column",
     )
     layout = table.layout()
     if layout is not None and old in layout["bucket_keys"]:
@@ -4436,35 +4289,27 @@ def drop_column(table: VersionedTable, col: str) -> int:
             f"cannot drop bucket-key column {col!r}: the layout's "
             "granular rewrites need it"
         )
-    schema = table.snapshot_schema(base)
-    names = [f.name for f in schema.fields]
+    m = table._parsed(base)
+    names = [f.name for f in m.schema.fields]
     if col not in names:
         raise ValueError(f"no column {col!r} (have {names})")
     if len(names) == 1:
         raise ValueError("cannot drop the only column")
-    from pyspark.sql.types import StructType
-
-    new_schema = StructType([f for f in schema.fields if f.name != col])
-    colmap = {
-        k: v for k, v in table.column_mapping(base).items() if k != col
-    }
     stats = {
         d: {c: s for c, s in cols.items() if c != col}
-        for d, cols in table.dir_stats(base).items()
+        for d, cols in m.stats.items()
     }
-    stats = {d: cols for d, cols in stats.items() if cols} or None
     stat_cols = table.stats_columns()
     if col in stat_cols:
         table.set_stats_columns([c for c in stat_cols if c != col])
     table._publish_manifest(
-        table._manifest(base),
+        m.derive(
+            schema=StructType([f for f in m.schema.fields if f.name != col]),
+            colmap={k: v for k, v in m.colmap.items() if k != col},
+            stats={d: cols for d, cols in stats.items() if cols},
+            op="drop_column",
+        ),
         base + 1,
-        schema=new_schema,
-        dvs=table.deletion_vectors(base),
-        pdvs=table.position_dvs(base),
-        stats=stats,
-        colmap=colmap,
-        op="drop_column",
     )
     return base + 1
 
@@ -4497,14 +4342,11 @@ def restore(table: VersionedTable, to_version: int) -> int:
         )
     return_version = committed[-1] + 1
     table._publish_manifest(
-        dirs,
+        table._parsed(to_version).derive(
+            schema=table.snapshot_schema(to_version),
+            op=f"restore (to v{to_version})",
+        ),
         return_version,
-        schema=table.snapshot_schema(to_version),
-        dvs=table.deletion_vectors(to_version),
-        pdvs=table.position_dvs(to_version),
-        stats=table.dir_stats(to_version) or None,
-        colmap=table.column_mapping(to_version),
-        op=f"restore (to v{to_version})",
     )
     return return_version
 
@@ -4547,38 +4389,26 @@ def clone(
     target = VersionedTable(table.spark, target_dir)
     if target.versions():
         raise ValueError(f"clone target {target_dir} already has commits")
-    dirs = [os.path.realpath(d) for d in table._manifest(v)]
-    dvs = [
-        {
-            "path": os.path.realpath(dv["path"]),
-            "covers": [os.path.realpath(c) for c in dv["covers"]],
-        }
-        for dv in table.deletion_vectors(v)
-    ]
-    pdvs = [
-        {
-            "path": os.path.realpath(dv["path"]),
-            "covers": [os.path.realpath(c) for c in dv["covers"]],
-        }
-        for dv in table.position_dvs(v)
-    ]
-    stats = {
-        os.path.realpath(d): s for d, s in table.dir_stats(v).items()
-    } or None
-    try:
-        src_hwm = table._latest_idhwm_line()
-        target._publish_manifest(
-            dirs, 1, schema=table.snapshot_schema(v), dvs=dvs, pdvs=pdvs,
-            stats=stats,
-            colmap=table.column_mapping(v),
+    m = table._parsed(v)
+    real = os.path.realpath
+
+    def _real(vectors: list[dict]) -> list[dict]:
+        return [
+            {"path": real(dv["path"]), "covers": [real(c) for c in dv["covers"]]}
+            for dv in vectors
+        ]
+
+    target._publish_manifest(
+        m.derive(
+            dirs=[real(d) for d in m.dirs],
+            dvs=_real(m.dvs),
+            pdvs=_real(m.pdvs),
+            stats={real(d): s for d, s in m.stats.items()},
+            idhwm=table._carry().idhwm,
             op=f"clone (of v{v})",
-            extra_headers=[src_hwm] if src_hwm else None,
-        )
-    except ConcurrentCommitError:
-        raise ConcurrentCommitError(
-            f"clone target {target_dir} version 1 was published by "
-            "another writer"
-        ) from None
+        ),
+        1,
+    )
     # carry table metadata: constraints + bucket layout (tmp+fsync+rename
     # like every metadata write)
     for src_file, dst_file in (

@@ -25,11 +25,13 @@ How each library-writer responsibility is met WITHOUT a SparkSession
   staged dirs, and an unpublished dir is invisible anyway (torn-commit
   invisibility — vacuum's staging grace protects in-flight dirs from a
   concurrent sweep until referenced).
-- **CAS + rebase**: the driver-side ``commit()`` republishes against
-  the newest manifest on a lost race exactly like
-  ``VersionedTable.commit``'s append auto-rebase — and re-verifies
-  schema / column-map / constraints / layout against the new latest
-  before retrying, refusing when an interloper changed table metadata.
+- **CAS + rebase**: the driver-side ``commit()`` publishes through the
+  versioned table's one optimistic-commit loop
+  (``operators/versioned._publish_loop``), republishing against the
+  newest manifest on a lost race exactly like ``VersionedTable.commit``'s
+  append auto-rebase; every attempt re-verifies schema / column-map /
+  constraints / layout against the current latest, refusing when an
+  interloper changed table metadata.
 - **CHECK constraints**: parsed at PLAN time with the round-13
   predicate grammar (``operators/predicate.py``) and evaluated
   executor-side over Arrow batches with Kleene 3VL (violates only on
@@ -69,7 +71,9 @@ from ..operators.versioned import (
     BUCKET_COL,
     ConcurrentCommitError,
     ConstraintViolation,
+    Manifest,
     VersionedTable,
+    _publish_loop,
 )
 
 
@@ -359,109 +363,91 @@ class VersionedTableWriter(DataSourceArrowWriter):
             )
             new_dirs = [self._batch]
 
-        self._publish_with_rebase(table, new_dirs)
+        self._publish(table, new_dirs)
 
-    def _publish_with_rebase(
+    def _verify(self, table: VersionedTable, latest: int) -> None:
+        """Re-verify the table metadata the tasks enforced against the
+        CURRENT latest: an interloper that changed constraints / layout /
+        colmap / schema mid-write invalidates the staged batch."""
+        if table.constraints() != self._constraints_raw:
+            raise ConcurrentCommitError(
+                f"table constraints at {self._dir} changed during the "
+                "write; the staged batch was validated against the old "
+                "set — re-run the write"
+            )
+        if table.layout() != self._layout:
+            raise ConcurrentCommitError(
+                f"table layout at {self._dir} changed during the "
+                "write; staged bucket placement is stale — re-run"
+            )
+        if not latest or self._mode != "append":
+            return
+        cur = table._parsed(latest)
+        if cur.schema is not None:
+            cur_fields = {
+                f.name: f.dataType.simpleString() for f in cur.schema.fields
+            }
+            compatible = cur_fields == self._schema_fields or (
+                # mergeSchema append: the current schema must be a
+                # SUBSET we are additively evolving — an interloper's
+                # own evolution (a column we don't carry) cannot be
+                # silently reverted
+                self._merge_schema
+                and set(cur_fields) <= set(self._schema_fields)
+                and all(
+                    self._schema_fields[n] == t for n, t in cur_fields.items()
+                )
+            )
+            if not compatible:
+                raise ConcurrentCommitError(
+                    f"table schema at {self._dir} evolved during "
+                    "the write; re-run against the new schema"
+                )
+        if (cur.colmap or {}) != (self._colmap or {}):
+            raise ConcurrentCommitError(
+                f"column mapping at {self._dir} changed during the "
+                "write (rename/drop interloper); staged physical "
+                "names are stale — re-run"
+            )
+
+    def _publish(
         self,
         table: VersionedTable,
         new_dirs: list,
         op: str | None = None,
-        extra_headers: list | None = None,
-        pre_attempt=None,
+        extra: dict | None = None,
+        applied=None,
     ) -> bool:
-        """Returns True when a version was published, False when
-        ``pre_attempt(table)`` declared the commit a no-op (e.g. a
-        replayed stream batch detected mid-retry — the check must run
-        INSIDE the CAS loop: a zombie driver losing the race to its
-        replacement's identical batch must skip, not rebase-append)."""
-        last_err: ConcurrentCommitError | None = None
-        for _attempt in range(10):
-            if _attempt:
-                import time as _time
+        """Publish through the shared optimistic-commit loop
+        (``_publish_loop``); a blind append rebases onto the newest
+        version on a lost race. Returns False when ``applied(table)``
+        declared the commit a replay — checked on EVERY attempt: a
+        zombie driver losing the race to its replacement's identical
+        batch must skip, not rebase-append."""
 
-                _time.sleep(0.005 * _attempt)  # break CAS-loss lockstep
-            if pre_attempt is not None and pre_attempt(table):
-                return False
-            committed = table.versions()
-            latest = committed[-1] if committed else None
-            # ---- metadata re-verification against the CURRENT latest:
-            # an interloper that changed constraints / layout / colmap /
-            # schema mid-write invalidates what the tasks enforced
-            if table.constraints() != self._constraints_raw:
-                raise ConcurrentCommitError(
-                    f"table constraints at {self._dir} changed during the "
-                    "write; the staged batch was validated against the old "
-                    "set — re-run the write"
-                )
-            if table.layout() != self._layout:
-                raise ConcurrentCommitError(
-                    f"table layout at {self._dir} changed during the "
-                    "write; staged bucket placement is stale — re-run"
-                )
-            if latest is not None:
-                cur_schema = table.snapshot_schema(latest)
-                if cur_schema is not None and self._mode == "append":
-                    cur_fields = {
-                        f.name: f.dataType.simpleString()
-                        for f in cur_schema.fields
-                    }
-                    compatible = cur_fields == self._schema_fields or (
-                        # mergeSchema append: the current schema must be
-                        # a SUBSET we are additively evolving — an
-                        # interloper's own evolution (a column we don't
-                        # carry) cannot be silently reverted
-                        self._merge_schema
-                        and set(cur_fields) <= set(self._schema_fields)
-                        and all(
-                            self._schema_fields[n] == t
-                            for n, t in cur_fields.items()
-                        )
-                    )
-                    if not compatible:
-                        raise ConcurrentCommitError(
-                            f"table schema at {self._dir} evolved during "
-                            "the write; re-run against the new schema"
-                        )
-                if (table.column_mapping(latest) or {}) != (
-                    self._colmap or {}
-                ) and self._mode == "append":
-                    raise ConcurrentCommitError(
-                        f"column mapping at {self._dir} changed during the "
-                        "write (rename/drop interloper); staged physical "
-                        "names are stale — re-run"
-                    )
-            version = (latest + 1) if latest is not None else 1
-            if self._mode == "append" and latest is not None:
-                dirs = table._manifest(latest) + new_dirs
-                dvs = table.deletion_vectors(latest)
-                pdvs = table.position_dvs(latest)
-                stats = table._stats_for_commit(
-                    new_dirs, latest, dirs, colmap=self._colmap
-                )
-            else:
-                dirs, dvs, pdvs = new_dirs, [], []
-                stats = table._stats_for_commit(
-                    new_dirs, None, new_dirs, colmap=self._colmap
-                )
-            schema = self._spark_schema()
-            try:
-                table._publish_manifest(
-                    dirs,
-                    version,
-                    schema=schema,
-                    dvs=dvs,
-                    pdvs=pdvs,
-                    stats=stats,
-                    colmap=self._colmap,
-                    op=op or self._mode,
-                    extra_headers=extra_headers,
-                )
-                return True
-            except ConcurrentCommitError as e:
-                if self._mode != "append":
-                    raise
-                last_err = e  # blind append: rebase against new latest
-        raise last_err
+        def build(base: int) -> Manifest | None:
+            if applied is not None and applied(table):
+                return None
+            self._verify(table, base)
+            carried = base if base and self._mode == "append" else None
+            prev = table._parsed(carried) if carried else Manifest()
+            dirs = prev.dirs + new_dirs
+            return prev.derive(
+                dirs=dirs,
+                schema=self._spark_schema(),
+                colmap=self._colmap,
+                op=op or self._mode,
+                stats=table._stats_for_commit(
+                    new_dirs, carried, dirs, colmap=self._colmap
+                ),
+                **(extra or {}),
+            )
+
+        def rebase(base: int) -> int | None:
+            return table.latest_version() if self._mode == "append" else None
+
+        base = table.latest_version() or 0
+        return _publish_loop(table, base, build, rebase, "write") is not None
 
     def abort(self, messages):
         import shutil
@@ -486,8 +472,8 @@ class VersionedTableStreamWriter(VersionedTableWriter, DataSourceStreamArrowWrit
     vanilla session now completes the whole lakehouse streaming loop —
     readStream (t22/t23) AND writeStream — with zero library imports.
 
-    Exactly-once: each stream commit records ``<txn-app-id>:<batchId>``
-    as an ``#sbatch=`` manifest header (riding the commit CAS).
+    Exactly-once: each stream commit records ``{txn-app-id: batchId}``
+    in the manifest's ``sbatch`` watermark (riding the commit CAS).
     foreachBatch-style redelivery — a crash between the sink commit and
     the engine's checkpoint advance re-runs the SAME batchId — is
     detected by comparing against the newest id recorded FOR THE SAME
@@ -523,30 +509,12 @@ class VersionedTableStreamWriter(VersionedTableWriter, DataSourceStreamArrowWrit
 
     def _newest_stream_batch_id(self, table: VersionedTable) -> int | None:
         """Newest batchId recorded for THIS txn app — other queries'
-        (differently-scoped) lines are invisible, so their id sequences
-        never collide with ours. Scans EVERY ``#sbatch=`` line of a
-        manifest, not just the first: a manifest published by app B
-        carries app A's newest marker as a later header line
-        (``_publish_manifest`` re-emits every app's watermark on every
-        publish), and once vacuum retires A's own marker-bearing
-        manifest that carried line is the only surviving copy — breaking
-        on B's line would lose A's watermark and double-append a
-        crash-redelivered micro-batch. A manifest bearing ANY marker is
-        transitively complete (the carry is total per publish), so if it
-        holds none for this app, this app has never committed — stop."""
-        for v in reversed(table.versions()):
-            lines = table._parsed(v)["sbatch"]
-            best = None
-            for line in lines:
-                app, sep, bid = line[len("#sbatch="):].rpartition(":")
-                if sep and app == self._txn_app:
-                    b = int(bid)
-                    best = b if best is None or b > best else best
-            if best is not None:
-                return best
-            if lines:
-                return None
-        return None
+        (differently-scoped) watermarks never collide with ours. Read
+        from the table's carried watermarks (every publish re-emits
+        every app's newest one, so it survives vacuum retiring the
+        manifest that first recorded it; bounded by the log
+        checkpoint)."""
+        return table._carry().sbatch.get(self._txn_app)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
         import shutil
@@ -563,12 +531,12 @@ class VersionedTableStreamWriter(VersionedTableWriter, DataSourceStreamArrowWrit
             # the replay check also re-runs inside the CAS retry loop:
             # a zombie driver racing its restarted replacement over the
             # SAME batch must lose-and-skip, never rebase-and-duplicate
-            published = self._publish_with_rebase(
+            published = self._publish(
                 table,
                 new_dirs,
                 op="stream append",
-                extra_headers=[f"#sbatch={self._txn_app}:{batchId}"],
-                pre_attempt=_already_applied,
+                extra={"sbatch": {self._txn_app: batchId}},
+                applied=_already_applied,
             )
         if not published:
             # redelivered micro-batch (crash between sink commit and
