@@ -203,9 +203,9 @@ def test_stream_offset_vacuumed_raises(spark, tmp_path):
         t.snapshot_schema(4), {"tabledir": t.dir}
     )
     with pytest.raises(ValueError, match="no longer in the commit log"):
-        reader._added_dirs(2, 4)
+        reader._delta_dirs(2, 4)
     # offset 0 (stream-from-beginning) stays legal
-    assert reader._added_dirs(0, 4)
+    assert any(dirs for _v, dirs in reader._delta_dirs(0, 4))
 
 
 # ------------------------------------------------- superset-key granular

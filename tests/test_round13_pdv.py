@@ -158,7 +158,7 @@ def test_pdv_read_changes_refuses_and_stream_contract(spark, tmp_path):
         t.snapshot_schema(v), {"tabledir": t.dir}
     )
     with pytest.raises(ValueError, match="not a pure append"):
-        reader._added_dirs(v - 1, v)
+        reader._delta_dirs(v - 1, v)
 
 
 def test_pdv_vanilla_batch_source_applies_masks(spark, tmp_path):

@@ -287,7 +287,9 @@ def test_sbatch_marker_survives_vacuum(spark, tmp_path):
 def test_cdf_feed_resolves_renamed_columns(spark, tmp_path):
     """Round-13 review finding: cdf files carry COMMIT-TIME logical
     names; a later rename must resolve through the stable physical id
-    instead of NULL-filling the renamed column."""
+    instead of NULL-filling the renamed column. The library feed and the
+    DataSource feed share one name rule, so both legs (a merge's feed
+    row and a pre-rename append's inserts) resolve on both paths."""
     from weather_etl_docker_airflow_project_spark.operators.versioned import (
         merge_upsert,
         rename_column,
@@ -304,14 +306,28 @@ def test_cdf_feed_resolves_renamed_columns(spark, tmp_path):
         spark.createDataFrame([(3, 99.0)], "k bigint, v double"),
         ["k"],
     )  # v2 stages a cdf file under logical name 'v'
-    rename_column(t, "v", "val")  # v3
+    t.commit(
+        spark.createDataFrame([(20, 20.0), (21, 21.0)], "k bigint, v double"),
+        mode="append",
+    )  # v3: a pre-rename append, its inserts are its data files
+    rename_column(t, "v", "val")  # v4
     feed = (
         spark.read.format("versioned_table")
         .option("tableDir", t.dir)
         .option("readChangeFeed", "true")
-        .option("startingVersion", "1")
+        .option("startingVersion", "0")
         .load()
     )
     upd = feed.filter("_change_type = 'update'").collect()
     assert len(upd) == 1
     assert upd[0].val == 99.0  # resolved through the physical id, not NULL
+    lib_upd = t.read_changes_cdf(1).filter("_change_type = 'update'").collect()
+    assert [r.val for r in lib_upd] == [99.0]
+
+    def inserts(df):
+        rows = df.filter("_change_type = 'insert'").collect()
+        return sorted((r.k, r.val) for r in rows)
+
+    want = [(k, k * 1.0) for k in range(10)] + [(20, 20.0), (21, 21.0)]
+    assert inserts(t.read_changes_cdf(0)) == want
+    assert inserts(feed) == want

@@ -57,7 +57,7 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -285,6 +285,106 @@ def apply_position_mask(tbl, path: str, pdv_parts, invert: bool = False):
     if mask.all():
         return tbl
     return tbl.filter(pa.array(mask))
+
+
+def _source_names(
+    names: list[str],
+    colmap: dict[str, str] | None,
+    commit_colmap: dict[str, str] | None = None,
+) -> dict[str, str | None]:
+    """The ONE column-name rule every versioned-table reader applies:
+    each target column (``names``, logical under the target version's
+    logical->physical ``colmap``) -> the column that holds it in a file,
+    matched through the stable physical id. A data file holds PHYSICAL
+    names. A change-feed file — or a scan already de-logged under its
+    commit's schema — holds the LOGICAL names of its commit: pass that
+    commit's map as ``commit_colmap``, so a column renamed since
+    resolves through its id and one whose id the commit lacked maps to
+    None (NULL-filled: added by evolution). Columns outside the map
+    (unmapped tables, feed metadata) keep their name."""
+    colmap = colmap or {}
+    if commit_colmap is None:
+        return {n: colmap.get(n, n) for n in names}
+    at_commit = {p: n for n, p in commit_colmap.items()}
+    return {n: at_commit.get(colmap[n]) if n in colmap else n for n in names}
+
+
+def read_projected(
+    path: str,
+    schema,
+    names: dict[str, str | None],
+    consts: dict | None = None,
+    pdv_parts=(),
+    invert: bool = False,
+):
+    """The ONE per-file Arrow read every executor-side reader runs (the
+    library's position-vector scan and the three DataSources): read the
+    parquet file at ``path``, apply its position vectors
+    (:func:`apply_position_mask`), and project onto the arrow ``schema``
+    — each field from its ``names`` source column (see
+    :func:`_source_names`) cast to the field type, a ``consts`` field as
+    a constant column, and a field the file lacks (pre-evolution) as
+    NULL, the recorded-schema fill of the JVM reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(path)
+    if pdv_parts:
+        tbl = apply_position_mask(tbl, path, pdv_parts, invert=invert)
+    consts, n = consts or {}, tbl.num_rows
+
+    def column(f):
+        if f.name in consts:
+            return pa.repeat(pa.scalar(consts[f.name], f.type), n)
+        if names.get(f.name) in tbl.column_names:
+            return tbl.column(names[f.name]).cast(f.type)
+        return pa.nulls(n, type=f.type)
+
+    return pa.table([column(f) for f in schema], schema=schema)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The parquet files under ``d``, fully sorted (os.walk's subdir
+    order is OS-arbitrary; stream offsets that SPLIT a commit's file
+    list rely on a stable enumeration)."""
+    return sorted(
+        os.path.join(root, f)
+        for root, _sub, files in os.walk(d)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _feed_schema(schema: StructType) -> StructType:
+    """The change-feed read schema (Delta's): the table's columns plus
+    ``_change_type`` (string) and ``_commit_version`` (long)."""
+    from pyspark.sql.types import LongType, StringType, StructField
+
+    return StructType(
+        list(schema.fields)
+        + [
+            StructField("_change_type", StringType(), False),
+            StructField("_commit_version", LongType(), False),
+        ]
+    )
+
+
+@dataclass(frozen=True)
+class _Delta:
+    """What one commit changed against the commit before it — one step
+    of :meth:`VersionedTable._deltas`: the dirs it added (sorted),
+    whether it removed any, whether its deletion-vector set (paths and
+    coverage) differs, the vectors whose files are new, its change-feed
+    dir and its operation."""
+
+    version: int
+    added: list[str]
+    removed: bool
+    vectors_changed: bool
+    new_dvs: list[dict]
+    new_pdvs: list[dict]
+    cdf: str | None
+    op: str
 
 
 def _dir_bucket(path: str) -> int | None:
@@ -620,6 +720,43 @@ class VersionedTable:
                 return v
         committed = self.versions()
         return committed[-1] if committed else None
+
+    def _resolve(
+        self, version: int | None = None, timestamp: float | None = None
+    ) -> int:
+        """The version a read (or a write's base) resolves to — the ONE
+        implementation behind every reader: ``timestamp`` gives
+        TIMESTAMP AS OF (:meth:`version_at_timestamp`), None the latest
+        version (checkpoint-bounded, O(commits since the checkpoint)),
+        otherwise ``version`` itself, validated by one stat of its
+        manifest. The commit log is listed only to word an error."""
+        if timestamp is not None:
+            if version is not None:
+                raise ValueError("pass version= OR timestamp=, not both")
+            return self.version_at_timestamp(timestamp)
+        v = self.latest_version() if version is None else version
+        if v is not None and os.path.exists(
+            os.path.join(self._versions, str(v))
+        ):
+            return v
+        committed = self.versions()
+        if not committed:
+            raise ValueError(f"versioned table at {self.dir} has no commits")
+        raise ValueError(
+            f"version {v} not committed at {self.dir} (have {committed})"
+        )
+
+    def _recorded_schema(self, version: int) -> StructType:
+        """:meth:`snapshot_schema`, required: the Arrow readers project
+        onto it and cannot footer-scan for one."""
+        schema = self.snapshot_schema(version)
+        if schema is None:
+            raise ValueError(
+                f"versioned table at {self.dir} version {version} has no "
+                "recorded manifest schema (pre-tracking manifest) — "
+                "commit once to record it"
+            )
+        return schema
 
     def _tail_versions_desc(self) -> "tuple[list[int], dict | None]":
         """(versions newer than the checkpoint, newest first; the
@@ -1583,31 +1720,49 @@ class VersionedTable:
         (parquet missing-column fill), and planning never footer-scans
         for a merged schema — each version reads with ITS OWN recorded
         schema, so time travel across an evolution is exact."""
-        if timestamp is not None:
-            if version is not None:
-                raise ValueError("pass version= OR timestamp=, not both")
-            version = self.version_at_timestamp(timestamp)
-        if version is None:
-            # checkpoint-bounded latest resolution: O(commits since the
-            # checkpoint), never an O(all-commits) listing
-            v = self.latest_version()
-            if v is None:
-                raise ValueError(
-                    f"versioned table at {self.dir} has no commits"
-                )
-        else:
-            v = version
-            if not os.path.exists(os.path.join(self._versions, str(v))):
-                committed = self.versions()
-                if not committed:
-                    raise ValueError(
-                        f"versioned table at {self.dir} has no commits"
-                    )
-                raise ValueError(
-                    f"version {v} not committed at {self.dir} "
-                    f"(have {committed})"
-                )
+        v = self._resolve(version, timestamp)
         return self._read_dirs(self._manifest(v), v)
+
+    def _coverage(
+        self, version: int, dirs: list[str]
+    ) -> dict[str, tuple[tuple[str, ...], tuple[str, ...]]]:
+        """``{dir: (key-set vector paths, position-vector paths)}``: the
+        version's deletion vectors covering each of ``dirs`` (matched by
+        realpath — a clone's vectors name the source's dirs). The one
+        coverage rule of the library scan and the batch DataSource."""
+        m = self._parsed(version)
+        kinds = [
+            [(v["path"], {os.path.realpath(c) for c in v["covers"]}) for v in vs]
+            for vs in (m.dvs, m.pdvs)
+        ]
+        out = {}
+        for d in dirs:
+            rd = os.path.realpath(d)
+            out[d] = tuple(
+                tuple(sorted(p for p, covered in kind if rd in covered))
+                for kind in kinds
+            )
+        return out
+
+    def _prune(
+        self, version: int, dirs: list[str], may_match: Callable[[dict], bool]
+    ) -> tuple[list[str], list[str]]:
+        """Split ``dirs`` into (kept, pruned) by the version's recorded
+        per-dir stats (looked up by path, then realpath): a dir is
+        pruned only when ``may_match(stats)`` PROVES no row matches — a
+        dir without stats, or whose stats cannot be compared, is kept."""
+        stats = self._parsed(version).stats
+        stats_real = {os.path.realpath(d): s for d, s in stats.items()}
+        keep: list[str] = []
+        pruned: list[str] = []
+        for d in dirs:
+            s = stats.get(d) or stats_real.get(os.path.realpath(d))
+            try:
+                hit = s is None or may_match(s)
+            except (TypeError, ValueError, ArithmeticError):
+                hit = True  # a literal the stats cannot be compared with
+            (keep if hit else pruned).append(d)
+        return keep, pruned
 
     def _read_dirs(self, dirs: list[str], version: int) -> DataFrame:
         """Scan a subset of a version's dirs under the VERSION's recorded
@@ -1650,28 +1805,11 @@ class VersionedTable:
             def _delog(df):
                 return df
 
-        dvs = self.deletion_vectors(version)
-        pdvs = self.position_dvs(version)
-        if not dvs and not pdvs:
+        if not self.deletion_vectors(version) and not self.position_dvs(version):
             return _delog(reader.parquet(*dirs))
-        cover_sets = [
-            (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-            for dv in dvs
-        ]
-        pdv_cover = [
-            (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-            for dv in pdvs
-        ]
         groups: dict[tuple, list[str]] = {}
-        for d in dirs:
-            rd = os.path.realpath(d)
-            covering = tuple(
-                sorted(p for p, covered in cover_sets if rd in covered)
-            )
-            pcovering = tuple(
-                sorted(p for p, covered in pdv_cover if rd in covered)
-            )
-            groups.setdefault((covering, pcovering), []).append(d)
+        for d, cover in self._coverage(version, dirs).items():
+            groups.setdefault(cover, []).append(d)
         parts = []
         for (covering, pcovering), group in groups.items():
             if pcovering:
@@ -1711,7 +1849,8 @@ class VersionedTable:
     ) -> DataFrame:
         """Scan ``dirs`` with POSITION deletion vectors applied as
         per-file row masks (the round-13 flat-in-|DV| read): one Spark
-        task per slice of the file list; each task pyarrow-reads its
+        task per slice of the file list; each task runs the shared
+        per-file kernel (:func:`read_projected`) — pyarrow-reads its
         data file, loads ONLY the vector rows covering that file
         (parquet filter pushdown on the sorted ``file`` column —
         row-group pruning makes this O(positions for this file), not
@@ -1722,22 +1861,10 @@ class VersionedTable:
         key-set DV bound SCALE.md §r12 measured is gone for this
         representation). ``invert=True`` returns the rows AT the
         positions instead (the deleted rows — the manifest-CDC leg)."""
-        from pyspark.sql import functions as F  # noqa: F401
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = self.snapshot_schema(version)
-        if schema is None:
-            raise ValueError(
-                f"position-vector read at {self.dir} needs a recorded "
-                "manifest schema (pre-tracking manifest)"
-            )
-        colmap = self.column_mapping(version) or {}
-        files = sorted(
-            os.path.join(root, fname)
-            for d in dirs
-            for root, _sub, fs in os.walk(d)
-            for fname in fs
-            if fname.endswith(".parquet")
-        )
+        schema = self._recorded_schema(version)
+        files = sorted(f for d in dirs for f in _parquet_files(d))
         spec = self.spark.createDataFrame(
             [(f,) for f in files], "path string"
         )
@@ -1745,44 +1872,18 @@ class VersionedTable:
         spec = spec.repartition(max(1, min(len(files), par)))
         # vector part files resolved ONCE at plan time (driver metadata);
         # each task filter-reads only its file's rows from them
-        pdv_parts = [
-            os.path.join(root, fname)
-            for p in pdv_paths
-            for root, _sub, fs in os.walk(p)
-            for fname in sorted(fs)
-            if fname.endswith(".parquet")
-        ]
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+        pdv_parts = [f for p in pdv_paths for f in _parquet_files(p)]
         arrow_schema = to_arrow_schema(schema)
-        phys = dict(colmap)
+        names = _source_names(arrow_schema.names, self.column_mapping(version))
         inverted = bool(invert)
 
         def _masked(batches):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
             for b in batches:
                 for path in b.column(0).to_pylist():
-                    tbl = pq.read_table(path)
-                    tbl = apply_position_mask(
-                        tbl, path, pdv_parts, invert=inverted
-                    )
-                    cols = {}
-                    for field in arrow_schema:
-                        fname = phys.get(field.name, field.name)
-                        if fname in tbl.column_names:
-                            cols[field.name] = tbl.column(fname).cast(
-                                field.type
-                            )
-                        else:
-                            # pre-evolution file: evolved-in column
-                            # surfaces NULL (recorded-schema fill)
-                            cols[field.name] = pa.nulls(
-                                tbl.num_rows, type=field.type
-                            )
-                    out = pa.table(cols, schema=arrow_schema)
-                    yield from out.to_batches()
+                    yield from read_projected(
+                        path, arrow_schema, names,
+                        pdv_parts=pdv_parts, invert=inverted,
+                    ).to_batches()
 
         return spec.mapInArrow(_masked, schema)
 
@@ -1817,25 +1918,9 @@ class VersionedTable:
         Returns ``(DataFrame, report)`` where the report carries
         ``total_dirs`` / ``scanned_dirs`` / ``pruned_dirs``."""
         dnf, cond = _normalize_predicates(predicates)
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValueError(f"versioned table at {self.dir} has no commits")
-        if not os.path.exists(os.path.join(self._versions, str(v))):
-            raise ValueError(
-                f"version {v} not committed at {self.dir} "
-                f"(have {self.versions()})"
-            )
+        v = self._resolve(version)
         dirs = self._manifest(v)
-        stats = self.dir_stats(v)
-        stats_real = {os.path.realpath(d): s for d, s in stats.items()}
-        keep: list[str] = []
-        pruned: list[str] = []
-        for d in dirs:
-            s = stats.get(d) or stats_real.get(os.path.realpath(d))
-            if s is None or _dnf_may_match(s, dnf):
-                keep.append(d)
-            else:
-                pruned.append(d)
+        keep, pruned = self._prune(v, dirs, lambda s: _dnf_may_match(s, dnf))
         if keep:
             df = self._read_dirs(keep, v)
         else:
@@ -1857,14 +1942,7 @@ class VersionedTable:
         don't cover the bucket keys, or pre-layout dirs are present —
         same result, no pruning. NULL lookup keys match nothing (plain
         equality, consistent with merge/delete)."""
-        committed = self.versions()
-        if not committed:
-            raise ValueError(f"versioned table at {self.dir} has no commits")
-        v = committed[-1] if version is None else version
-        if v not in committed:
-            raise ValueError(
-                f"version {v} not committed at {self.dir} (have {committed})"
-            )
+        v = self._resolve(version)
         split = _granular_split(self, v, keys_df, keys)
         if split is not None:
             _carry, touched_dirs = split[0], split[1]
@@ -1874,6 +1952,93 @@ class VersionedTable:
         else:
             base = self.read(version=v)
         return base.join(keys_df.select(*keys), keys, "left_semi")
+
+    def _deltas(
+        self, v_from: int, v_to: int, complete: bool = False
+    ) -> Iterator[_Delta]:
+        """What each commit in ``(v_from, v_to]`` changed — the ONE
+        comparison of consecutive manifests behind every incremental
+        reader (the file-level and row-level change reads, both
+        streams, the change-feed DataSource). ``v_from`` 0 replays from
+        the beginning: the first surviving manifest counts as all
+        added. O(range) existence probes, never a commit-log listing:
+        versions are allocated contiguously and retention retires only
+        a prefix. Raises when ``v_from`` was vacuumed (defaulting its
+        dirs to empty would re-deliver the whole next manifest as added
+        — silent duplicates; Delta's "files were deleted" streaming
+        failure) and, with ``complete``, when a replay from 0 would
+        start past vacuumed history (a change feed needs every
+        commit — Delta's "cannot read version" CDF error)."""
+        committed = [
+            v
+            for v in range(max(v_from, 1), v_to + 1)
+            if os.path.exists(os.path.join(self._versions, str(v)))
+        ]
+        if v_from and committed[:1] != [v_from]:
+            raise ValueError(
+                f"stream offset version {v_from} is no longer in the "
+                f"commit log at {self.dir} (vacuumed under an active "
+                "stream?); the delta from it is undefined — raise the "
+                "table's vacuum retention above the stream's lag and "
+                "restart from a fresh startingVersion"
+            )
+        if complete and not v_from and committed[:1] not in ([], [1]):
+            raise ValueError(
+                f"change feed from version 0 at {self.dir} is incomplete: "
+                f"history before version {committed[0]} was vacuumed; "
+                "start from a version whose manifest survives and "
+                "bootstrap the replica from a snapshot read"
+            )
+
+        def vectors(m: Manifest) -> set[tuple]:
+            return {
+                (kind, v["path"], *v["covers"])
+                for kind, vs in (("dv", m.dvs), ("pdv", m.pdvs))
+                for v in vs
+            }
+
+        prev = self._parsed(v_from) if v_from else Manifest()
+        for v in committed[1 if v_from else 0 :]:
+            m = self._parsed(v)
+            prev_dirs, cur_dirs = set(prev.dirs), set(m.dirs)
+            old = {x["path"] for x in prev.dvs + prev.pdvs}
+            yield _Delta(
+                version=v,
+                added=sorted(cur_dirs - prev_dirs),
+                removed=not prev_dirs <= cur_dirs,
+                vectors_changed=vectors(prev) != vectors(m),
+                new_dvs=[x for x in m.dvs if x["path"] not in old],
+                new_pdvs=[x for x in m.pdvs if x["path"] not in old],
+                cdf=m.cdf,
+                op=m.op or "unknown",
+            )
+            prev = m
+
+    def _feed(
+        self, v_from: int, v_to: int
+    ) -> Iterator[tuple[_Delta, str | None]]:
+        """The change-feed rule both feed readers (:meth:`read_changes_cdf`
+        and the feed DataSources) apply per commit in ``(v_from,
+        v_to]``: ``"cdf"`` — the commit recorded a feed, read its
+        ``d.cdf`` files; ``"insert"`` — a pure append, its added dirs
+        are its inserts; None — a row-preserving rewrite
+        (``compact``/``zorder``, Delta's dataChange=false). Any other
+        row-changing commit never recorded its row delta and raises."""
+        for d in self._deltas(v_from, v_to, complete=True):
+            if d.cdf is not None:
+                yield d, "cdf"
+            elif not d.removed and not d.vectors_changed:
+                yield d, "insert"
+            elif d.op in ("compact", "zorder"):
+                yield d, None
+            else:
+                raise ValueError(
+                    f"commit {d.version} at {self.dir} changed rows but "
+                    f"recorded no change data feed (op={d.op!r}); "
+                    "enable_change_data_feed() before row-changing "
+                    "writes, or use read_changes_cdc for a keyed "
+                    "snapshot diff"
+                )
 
     def read_changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Incremental scan: the rows ADDED between ``v_from`` (exclusive)
@@ -1886,37 +2051,30 @@ class VersionedTable:
         difference: only the batch dirs committed after ``v_from`` are
         opened, so the scan costs O(changed data), never O(table) — at
         100 TB, consuming a day's appends reads a day's files. Raises if
-        the range crosses an ``overwrite`` commit (the newer manifest no
-        longer contains the older one's dirs — the diff is not
-        expressible as added files; consumers must re-read the snapshot,
-        same contract as Delta's CDF on non-append commits)."""
-        committed = self.versions()
-        if v_to is None:
-            v_to = committed[-1] if committed else 0
-        for v in (v_from, v_to):
-            if v not in committed:
-                raise ValueError(
-                    f"version {v} not committed at {self.dir} (have {committed})"
-                )
+        the range holds a commit that is not a pure append: an
+        ``overwrite`` (dirs removed — the diff is not expressible as
+        added files; consumers must re-read the snapshot, same contract
+        as Delta's CDF on non-append commits) or a deletion-vector
+        commit (rows removed without a dir change)."""
+        v_from, v_to = self._resolve(v_from), self._resolve(v_to)
         if v_to < v_from:
             raise ValueError(f"v_to {v_to} < v_from {v_from}")
-        from_dirs = set(self._manifest(v_from))
-        to_dirs = self._manifest(v_to)
-        if not from_dirs <= set(to_dirs):
-            raise ValueError(
-                f"versions {v_from}..{v_to} at {self.dir} cross an overwrite "
-                "commit; the delta is not an append set — re-read the snapshot"
-            )
-        if self.deletion_vectors(v_from) != self.deletion_vectors(
-            v_to
-        ) or self.position_dvs(v_from) != self.position_dvs(v_to):
-            raise ValueError(
-                f"versions {v_from}..{v_to} at {self.dir} cross a "
-                "deletion-vector commit; rows were removed, so the delta "
-                "is not an append set — use read_changes_cdc for row-level "
-                "changes"
-            )
-        new_dirs = [d for d in to_dirs if d not in from_dirs]
+        new_dirs: list[str] = []
+        for d in self._deltas(v_from, v_to):
+            if d.removed:
+                raise ValueError(
+                    f"versions {v_from}..{v_to} at {self.dir} cross an "
+                    "overwrite commit; the delta is not an append set — "
+                    "re-read the snapshot"
+                )
+            if d.vectors_changed:
+                raise ValueError(
+                    f"versions {v_from}..{v_to} at {self.dir} cross a "
+                    "deletion-vector commit; rows were removed, so the "
+                    "delta is not an append set — use read_changes_cdc "
+                    "for row-level changes"
+                )
+            new_dirs += d.added
         if not new_dirs:
             return self.read(version=v_to).limit(0)  # schema-only, no data
         # through _read_dirs, not a raw read: the delta must surface
@@ -1931,116 +2089,65 @@ class VersionedTable:
         SQL ``table_changes('t', v_from, v_to)``, the batch twin of the
         T23 stream (same schema: the table's columns plus
         ``_change_type`` / ``_commit_version``). Per commit in
-        ``(v_from, v_to]``:
+        ``(v_from, v_to]`` (the shared rule, :meth:`_feed`):
 
         - a commit with a recorded feed (``#cdf=`` header) contributes
           its staged change rows — O(changed rows), no snapshot diff;
         - a pure APPEND contributes its added dirs as ``insert`` rows
           (no feed file is ever written for appends — the delta IS the
-          added files), read under the commit's recorded schema and
-          column mapping like any bucket-pruned scan;
+          added files), read under the commit's own schema, column
+          mapping and vectors — a row deleted later still appears as
+          its insert;
         - row-preserving rewrites (``compact``/``zorder`` ops)
           contribute nothing (dataChange=false);
         - any other feed-less commit raises — its row delta was never
           recorded; :meth:`read_changes_cdc` is the keyed-snapshot-diff
           fallback that can reconstruct it at two-snapshot cost.
 
-        Unlike the key-only :meth:`read_changes_cdc`, rows carry FULL
-        payloads (the feed stores them), so a consumer needs no
+        Both legs hold the logical names of their commit and resolve to
+        ``v_to``'s columns through the stable physical id
+        (:func:`_source_names`), so a column renamed since surfaces its
+        values. Unlike the key-only :meth:`read_changes_cdc`, rows carry
+        FULL payloads (the feed stores them), so a consumer needs no
         version-pinned payload attach."""
         from pyspark.sql import functions as F
 
-        committed = self.versions()
-        if not committed:
-            raise ValueError(
-                f"versioned table at {self.dir} has no commits"
-            )
-        if v_to is None:
-            v_to = committed[-1]
-        for v in (v_from, v_to):
-            if v != 0 and v not in committed:
-                raise ValueError(
-                    f"version {v} not committed at {self.dir} "
-                    f"(have {committed})"
-                )
+        if v_from:
+            self._resolve(v_from)
+        v_to = self._resolve(v_to)
         if v_to < v_from:
             raise ValueError(f"v_to {v_to} < v_from {v_from}")
-        if v_from == 0 and committed and committed[0] != 1:
-            raise ValueError(
-                f"change feed from version 0 at {self.dir} is incomplete: "
-                f"history before version {committed[0]} was vacuumed"
-            )
-        schema = self.snapshot_schema(v_to)
-        cols = [f.name for f in schema.fields] if schema else None
-        prev_dirs = (
-            set(self._manifest(v_from)) if v_from in committed else set()
-        )
-        prev_dvs = (
-            (self.deletion_vectors(v_from), self.position_dvs(v_from))
-            if v_from in committed
-            else ([], [])
-        )
-        parts: list[DataFrame] = []
-        for v in sorted(c for c in committed if v_from < c <= v_to):
-            cur_dirs = set(self._manifest(v))
-            cur_dvs = (self.deletion_vectors(v), self.position_dvs(v))
-            cdf = self.cdf_path(v)
-            if cdf is not None:
-                part = self.spark.read.parquet(cdf)
-                if cols:
-                    # pre-evolution feed files NULL-fill evolved columns
-                    for c in cols:
-                        if c not in part.columns:
-                            part = part.withColumn(
-                                c,
-                                F.lit(None).cast(
-                                    schema[c].dataType  # type: ignore[index]
-                                ),
-                            )
-                    part = part.select(*cols, "_change_type")
-                parts.append(
-                    part.withColumn(
-                        "_commit_version", F.lit(v).cast("long")
-                    )
-                )
-            elif not (prev_dirs - cur_dirs) and cur_dvs == prev_dvs:
-                added = [d for d in self._manifest(v) if d not in prev_dirs]
-                if added:
-                    batch = self._read_dirs(added, v)
-                    if cols:
-                        for c in cols:
-                            if c not in batch.columns:
-                                batch = batch.withColumn(
-                                    c, F.lit(None).cast(schema[c].dataType)
-                                )
-                        batch = batch.select(*cols)
-                    parts.append(
-                        batch.withColumn(
-                            "_change_type", F.lit("insert")
-                        ).withColumn(
-                            "_commit_version", F.lit(v).cast("long")
-                        )
-                    )
-            elif self.commit_op(v) in ("compact", "zorder"):
-                pass
+        target = _feed_schema(self._recorded_schema(v_to))
+        colmap = self.column_mapping(v_to)
+        out = None
+        for d, kind in self._feed(v_from, v_to):
+            if kind == "cdf":
+                df, consts = self.spark.read.parquet(d.cdf), {}
+            elif kind == "insert" and d.added:
+                df = self._read_dirs(d.added, d.version)
+                consts = {"_change_type": "insert"}
             else:
-                raise ValueError(
-                    f"commit {v} at {self.dir} changed rows but recorded "
-                    f"no change data feed (op={self.commit_op(v)!r}); "
-                    "enable_change_data_feed() before row-changing "
-                    "writes, or use read_changes_cdc for a keyed "
-                    "snapshot diff"
-                )
-            prev_dirs, prev_dvs = cur_dirs, cur_dvs
-        if not parts:
-            empty = self.read(version=v_to).limit(0)
-            return empty.withColumn(
-                "_change_type", F.lit("insert")
-            ).withColumn("_commit_version", F.lit(0).cast("long"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                continue
+            consts["_commit_version"] = d.version
+            names = _source_names(
+                target.names, colmap, self.column_mapping(d.version)
+            )
+            part = df.select(
+                *[
+                    (
+                        F.lit(consts[f.name])
+                        if f.name in consts
+                        else df[names[f.name]]
+                        if names[f.name] in df.columns
+                        else F.lit(None)
+                    )
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    for f in target.fields
+                ]
+            )
+            out = part if out is None else out.unionByName(part)
+        return out if out is not None else self.spark.createDataFrame([], target)
 
     def _bucket_pruned_sides(
         self, old_dirs: list[str], new_dirs: list[str], keys: list[str]
@@ -2120,14 +2227,7 @@ class VersionedTable:
         deliberate: consumers replaying into a sink need the commit
         boundaries, and a net diff is one ``groupBy(keys).max(version)``
         away for those that don't."""
-        committed = self.versions()
-        if v_to is None:
-            v_to = committed[-1] if committed else 0
-        for v in (v_from, v_to):
-            if v not in committed:
-                raise ValueError(
-                    f"version {v} not committed at {self.dir} (have {committed})"
-                )
+        v_from, v_to = self._resolve(v_from), self._resolve(v_to)
         if v_to < v_from:
             raise ValueError(f"v_to {v_to} < v_from {v_from}")
         from pyspark.sql import functions as F
@@ -2135,15 +2235,10 @@ class VersionedTable:
         from .cdc import snapshot_diff
 
         parts: list[DataFrame] = []
-        span = [v for v in committed if v_from <= v <= v_to]
-        for prev_v, v in zip(span, span[1:]):
-            prev_dirs = set(self._manifest(prev_v))
-            to_dirs = self._manifest(v)
-            prev_dvs = self.deletion_vectors(prev_v)
-            cur_dvs = self.deletion_vectors(v)
-            prev_pdvs = self.position_dvs(prev_v)
-            cur_pdvs = self.position_dvs(v)
-            if prev_dirs <= set(to_dirs):  # append and/or DV commit
+        v = v_from
+        for d in self._deltas(v_from, v_to):
+            prev_v, v = v, d.version
+            if not d.removed:  # append and/or DV commit
                 if keys is None:
                     raise ValueError(
                         "read_changes_cdc needs keys=[...] for row-level "
@@ -2155,10 +2250,7 @@ class VersionedTable:
                 # (dv keys semi-joined to the prior snapshot, bucket-
                 # pruned by read_at_keys; a dv key absent from the
                 # table produces no phantom delete)
-                prev_dv_paths = {dv["path"] for dv in prev_dvs}
-                for dv in cur_dvs:
-                    if dv["path"] in prev_dv_paths:
-                        continue
+                for dv in d.new_dvs:
                     dv_keys = self.spark.read.parquet(dv["path"]).select(
                         *keys
                     )
@@ -2177,10 +2269,7 @@ class VersionedTable:
                 # recorded only rows visible at its base, so this leg
                 # emits no phantom deletes (inverted per-file mask scan,
                 # O(positions) work)
-                prev_pdv_paths = {dv["path"] for dv in prev_pdvs}
-                for dv in cur_pdvs:
-                    if dv["path"] in prev_pdv_paths:
-                        continue
+                for dv in d.new_pdvs:
                     deleted = self._pdv_masked_scan(
                         dv["covers"], v, (dv["path"],), invert=True
                     )
@@ -2191,14 +2280,13 @@ class VersionedTable:
                             F.lit(v).cast("long").alias("commit_version"),
                         )
                     )
-                new_dirs = [d for d in to_dirs if d not in prev_dirs]
-                if not new_dirs:
+                if not d.added:
                     continue
                 # _read_dirs, not a raw parquet read: the batch must be
                 # scanned under the version's recorded schema AND its
                 # column mapping (raw physical names would not resolve
                 # the logical keys — caught by a mapped-CDC pytest)
-                batch = self._read_dirs(new_dirs, v)
+                batch = self._read_dirs(d.added, v)
                 parts.append(
                     batch.select(
                         *keys,
@@ -2223,14 +2311,9 @@ class VersionedTable:
                 # carried dirs, which pruning handles because touched
                 # dirs left the manifest)
                 pruned = self._bucket_pruned_sides(
-                    sorted(prev_dirs), to_dirs, keys
+                    self._manifest(prev_v), self._manifest(v), keys
                 )
-                if pruned is not None and (
-                    {dv["path"] for dv in cur_dvs}
-                    - {dv["path"] for dv in prev_dvs}
-                    or {dv["path"] for dv in cur_pdvs}
-                    - {dv["path"] for dv in prev_pdvs}
-                ):
+                if pruned is not None and (d.new_dvs or d.new_pdvs):
                     pruned = None
                 if pruned is not None:
                     old_dirs, new_dirs2 = pruned
@@ -2259,12 +2342,13 @@ class VersionedTable:
                 old_map = self.column_mapping(prev_v)
                 new_map = self.column_mapping(v)
                 if old_map and new_map:
-                    phys_to_old = {p: n for n, p in old_map.items()}
-                    renames = {}
-                    for nl, p in new_map.items():
-                        ol = phys_to_old.get(p)
-                        if ol is not None and ol != nl:
-                            renames[ol] = nl
+                    renames = {
+                        ol: nl
+                        for nl, ol in _source_names(
+                            list(new_map), new_map, old_map
+                        ).items()
+                        if ol not in (None, nl)
+                    }
                     if renames:
                         old = old.select(
                             *[
@@ -2379,10 +2463,7 @@ def compact_incremental(
     re-running compaction on a compacted table publishes nothing.
     Row-preserving like compact: no change-feed entry (dataChange=false;
     the CDF stream skips ``op=compact``)."""
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     dirs = table._manifest(base_version)
     fstats = {d: _dir_file_stats(d) for d in dirs}
     n_files_before = sum(n for n, _b in fstats.values())
@@ -2481,10 +2562,7 @@ def compact(
     rewrites only fragmented dirs/buckets and carries the rest by
     manifest reference — the same scoping discipline as incremental
     OPTIMIZE ZORDER."""
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     dirs = table._manifest(base_version)
     total_bytes = 0
     n_files = 0
@@ -2793,10 +2871,7 @@ def merge_upsert(
     """
     if not keys:
         raise ValueError("merge_upsert needs at least one merge key")
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     # Materialize the source ONCE (r15): the merge consumes it up to
     # five times (granular bucket split, duplicate-key validation, CDF
     # matched-key broadcast, change-row staging, the merged union), and
@@ -3308,10 +3383,7 @@ def delete_by_keys(
     semantics, pytest-pinned."""
     if not keys:
         raise ValueError("delete_by_keys needs at least one key")
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     # materialize the key feed once — it feeds the bucket split, the
     # anti-join, the CDF semi-join (and the MOR distinct) through
     # lineage otherwise; same rationale/level as merge_upsert's source
@@ -3519,10 +3591,7 @@ def cluster_rewrite(
     pred_dnf = _normalize_predicates(predicate)[0] if predicate else None
     from pyspark.sql import functions as F
 
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     scope = table._manifest(base_version)
     if incremental:
         scope = [d for d in scope if not _dir_zchunk(d)]
@@ -3693,14 +3762,11 @@ def _predicate_scope(
     nothing to update/delete there. ``dnf`` comes from
     :func:`_normalize_predicates`; under disjunction a dir carries only
     when every disjunct misses it."""
-    stats = table.dir_stats(base_version)
-    stats_real = {os.path.realpath(d): s for d, s in stats.items()}
-    return [
-        d
-        for d in table._manifest(base_version)
-        if (s := stats.get(d) or stats_real.get(os.path.realpath(d))) is None
-        or _dnf_may_match(s, dnf)
-    ]
+    return table._prune(
+        base_version,
+        table._manifest(base_version),
+        lambda s: _dnf_may_match(s, dnf),
+    )[0]
 
 
 def _predicate_condition(predicates: list[tuple]) -> Column:
@@ -3796,10 +3862,7 @@ def update_where(
 
     if not set_exprs:
         raise ValueError("update_where needs at least one SET expression")
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     dnf, cond = _normalize_predicates(predicates)
     scope = _predicate_scope(table, base_version, dnf)
     if not scope:
@@ -3868,10 +3931,7 @@ def delete_where(
     semantics); column-agnostic, so renames never block on it."""
     from pyspark.sql import functions as F
 
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base_version = committed[-1]
+    base_version = table._resolve()
     dnf, cond = _normalize_predicates(predicates)
     scope = _predicate_scope(table, base_version, dnf)
     if not scope:
@@ -4219,10 +4279,7 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
     constraint or an active deletion vector references the column (their
     semantics key on the name outside the manifest)."""
     _mapped_schema_commit_guards(table, old, "rename")
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base = committed[-1]
+    base = table._resolve()
     m = table._parsed(base)
     schema = table.snapshot_schema(base)
     names = [f.name for f in schema.fields]
@@ -4279,10 +4336,7 @@ def drop_column(table: VersionedTable, col: str) -> int:
     them); constraint- or DV-referenced columns are refused like
     rename."""
     _mapped_schema_commit_guards(table, col, "drop")
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    base = committed[-1]
+    base = table._resolve()
     layout = table.layout()
     if layout is not None and col in layout["bucket_keys"]:
         raise ValueError(
@@ -4327,12 +4381,7 @@ def restore(table: VersionedTable, to_version: int) -> int:
     no special casing. Publication rides the same CAS as every commit
     (base+1 or :class:`ConcurrentCommitError`). Fails cleanly when the
     target snapshot's data has already been vacuumed."""
-    committed = table.versions()
-    if to_version not in committed:
-        raise ValueError(
-            f"version {to_version} not committed at {table.dir} "
-            f"(have {committed})"
-        )
+    table._resolve(to_version)
     dirs = table._manifest(to_version)
     missing = [d for d in dirs if not os.path.isdir(d)]
     if missing:
@@ -4340,7 +4389,7 @@ def restore(table: VersionedTable, to_version: int) -> int:
             f"cannot restore to version {to_version}: {len(missing)} of "
             f"its data dirs were vacuumed (first: {missing[0]})"
         )
-    return_version = committed[-1] + 1
+    return_version = table._resolve() + 1
     table._publish_manifest(
         table._parsed(to_version).derive(
             schema=table.snapshot_schema(to_version),
@@ -4378,14 +4427,7 @@ def clone(
     clone + :func:`compact` (the rewrite re-homes every row into the
     clone's own storage).
     """
-    committed = table.versions()
-    if not committed:
-        raise ValueError(f"versioned table at {table.dir} has no commits")
-    v = committed[-1] if version is None else version
-    if v not in committed:
-        raise ValueError(
-            f"version {v} not committed at {table.dir} (have {committed})"
-        )
+    v = table._resolve(version)
     target = VersionedTable(table.spark, target_dir)
     if target.versions():
         raise ValueError(f"clone target {target_dir} already has commits")

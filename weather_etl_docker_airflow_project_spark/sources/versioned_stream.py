@@ -30,6 +30,7 @@ Implemented with the Python DataSource streaming API (pyspark 4,
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql.datasource import (
@@ -39,7 +40,14 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..operators.versioned import VersionedTable
+from ..operators.versioned import (
+    VersionedTable,
+    _dir_may_match,
+    _feed_schema,
+    _parquet_files,
+    _source_names,
+    read_projected,
+)
 
 
 class _FileSlice(InputPartition):
@@ -47,39 +55,41 @@ class _FileSlice(InputPartition):
         self.path = path
 
 
-def _parquet_files(d: str) -> list[str]:
-    out = []
-    for root, _sub, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.append(os.path.join(root, f))
-    # fully sorted (os.walk's subdir order is OS-arbitrary): offsets
-    # that SPLIT a commit's file list rely on a stable enumeration
-    return sorted(out)
+def _open(options, source: str) -> VersionedTable:
+    table_dir = options.get("tabledir") or options.get("path")
+    if not table_dir:
+        raise ValueError(f"{source} needs .option('tableDir', ...)")
+    # VersionedTable's manifest accessors are pure path arithmetic — no
+    # SparkSession needed on this side
+    return VersionedTable(None, table_dir)
 
 
-def _dv_lines(table: VersionedTable, version: int) -> set[str]:
-    # both vector kinds count: a position-vector commit changes visible
-    # rows without touching dirs, exactly like a key-set DV commit
-    return {
-        dv["path"] + "::" + "::".join(dv["covers"])
-        for dv in table.deletion_vectors(version)
-    } | {
-        "pdv::" + dv["path"] + "::" + "::".join(dv["covers"])
-        for dv in table.position_dvs(version)
-    }
+def _as_of(table: VersionedTable, options) -> int:
+    """The snapshot a batch read resolves to: ``versionAsOf`` /
+    ``timestampAsOf`` (epoch seconds), else the latest version."""
+    v, ts = options.get("versionasof"), options.get("timestampasof")
+    return table._resolve(
+        None if v is None else int(v), None if ts is None else float(ts)
+    )
 
 
-class VersionedTableStreamReader(DataSourceStreamReader):
+class _ArrowSchema:
+    """The declared schema as Arrow, derived LAZILY (r16): reader
+    ``__init__`` also runs in the long-lived offsets/partitions runner
+    process, which never reads data — deferring ``to_arrow_schema``
+    keeps pyarrow (~0.2s import) out of that process entirely; executor
+    ``read()`` tasks compute it once per unpickled reader instance."""
+
+    @functools.cached_property
+    def _arrow_schema(self):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(self._schema)
+
+
+class VersionedTableStreamReader(_ArrowSchema, DataSourceStreamReader):
     def __init__(self, schema, options):
-        table_dir = options.get("tabledir") or options.get("path")
-        if not table_dir:
-            raise ValueError(
-                "versioned_table_stream needs .option('tableDir', ...)"
-            )
-        # VersionedTable's manifest accessors are pure path arithmetic —
-        # no SparkSession needed on this side
-        self._table = VersionedTable(None, table_dir)
+        self._table = _open(options, "versioned_table_stream")
         self._start = int(options.get("startingversion", 0))
         self._ignore_changes = (
             str(options.get("ignorechanges", "false")).lower() == "true"
@@ -90,13 +100,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         self._per_batch_files = int(options.get("maxfilesperbatch", 0))
         self._pace_dir = options.get("pacestatedir")
         self._last_end: tuple[int, int] | None = None
-        # arrow schema is derived LAZILY (r16): __init__ also runs in the
-        # long-lived offsets/partitions runner process, which never reads
-        # data — deferring to_arrow_schema keeps pyarrow (~0.2s import)
-        # out of that process entirely; executor read() tasks compute it
-        # once per unpickled reader instance
         self._schema = schema
-        self._arrow_schema_cache = None
         # column mapping: files carry PHYSICAL names; the stream's
         # declared schema is logical. Physical ids are stable across
         # renames, so the map captured at plan time reads every commit
@@ -105,25 +109,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         self._phys = (
             self._table.column_mapping(head) if head is not None else None
         ) or {}
-
-    @property
-    def _arrow_schema(self):
-        # defensive getattr: a property getter's internal AttributeError
-        # is masked by the descriptor protocol into "object has no
-        # attribute '_arrow_schema'" — surface real failures instead,
-        # and tolerate an instance snapshot pickled by a pre-lazy
-        # version of this class (its __dict__ carries the eager field,
-        # shadowed by this data descriptor)
-        cached = getattr(self, "_arrow_schema_cache", None)
-        if cached is None:
-            schema = getattr(self, "_schema", None)
-            if schema is None:
-                return self.__dict__["_arrow_schema"]
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            cached = to_arrow_schema(schema)
-            self._arrow_schema_cache = cached
-        return cached
 
     @staticmethod
     def _off_tuple(offset: dict) -> tuple[int, int]:
@@ -247,48 +232,16 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return {"version": end[0], "files": end[1]}
 
     def _delta_dirs(self, v_from: int, v_to: int) -> list[tuple[int, list[str]]]:
-        """Per-commit added dirs in ``(v_from, v_to]`` — the append-
-        stream contract: raises on non-append commits (removed dirs or
-        changed deletion vectors) unless ``ignoreChanges``. Planning
-        cost is O(range), never O(table age): versions are allocated
-        contiguously and retention retires only a prefix, so membership
-        over [v_from, v_to] is per-version existence probes — no full
-        commit-log listing per micro-batch."""
-        committed = {
-            v
-            for v in range(max(v_from, 1), v_to + 1)
-            if os.path.exists(
-                os.path.join(self._table._versions, str(v))
-            )
-        }
-        if v_from != 0 and v_from not in committed:
-            # the stream's last committed offset was VACUUMED out of the
-            # commit log: prev_dirs is unknowable, and defaulting it to
-            # empty would re-deliver the entire next manifest as "added"
-            # (silent duplicates). Refuse loudly — the fix is retention
-            # above the stream's lag, the same contract as Delta's
-            # "files were deleted" streaming failure.
-            raise ValueError(
-                f"stream offset version {v_from} is no longer in the "
-                f"commit log at {self._table.dir} (vacuumed under an "
-                "active stream?); the append delta from it is undefined "
-                "— raise the table's vacuum retention above the "
-                "stream's lag and restart from a fresh startingVersion"
-            )
-        prev_dirs = (
-            set(self._table._manifest(v_from)) if v_from in committed else set()
-        )
-        prev_dvs = (
-            _dv_lines(self._table, v_from) if v_from in committed else set()
-        )
+        """Per-commit added dirs in ``(v_from, v_to]`` (the shared walk,
+        :meth:`VersionedTable._deltas` — O(range), and it refuses a
+        vacuumed offset) under the append-stream contract: raises on
+        non-append commits (removed dirs or changed deletion vectors)
+        unless ``ignoreChanges``."""
         out: list[tuple[int, list[str]]] = []
-        for v in sorted(c for c in committed if v_from < c <= v_to):
-            cur_dirs = set(self._table._manifest(v))
-            cur_dvs = _dv_lines(self._table, v)
-            removed = prev_dirs - cur_dirs
-            if (removed or cur_dvs != prev_dvs) and not self._ignore_changes:
+        for d in self._table._deltas(v_from, v_to):
+            if (d.removed or d.vectors_changed) and not self._ignore_changes:
                 raise ValueError(
-                    f"commit {v} at {self._table.dir} is not a pure "
+                    f"commit {d.version} at {self._table.dir} is not a pure "
                     "append (dirs removed or deletion vectors "
                     "changed); the streamed delta is undefined — set "
                     ".option('ignoreChanges','true') to skip such "
@@ -301,12 +254,8 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             # trade); only the removal itself is invisible to an
             # append stream. A DV commit adds no dirs, so it
             # contributes nothing either way.
-            out.append((v, sorted(cur_dirs - prev_dirs)))
-            prev_dirs, prev_dvs = cur_dirs, cur_dvs
+            out.append((d.version, d.added))
         return out
-
-    def _added_dirs(self, v_from: int, v_to: int) -> list[str]:
-        return [d for _v, ds in self._delta_dirs(v_from, v_to) for d in ds]
 
     def _delta_slices(
         self, v_from: int, v_to: int
@@ -356,23 +305,10 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return _FileSlice("")
 
     def read(self, partition: _FileSlice):
-        if not partition.path:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.path)
-        cols = {}
-        for field in self._arrow_schema:
-            fname = self._phys.get(field.name, field.name)
-            if fname in tbl.column_names:
-                cols[field.name] = tbl.column(fname).cast(field.type)
-            else:
-                # pre-evolution file: the evolved-in column surfaces NULL,
-                # matching the batch reader's recorded-schema fill
-                cols[field.name] = pa.nulls(tbl.num_rows, type=field.type)
-        out = pa.table(cols, schema=self._arrow_schema)
-        yield from out.to_batches()
+        if partition.path:
+            names = _source_names(self._arrow_schema.names, self._phys)
+            out = read_projected(partition.path, self._arrow_schema, names)
+            yield from out.to_batches()
 
     def commit(self, end: dict) -> None:
         pass
@@ -402,24 +338,8 @@ class VersionedTableStreamSource(DataSource):
         return "versioned_table_stream"
 
     def schema(self):
-        table_dir = self.options.get("tabledir") or self.options.get("path")
-        if not table_dir:
-            raise ValueError(
-                "versioned_table_stream needs .option('tableDir', ...)"
-            )
-        t = VersionedTable(None, table_dir)
-        head = t.latest_version()  # checkpoint-bounded, O(tail)
-        if head is None:
-            raise ValueError(
-                f"versioned table at {table_dir} has no commits to stream"
-            )
-        schema = t.snapshot_schema(head)
-        if schema is None:
-            raise ValueError(
-                f"versioned table at {table_dir} has no recorded manifest "
-                "schema (pre-tracking manifest) — commit once to record it"
-            )
-        return schema
+        t = _open(self.options, "versioned_table_stream")
+        return t._recorded_schema(t._resolve())
 
     def streamReader(self, schema) -> VersionedTableStreamReader:
         return VersionedTableStreamReader(schema, self.options)
@@ -435,9 +355,10 @@ class _CDFSlice(InputPartition):
 class VersionedCDFStreamReader(VersionedTableStreamReader):
     """Streaming ROW-LEVEL change feed — Delta's
     ``readChangeFeed`` streaming (t23), the streaming twin of the batch
-    ``read_changes_cdc``. Offsets are version numbers exactly like the
+    ``read_changes_cdf``. Offsets are version numbers exactly like the
     t22 commit-log reader (the offset/pacing machinery is inherited);
-    what differs is partition planning:
+    what differs is partition planning, per commit by the feed rule
+    both feed readers share (:meth:`VersionedTable._feed`):
 
     - a commit with a MATERIALIZED feed (``#cdf=`` header — MERGE and
       DELETE commits on a CDF-enabled table) streams its cdf files:
@@ -452,91 +373,28 @@ class VersionedCDFStreamReader(VersionedTableStreamReader):
       cannot be synthesized from the manifest (enable the feed before
       writing, or fall back to batch ``read_changes_cdc``).
 
-    Executors stream files through pyarrow exactly like the parent —
-    zero per-row Python, zero driver data. The declared schema is the
-    table schema plus ``_change_type``/``_commit_version`` metadata
-    columns (Delta's CDF read schema)."""
-
-    META_COLS = ("_change_type", "_commit_version")
+    Executors stream files through the shared per-file kernel exactly
+    like the parent — zero per-row Python, zero driver data. The
+    declared schema is the table schema plus
+    ``_change_type``/``_commit_version`` metadata columns (Delta's CDF
+    read schema)."""
 
     def _delta_slices(
         self, v_from: int, v_to: int
     ) -> list[tuple[int, list[InputPartition]]]:
-        if v_from == 0:
-            # bootstrap replay: needs the EARLIEST surviving version
-            # (a full-history read is O(all commits) of work anyway,
-            # so the full listing is proportional here)
-            committed = self._table.versions()
-            if committed and committed[0] != 1:
-                # unlike the append stream (whose first surviving
-                # manifest IS a complete snapshot), a cdf-from-the-
-                # beginning needs every commit's feed: history vacuumed
-                # before committed[0] means the replica would silently
-                # bootstrap incomplete — Delta's "cannot read version"
-                # CDF error
-                raise ValueError(
-                    f"change feed from version 0 at {self._table.dir} "
-                    "is incomplete: history before version "
-                    f"{committed[0]} was vacuumed; start from a version "
-                    "whose manifest survives and bootstrap the replica "
-                    "from a snapshot read"
-                )
-            committed = set(committed)
-        else:
-            # steady-state trigger: O(range) existence probes, never a
-            # full commit-log listing (versions are contiguous and
-            # retention retires only a prefix)
-            committed = {
-                v
-                for v in range(v_from, v_to + 1)
-                if os.path.exists(
-                    os.path.join(self._table._versions, str(v))
-                )
-            }
-            if v_from not in committed:
-                raise ValueError(
-                    f"stream offset version {v_from} is no longer in "
-                    f"the commit log at {self._table.dir} (vacuumed "
-                    "under an active stream?) — raise retention above "
-                    "the stream's lag and restart from a fresh "
-                    "startingVersion"
-                )
-        prev_dirs = (
-            set(self._table._manifest(v_from))
-            if v_from in committed
-            else set()
-        )
-        prev_dvs = (
-            _dv_lines(self._table, v_from) if v_from in committed else set()
-        )
         out: list[tuple[int, list[InputPartition]]] = []
-        for v in sorted(c for c in committed if v_from < c <= v_to):
-            cur_dirs = set(self._table._manifest(v))
-            cur_dvs = _dv_lines(self._table, v)
-            cdf = self._table.cdf_path(v)
-            slices: list[InputPartition] = []
-            if cdf is not None:
-                slices = [
-                    _CDFSlice(f, v, "cdf") for f in _parquet_files(cdf)
-                ]
-            elif not (prev_dirs - cur_dirs) and cur_dvs == prev_dvs:
-                slices = [
-                    _CDFSlice(f, v, "insert")
-                    for d in sorted(cur_dirs - prev_dirs)
-                    for f in _parquet_files(d)
-                ]
-            elif self._table.commit_op(v) in ("compact", "zorder"):
-                pass  # row-preserving rewrite: dataChange=false, skip
-            else:
-                raise ValueError(
-                    f"commit {v} at {self._table.dir} changed rows but "
-                    "recorded no change data feed (op="
-                    f"{self._table.commit_op(v)!r}); enable_change_data_"
-                    "feed() before row-changing writes, or use the batch "
-                    "read_changes_cdc"
+        for d, kind in self._table._feed(v_from, v_to):
+            srcs = {"cdf": [d.cdf], "insert": d.added}.get(kind, [])
+            out.append(
+                (
+                    d.version,
+                    [
+                        _CDFSlice(f, d.version, kind)
+                        for src in srcs
+                        for f in _parquet_files(src)
+                    ],
                 )
-            out.append((v, slices))
-            prev_dirs, prev_dvs = cur_dirs, cur_dvs
+            )
         return out
 
     def _empty_slice(self) -> InputPartition:
@@ -545,43 +403,18 @@ class VersionedCDFStreamReader(VersionedTableStreamReader):
     def read(self, partition: _CDFSlice):
         if not partition.path:
             return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.path)
-        if partition.kind == "cdf":
-            # cdf files carry the COMMIT-TIME logical names; a column
-            # renamed since then must resolve through its stable
-            # physical id, not NULL-fill (one O(1) manifest header read
-            # per task)
-            cm_v = self._table.column_mapping(partition.version) or {}
-            inv_v = {p: l for l, p in cm_v.items()}
-        cols = {}
-        for field in self._arrow_schema:
-            if field.name == "_commit_version":
-                cols[field.name] = pa.array(
-                    [partition.version] * tbl.num_rows, type=field.type
-                )
-                continue
-            if field.name == "_change_type" and partition.kind == "insert":
-                cols[field.name] = pa.array(
-                    ["insert"] * tbl.num_rows, type=field.type
-                )
-                continue
-            # cdf files are written under commit-time LOGICAL names;
-            # data files under the table's physical mapping
-            if partition.kind == "cdf":
-                fname = inv_v.get(
-                    self._phys.get(field.name, field.name), field.name
-                )
-            else:
-                fname = self._phys.get(field.name, field.name)
-            if fname in tbl.column_names:
-                cols[field.name] = tbl.column(fname).cast(field.type)
-            else:
-                # pre-evolution file: evolved-in column surfaces NULL
-                cols[field.name] = pa.nulls(tbl.num_rows, type=field.type)
-        out = pa.table(cols, schema=self._arrow_schema)
+        # a cdf file holds its commit's LOGICAL names (one O(1) manifest
+        # header read per task); a data file holds physical names
+        commit_map = (
+            self._table.column_mapping(partition.version)
+            if partition.kind == "cdf"
+            else None
+        )
+        names = _source_names(self._arrow_schema.names, self._phys, commit_map)
+        consts = {"_commit_version": partition.version}
+        if partition.kind == "insert":
+            consts["_change_type"] = "insert"
+        out = read_projected(partition.path, self._arrow_schema, names, consts)
         yield from out.to_batches()
 
 
@@ -600,37 +433,8 @@ class VersionedCDFStreamSource(DataSource):
         return "versioned_cdf_stream"
 
     def schema(self):
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        table_dir = self.options.get("tabledir") or self.options.get("path")
-        if not table_dir:
-            raise ValueError(
-                "versioned_cdf_stream needs .option('tableDir', ...)"
-            )
-        t = VersionedTable(None, table_dir)
-        head = t.latest_version()  # checkpoint-bounded, O(tail)
-        if head is None:
-            raise ValueError(
-                f"versioned table at {table_dir} has no commits to stream"
-            )
-        schema = t.snapshot_schema(head)
-        if schema is None:
-            raise ValueError(
-                f"versioned table at {table_dir} has no recorded manifest "
-                "schema (pre-tracking manifest) — commit once to record it"
-            )
-        return StructType(
-            list(schema.fields)
-            + [
-                StructField("_change_type", StringType(), False),
-                StructField("_commit_version", LongType(), False),
-            ]
-        )
+        t = _open(self.options, "versioned_cdf_stream")
+        return _feed_schema(t._recorded_schema(t._resolve()))
 
     def streamReader(self, schema) -> VersionedCDFStreamReader:
         return VersionedCDFStreamReader(schema, self.options)
@@ -643,64 +447,22 @@ class _BatchSlice(InputPartition):
         self.pdv_paths = pdv_paths  # position-vector files covering it
 
 
-class VersionedTableBatchReader(DataSourceReader):
+class VersionedTableBatchReader(_ArrowSchema, DataSourceReader):
     """Batch reader half of :class:`VersionedTableBatchSource` — see its
     docstring for the contract. Planning is driver-side manifest
     metadata (dir list + optional stats pruning); executors stream each
-    parquet file through pyarrow, translating physical column names,
-    NULL-filling pre-evolution files, and applying covering deletion
-    vectors as pyarrow anti-joins (the DV broadcast-size contract: each
-    task reads the O(deleted keys) key file, never another data file)."""
+    parquet file through the shared per-file kernel, translating
+    physical column names, NULL-filling pre-evolution files, and
+    applying covering deletion vectors as pyarrow anti-joins (the DV
+    broadcast-size contract: each task reads the O(deleted keys) key
+    file, never another data file)."""
 
     def __init__(self, schema, options):
-        import os as _os
-
-        table_dir = options.get("tabledir") or options.get("path")
-        self._table = VersionedTable(None, table_dir)
-        v = options.get("versionasof")
-        ts = options.get("timestampasof")
-        if v is not None and ts is not None:
-            raise ValueError("pass versionAsOf OR timestampAsOf, not both")
-        if ts is not None:
-            self._version = self._table.version_at_timestamp(float(ts))
-        elif v is not None:
-            self._version = int(v)
-            if not _os.path.exists(
-                _os.path.join(self._table._versions, str(self._version))
-            ):
-                raise ValueError(
-                    f"version {self._version} not committed at {table_dir} "
-                    f"(have {self._table.versions()})"
-                )
-        else:
-            # checkpoint-bounded latest resolution (O(tail), the
-            # default plan path)
-            self._version = self._table.latest_version()
-            if self._version is None:
-                raise ValueError(
-                    f"versioned table at {table_dir} has no commits"
-                )
-        # lazy arrow schema: partitions() planning runs in a worker that
-        # never touches data (see the stream reader's note)
+        self._table = _open(options, "versioned_table")
+        self._version = _as_of(self._table, options)
         self._schema = schema
-        self._arrow_schema_cache = None
         self._phys = self._table.column_mapping(self._version) or {}
         self._preds: list[tuple] = []
-
-    @property
-    def _arrow_schema(self):
-        # see VersionedTableStreamReader._arrow_schema for the
-        # defensive-getattr rationale
-        cached = getattr(self, "_arrow_schema_cache", None)
-        if cached is None:
-            schema = getattr(self, "_schema", None)
-            if schema is None:
-                return self.__dict__["_arrow_schema"]
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            cached = to_arrow_schema(schema)
-            self._arrow_schema_cache = cached
-        return cached
 
     def pushFilters(self, filters):
         """Record prunable predicates for MANIFEST-STATS dir pruning at
@@ -754,44 +516,16 @@ class VersionedTableBatchReader(DataSourceReader):
     def partitions(self):
         dirs = self._table._manifest(self._version)
         if self._preds:
-            stats = self._table.dir_stats(self._version)
-            stats_real = {
-                os.path.realpath(d): s for d, s in stats.items()
-            }
-            from ..operators.versioned import _dir_may_match
-
-            kept = []
-            for d in dirs:
-                s = stats.get(d) or stats_real.get(os.path.realpath(d))
-                try:
-                    keep = s is None or _dir_may_match(s, self._preds)
-                except Exception:  # noqa: BLE001 - incomparable literal
-                    keep = True
-                if keep:
-                    kept.append(d)
-            dirs = kept
-        dvs = self._table.deletion_vectors(self._version)
-        cover = [
-            (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-            for dv in dvs
-        ]
-        pcover = [
-            (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-            for dv in self._table.position_dvs(self._version)
-        ]
+            dirs = self._table._prune(
+                self._version, dirs, lambda s: _dir_may_match(s, self._preds)
+            )[0]
         parts = []
-        for d in dirs:
-            rd = os.path.realpath(d)
-            covering = sorted(p for p, cs in cover if rd in cs)
-            pcovering = sorted(
-                _parquet_files(p)  # vector PART files, resolved at plan
-                for p, cs in pcover
-                if rd in cs
-            )
-            pflat = [f for fs in pcovering for f in fs]
-            parts.extend(
-                _BatchSlice(f, covering, pflat) for f in _parquet_files(d)
-            )
+        for d, (dvs, pdvs) in self._table._coverage(self._version, dirs).items():
+            # vector PART files, resolved at plan time
+            pdv_parts = [f for p in pdvs for f in _parquet_files(p)]
+            parts += [
+                _BatchSlice(f, list(dvs), pdv_parts) for f in _parquet_files(d)
+            ]
         return parts or [_BatchSlice("", [], [])]
 
     def read(self, partition: _BatchSlice):
@@ -800,23 +534,15 @@ class VersionedTableBatchReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from ..operators.versioned import apply_position_mask
-
-        tbl = pq.read_table(partition.path)
-        if partition.pdv_paths:
-            # POSITION vectors: per-file row mask — this task reads only
-            # the positions covering ITS file (row-group pruning on the
-            # sorted `file` column; the SHARED kernel, so this path and
-            # the library read can never disagree)
-            tbl = apply_position_mask(tbl, partition.path, partition.pdv_paths)
-        cols = {}
-        for field in self._arrow_schema:
-            fname = self._phys.get(field.name, field.name)
-            if fname in tbl.column_names:
-                cols[field.name] = tbl.column(fname).cast(field.type)
-            else:
-                cols[field.name] = pa.nulls(tbl.num_rows, type=field.type)
-        out = pa.table(cols, schema=self._arrow_schema)
+        # POSITION vectors mask inside the shared kernel: this task reads
+        # only the positions covering ITS file, exactly like the library
+        # scan, so the two paths can never disagree
+        out = read_projected(
+            partition.path,
+            self._arrow_schema,
+            _source_names(self._arrow_schema.names, self._phys),
+            pdv_parts=partition.pdv_paths,
+        )
         for dv_path in partition.dv_paths:
             dv = pq.read_table(dv_path)
             # DV files carry LOGICAL key names (delete_by_keys wrote
@@ -844,29 +570,27 @@ class VersionedCDFBatchReader(DataSourceReader):
     (round-13 S54 — Delta's ``spark.read.format("delta")
     .option("readChangeFeed","true")``): plans exactly the per-commit
     cdf/insert slices the T23 stream plans (composition over the stream
-    reader — one planning implementation, the two read paths cannot
-    disagree) for the RANGE ``(startingVersion, endingVersion]``
+    reader) for the RANGE ``(startingVersion, endingVersion]``
     (exclusive-from, the same convention as the library
     ``read_changes_cdf`` and the stream offsets). Rows carry
     ``_change_type`` / ``_commit_version``; appends synthesize inserts,
     compact/zorder are skipped (dataChange=false), feed-less
-    row-changing commits raise."""
+    row-changing commits raise. All three feed readers — this one, the
+    stream and the library ``read_changes_cdf`` — plan through one
+    per-commit rule (:meth:`VersionedTable._feed`) and resolve columns
+    through one name rule (``_source_names``), so they cannot
+    disagree."""
 
     def __init__(self, schema, options):
         self._inner = VersionedCDFStreamReader(schema, options)
-        head = self._inner._table.latest_version()
-        if head is None:
-            raise ValueError(
-                f"versioned table at {self._inner._table.dir} has no commits"
-            )
         self._v_from = int(options.get("startingversion", 0))
         ev = options.get("endingversion")
-        self._v_to = int(ev) if ev is not None else head
+        self._v_to = self._inner._table._resolve(None if ev is None else int(ev))
 
     def partitions(self):
         slices = self._inner._delta_slices(self._v_from, self._v_to)
         parts = [sl for _v, ss in slices for sl in ss]
-        return parts or [_CDFSlice("", 0, "insert")]
+        return parts or [self._inner._empty_slice()]
 
     def read(self, partition):
         yield from self._inner.read(partition)
@@ -904,64 +628,16 @@ class VersionedTableBatchSource(DataSource):
         )
 
     def schema(self):
-        table_dir = self.options.get("tabledir") or self.options.get("path")
-        if not table_dir:
-            raise ValueError("versioned_table needs .option('tableDir', ...)")
-        t = VersionedTable(None, table_dir)
-        head = t.latest_version()  # checkpoint-bounded, O(tail)
-        if head is None:
+        t = _open(self.options, "versioned_table")
+        if not self._cdf_mode():
+            return t._recorded_schema(_as_of(t, self.options))
+        if any(self.options.get(k) for k in ("versionasof", "timestampasof")):
             raise ValueError(
-                f"versioned table at {table_dir} has no commits"
+                "readChangeFeed takes startingVersion/endingVersion, "
+                "not versionAsOf/timestampAsOf (a feed is a range, "
+                "not a snapshot)"
             )
-        v = self.options.get("versionasof")
-        ts = self.options.get("timestampasof")
-        if self._cdf_mode():
-            if v is not None or ts is not None:
-                raise ValueError(
-                    "readChangeFeed takes startingVersion/endingVersion, "
-                    "not versionAsOf/timestampAsOf (a feed is a range, "
-                    "not a snapshot)"
-                )
-            from pyspark.sql.types import (
-                LongType,
-                StringType,
-                StructField,
-                StructType,
-            )
-
-            schema = t.snapshot_schema(head)
-            if schema is None:
-                raise ValueError(
-                    f"versioned table at {table_dir} has no recorded "
-                    "manifest schema (pre-tracking manifest)"
-                )
-            return StructType(
-                list(schema.fields)
-                + [
-                    StructField("_change_type", StringType(), False),
-                    StructField("_commit_version", LongType(), False),
-                ]
-            )
-        if ts is not None:
-            version = t.version_at_timestamp(float(ts))
-        elif v is not None:
-            version = int(v)
-            if not os.path.exists(
-                os.path.join(t._versions, str(version))
-            ):
-                raise ValueError(
-                    f"version {version} not committed at {table_dir} "
-                    f"(have {t.versions()})"
-                )
-        else:
-            version = head
-        schema = t.snapshot_schema(version)
-        if schema is None:
-            raise ValueError(
-                f"versioned table at {table_dir} version {version} has no "
-                "recorded manifest schema (pre-tracking manifest)"
-            )
-        return schema
+        return _feed_schema(t._recorded_schema(t._resolve()))
 
     def reader(self, schema):
         if self._cdf_mode():
