@@ -461,26 +461,28 @@ def main() -> None:
         and not k.startswith("upsert_")
     }
     worst5 = dict(sorted(query_times.items(), key=lambda kv: -kv[1])[:5])
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_warm",
-                "value": round(total, 3),
-                "unit": "sec",
-                "sf": float(sf),
-                "n_queries": len(query_times),
-                "calibration": timings["calibration"],
-                "upsert_rows_per_sec": timings["upsert_rows_per_sec"],
-                # value = sum(query times) + these two, so the line's
-                # decomposition adds up without opening the detail file
-                "upsert_fresh": timings["upsert_fresh"],
-                "upsert_redeliver": timings["upsert_redeliver"],
-                "worst5": worst5,
-                "n_errors": len(errors),
-                "detail": "BENCH_DETAIL.json",
-            }
-        )
+    line = json.dumps(
+        {
+            "metric": "headline_total_warm",
+            "value": round(total, 3),
+            "unit": "sec",
+            "sf": float(sf),
+            "n_queries": len(query_times),
+            "calibration": timings["calibration"],
+            "upsert_rows_per_sec": timings["upsert_rows_per_sec"],
+            # value = sum(query times) + these two, so the line's
+            # decomposition adds up without opening the detail file
+            "upsert_fresh": timings["upsert_fresh"],
+            "upsert_redeliver": timings["upsert_redeliver"],
+            "worst5": worst5,
+            "n_errors": len(errors),
+            "detail": "BENCH_DETAIL.json",
+        }
     )
+    # a reader that keeps only the output's last 2000 characters must
+    # still get the whole line
+    assert len(line) < 1800, f"headline line is {len(line)} chars (budget 1800)"
+    print(line)
     spark.stop()
 
 

@@ -6,6 +6,8 @@ they can't silently regress."""
 from __future__ import annotations
 
 import io
+import os
+import uuid
 from contextlib import redirect_stdout
 
 import pytest
@@ -160,12 +162,24 @@ def test_anti_join_reads_only_keys(spark, tmp_path):
     ), "sink scan must read only (city, utc)"
 
 
+def _jobs_run(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted through a job group
+    and the status tracker."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_upsert_job_count(spark, tmp_path):
     """An upsert into an existing sink runs the anti-join's shuffle or
     broadcast stages and one write job: no schema-inference job, no
     cache-then-count, no second pass to count the appended rows."""
-    import uuid
-
     from weather_etl_docker_airflow_project_spark.fixtures import CANNED_WEATHER
     from weather_etl_docker_airflow_project_spark.functions.weather import (
         transform_weather,
@@ -178,16 +192,11 @@ def test_upsert_job_count(spark, tmp_path):
     run_cycle(spark, lambda: CANNED_WEATHER, sink)
     newer = [dict(r, dt=r["dt"] + 600) for r in CANNED_WEATHER]
     incoming = transform_weather(records_to_df(spark, CANNED_WEATHER + newer))
-    sc = spark.sparkContext
-    group = f"upsert-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "upsert job-count guard")
-    try:
-        assert upsert_parquet(spark, incoming, sink, ["city", "utc"]) == len(newer)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 3, f"upsert ran {len(jobs)} Spark jobs"
+    appended, jobs = _jobs_run(
+        spark, lambda: upsert_parquet(spark, incoming, sink, ["city", "utc"])
+    )
+    assert appended == len(newer)
+    assert 0 < jobs <= 3, f"upsert ran {jobs} Spark jobs"
 
 
 def test_salted_agg_spreads_hot_key(spark):
@@ -541,3 +550,114 @@ def test_w9_fold_is_single_shuffle_pandas(spark):
     # formatted mode names each operator twice (tree + detail); count
     # Exchange NODES via the tree's "Exchange (<id>)" form
     assert plan.count("Exchange (") == 1
+
+
+def _inferred_table(spark, sf_dir: str, name: str):
+    """The schema-inference read ``load_table`` replaced: a schema-less
+    ``spark.read.parquet`` plus the ``ts`` normalization chosen on the
+    inferred type."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
+        return df
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_table_pinned_schema_runs_no_job(spark, sf):
+    """Loading a testdata table reads its pinned schema and runs no Spark
+    job (no footer inference at plan-build time); the pinned schema is the
+    one inference gives."""
+    from weather_etl_docker_airflow_project_spark.io import load_table
+    from weather_etl_docker_airflow_project_spark.schemas import TESTDATA_TABLES
+
+    sf_dir = os.path.join(os.path.dirname(SF), sf)
+    for name in TESTDATA_TABLES:
+        df, jobs = _jobs_run(spark, lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, f"load_table({name}) ran {jobs} Spark jobs"
+        assert df.schema == _inferred_table(spark, sf_dir, name).schema, name
+
+
+def test_load_table_events_ts_forms(spark, tmp_path):
+    """``events.ts`` typed from the parquet footer: the testdata's naive
+    micros, Spark's default INT96, Spark's TIMESTAMP_MICROS and a pyarrow
+    TIMESTAMP(NANOS) file (sub-micro residue) load with no Spark job and
+    give the inference path's schema and rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from weather_etl_docker_airflow_project_spark.io import load_table
+
+    src = os.path.join(SF, "events.parquet")
+    base = spark.read.parquet(src)
+    fixtures = {"ntz_micros": SF}
+    for form, ts_out in (("int96", None), ("micros", "TIMESTAMP_MICROS")):
+        d = str(tmp_path / form)
+        key = "spark.sql.parquet.outputTimestampType"
+        prev = spark.conf.get(key)
+        if ts_out:
+            spark.conf.set(key, ts_out)
+        try:
+            base.withColumn("ts", base["ts"].cast("timestamp")).write.parquet(
+                os.path.join(d, "events.parquet")
+            )
+        finally:
+            spark.conf.set(key, prev)
+        fixtures[form] = d
+    t = pq.read_table(src)
+    ns = pc.add(t["ts"].cast(pa.timestamp("ns")), pa.scalar(789, pa.duration("ns")))
+    (tmp_path / "nanos").mkdir()
+    pq.write_table(
+        t.set_column(t.schema.get_field_index("ts"), "ts", ns),
+        str(tmp_path / "nanos" / "events.parquet"),
+    )
+    fixtures["nanos"] = str(tmp_path / "nanos")
+
+    footer_types = {}
+    for form, d in fixtures.items():
+        df, jobs = _jobs_run(spark, lambda: load_table(spark, d, "events"))
+        assert jobs == 0, f"{form}: load_table(events) ran {jobs} Spark jobs"
+        ref = _inferred_table(spark, d, "events")
+        assert df.schema == ref.schema, form
+        assert df.orderBy("event_id").collect() == ref.orderBy("event_id").collect(), form
+        raw = spark.read.parquet(os.path.join(d, "events.parquet"))
+        footer_types[form] = str(raw.schema["ts"].dataType)
+    # the four fixtures cover the four physical forms
+    assert footer_types == {
+        "ntz_micros": "TimestampNTZType()",
+        "int96": "TimestampType()",
+        "micros": "TimestampType()",
+        "nanos": "LongType()",
+    }
+
+
+# The analytic_mix benchmark's queries whose builders are lazy (its twelfth,
+# l2_minhash_lsh_pairs, checkpoints its signature table while building).
+LAZY_ANALYTIC = (
+    "q1_pricing_summary", "j1_inner_segment_revenue",
+    "j5_anti_customers_without_big_orders", "w1_top3_orders_per_segment",
+    "a5_rollup_lineitem_status", "j8_asof_error_after_click",
+    "tpch_q9_product_profit", "tpch_q18_large_orders", "l1_exact_dedup",
+    "l3_knn_bruteforce", "l4_bm25_topk",
+)
+
+
+def test_lazy_builders_run_no_job(spark):
+    """Building a lazy registered query, or the events stream, runs no
+    Spark job: every job belongs to the action."""
+    from weather_etl_docker_airflow_project_spark.streaming.windows import stream_events
+
+    for name in LAZY_ANALYTIC:
+        _df, jobs = _jobs_run(spark, lambda: catalog.REGISTRY[name].fn(spark, SF))
+        assert jobs == 0, f"building {name} ran {jobs} Spark jobs"
+    stream, jobs = _jobs_run(spark, lambda: stream_events(spark, SF))
+    assert jobs == 0, f"building stream_events ran {jobs} Spark jobs"
+    assert stream.isStreaming

@@ -8,42 +8,100 @@ collects to the driver.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .schemas import TESTDATA_TABLES
+from .schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one testdata table (S6).
+    """Parquet scan of one testdata table (S6) under its pinned schema.
 
-    ``events.ts`` has shipped as two different physical types across
-    testdata generations, so the reader self-adapts and normalizes both to
-    session TIMESTAMP (what every downstream window/watermark/oracle
-    expects; the session tz is UTC, matching DuckDB's naive read):
+    The read passes ``schemas.TESTDATA_SCHEMAS[name]``, so building a plan
+    runs no Spark job: a schema-less ``spark.read.parquet`` runs one
+    footer-inference job per call, at plan-build time. The pinned schemas
+    are exactly what Spark infers from the testdata files
+    (``tests/test_plan_shapes.py`` holds them to it). A missing table
+    still raises Spark's ``AnalysisException`` (PATH_NOT_FOUND).
 
-    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; with
-      ``nanosAsLong`` it loads as long nanos, which we integer-divide to
-      micros (exactly DuckDB's nanos->micros truncation).
-    - timestamp[us] with isAdjustedToUTC=false: loads as TIMESTAMP_NTZ;
-      cast to TIMESTAMP (identity wall-clock in a UTC session).
+    ``events.ts`` has shipped as different physical types across testdata
+    generations. ``events_read_schema`` types it from one driver-side
+    footer read and ``normalize_events_ts`` brings every form to session
+    TIMESTAMP (what every downstream window/watermark/oracle expects; the
+    session tz is UTC, matching DuckDB's naive read). The decision is made
+    on the parquet physical/logical type, not the Arrow type: pyarrow
+    reports Spark's default INT96 as ``timestamp[ns]``, the same Arrow type
+    as a TIMESTAMP(NANOS) column, but Spark reads INT96 as TIMESTAMP and
+    fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH if it is asked for a long.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        from pyspark.sql import functions as F  # local import: keep module light
-        from pyspark.sql import types as T
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name != "events":
+        return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
+    return normalize_events_ts(
+        spark.read.schema(events_read_schema(spark, path)).parquet(path)
+    )
 
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+def events_read_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The events schema with ``ts`` typed as Spark reads the stored column,
+    from one driver-side footer read (``path`` is a parquet file, or a
+    directory whose first ``*.parquet`` part file is read):
+
+    - INT96 (Spark's default timestamp output): TIMESTAMP.
+    - INT64 TIMESTAMP(NANOS): the vectorized reader rejects it; with
+      ``nanosAsLong`` (set here, on this branch only) it loads as long
+      nanos.
+    - INT64 TIMESTAMP(MILLIS/MICROS), isAdjustedToUTC=false: TIMESTAMP_NTZ.
+    - INT64 TIMESTAMP(MILLIS/MICROS), isAdjustedToUTC=true: TIMESTAMP.
+    """
+    if os.path.isfile(path):
+        parts = [path]
+    else:
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not parts:
+        # missing or empty: Spark raises its own AnalysisException
+        # (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA) and runs no job
+        spark.read.parquet(path)
+    import pyarrow.parquet as pq  # local import: keep module light
+
+    footer = pq.read_metadata(parts[0]).schema
+    col = footer.column(footer.names.index("ts"))
+    logical = json.loads(col.logical_type.to_json())
+    if col.physical_type == "INT96":
+        ts_type = T.TimestampType()
+    elif logical["Type"] != "Timestamp" or logical["timeUnit"] == "nanoseconds":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ts_type = T.LongType()
+    elif logical["isAdjustedToUTC"]:
+        ts_type = T.TimestampType()
+    else:
+        ts_type = T.TimestampNTZType()
+    return T.StructType(
+        [
+            T.StructField("ts", ts_type) if f.name == "ts" else f
+            for f in TESTDATA_SCHEMAS["events"]
+        ]
+    )
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as session TIMESTAMP, from any ``events_read_schema`` type:
+    long nanos are integer-divided to micros (exactly DuckDB's
+    nanos->micros truncation); TIMESTAMP_NTZ is cast (identity wall-clock
+    in a UTC session)."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def read_csv(spark: SparkSession, path: str, schema, header: bool = True) -> DataFrame:

@@ -60,7 +60,13 @@ WEATHER_SCHEMA = T.StructType(
     ]
 )
 
-# --- Driver testdata schemas (TESTDATA.md; introspected, pinned here) -----
+# --- Testdata schemas (TESTDATA.md) ---------------------------------------
+# io.load_table reads every testdata table under these schemas, so building
+# a plan runs no inference job; each must equal what Spark infers from the
+# files (tests/test_plan_shapes.py checks all scale dirs). The TPC-H dates
+# are TIMESTAMP_NTZ: the files store naive microsecond timestamps
+# (isAdjustedToUTC=false). events.ts is typed per file from its footer
+# (io.events_read_schema); the entry here is its normalized type.
 
 TESTDATA_TABLES = (
     "region",
@@ -122,7 +128,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -138,7 +144,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(

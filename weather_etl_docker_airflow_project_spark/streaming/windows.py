@@ -28,47 +28,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-# Kept for callers that build their own fixture streams: the normalized
-# post-read schema (ts already a session timestamp).
-EVENTS_SCHEMA = _events_schema(T.TimestampType())
+from ..io import events_read_schema, normalize_events_ts
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.
 
-    A streaming source needs a fixed schema, but ``events.ts`` has shipped
-    as TIMESTAMP(NANOS) and as timestamp[us]/NTZ across testdata
-    generations — so sniff the footer once with a batch read and build the
-    matching stream schema, normalizing ``ts`` to session TIMESTAMP with
-    the same conversion as io.load_table (batch oracle and stream agree to
-    the microsecond)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sniffed = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema[
-        "ts"
-    ].dataType
+    A streaming source needs a fixed schema, and ``events.ts`` has shipped
+    as several physical types across testdata generations, so the stream
+    takes the same footer-typed schema and ``ts`` normalization as
+    io.load_table (batch oracle and stream agree to the microsecond);
+    building it runs no Spark job."""
     raw = (
-        spark.readStream.schema(_events_schema(sniffed))
+        spark.readStream.schema(
+            events_read_schema(spark, os.path.join(sf_dir, "events.parquet"))
+        )
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(sniffed, T.LongType):
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if isinstance(sniffed, T.TimestampNTZType):
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_events_ts(raw)
 
 
 def run_available_now(
