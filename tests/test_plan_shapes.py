@@ -199,6 +199,66 @@ def test_upsert_job_count(spark, tmp_path):
     assert 0 < jobs <= 3, f"upsert ran {jobs} Spark jobs"
 
 
+def test_run_cycle_two_jobs_no_key_exchange(spark, tmp_path, monkeypatch):
+    """A weather cycle into an existing sink runs at most 2 Spark jobs (the
+    sink keys' broadcast, then the write): the driver records arrive as
+    one Arrow partition, so the in-batch dedup plans no hash exchange on
+    the natural key."""
+    from weather_etl_docker_airflow_project_spark.fixtures import CANNED_WEATHER
+    from weather_etl_docker_airflow_project_spark.operators import upsert
+    from weather_etl_docker_airflow_project_spark.streaming.pipeline import run_cycle
+
+    sink = str(tmp_path / "sink")
+    run_cycle(spark, lambda: CANNED_WEATHER, sink)
+    planned = []
+    dedup = upsert.dedup_new_rows
+
+    def capture(*args):
+        planned.append(dedup(*args))
+        return planned[-1]
+
+    monkeypatch.setattr(upsert, "dedup_new_rows", capture)
+    newer = [dict(r, dt=r["dt"] + 600) for r in CANNED_WEATHER]
+    appended, jobs = _jobs_run(
+        spark, lambda: run_cycle(spark, lambda: CANNED_WEATHER + newer, sink)
+    )
+    assert appended == len(newer)
+    assert 0 < jobs <= 2, f"run_cycle ran {jobs} Spark jobs"
+    plan = planned[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+    assert "hashpartitioning(city" not in plan, plan
+
+
+def test_pdv_read_has_no_exchange(spark, tmp_path):
+    """A read covered by a position deletion vector spreads its file list
+    as a range, not as a shuffled driver frame: no Exchange under its
+    MapInArrow, a size estimate the join planner never takes for a
+    broadcast side, and the pre-delete rows minus the deleted range."""
+    from pyspark.sql import functions as F
+
+    from weather_etl_docker_airflow_project_spark.operators.versioned import (
+        VersionedTable,
+        delete_where,
+    )
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(
+        spark.range(0, 400)
+        .select(F.col("id").alias("k"), (F.col("id") * 2.0).alias("v"))
+        .repartition(4)
+    )
+    before = sorted(t.read().collect())
+    v = delete_where(t, "k BETWEEN 100 AND 199", merge_on_read=True)
+    assert t.position_dvs(v)
+    out = t.read()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan.split("MapInArrow", 1)[1], plan
+    size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size > int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert sorted(out.collect()) == [r for r in before if not 100 <= r.k <= 199]
+
+
 def test_salted_agg_spreads_hot_key(spark):
     """a13: the two-phase salted aggregate must (a) group by (key, _salt)
     in phase 1 — the plan carries TWO aggregate exchanges, the first

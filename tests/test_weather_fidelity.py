@@ -118,6 +118,20 @@ def test_extract_fail_fast():
     )
 
 
+def test_records_to_df_type_contract(spark):
+    """JSON-integral numbers load into double fields, a fractional value
+    bound for an int field raises instead of truncating, and missing keys
+    load as NULL with an empty ``weather`` list."""
+    rec = dict(CANNED_WEATHER[0], main={"temp": 20, "humidity": 55, "pressure": 1015}, wind={"speed": 3})
+    got = records_to_df(spark, [rec, {"name": "Nowhere"}]).collect()
+    assert (got[0].main.temp, got[0].wind.speed) == (20.0, 3.0)
+    assert isinstance(got[0].main.temp, float) and got[0].main.humidity == 55
+    assert got[1].dt is None and got[1].main.temp is None and got[1].wind.speed is None
+    assert got[1].weather == []
+    with pytest.raises(TypeError, match="humidity"):
+        records_to_df(spark, [dict(rec, main={"temp": 20.5, "humidity": 55.5, "pressure": 1015})])
+
+
 def test_upsert_self_heals_torn_empty_sink_dir(spark, tmp_path):
     """A sink directory that exists but holds no readable parquet (killed
     first write) must be treated as fresh, not wedge every later upsert."""

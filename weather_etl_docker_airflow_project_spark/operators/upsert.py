@@ -13,7 +13,13 @@ Scale notes — the contract of ``upsert_parquet``:
   taken from the incoming batch, so no footer-inference job runs and the
   scan is pruned to the keys. The anti-join feeds the write directly; the
   appended-row count is an observed metric of that same write, so the
-  only other jobs are the join's own shuffle/broadcast stages.
+  only other jobs are the join's own shuffle/broadcast stages. On
+  driver-sized input (``rest.records_to_df``: one Arrow partition) the
+  in-batch ``dropDuplicates`` needs no exchange, so a call into an
+  existing sink runs 2 jobs: the sink keys' broadcast, then the write.
+  Multi-partition input (a stream micro-batch) adds the dedup shuffle: 3.
+  The first call into a fresh sink anti-joins an empty key frame the
+  optimizer folds away, so it runs the write alone.
 - AQE-sized files. Nothing is cached: a cached plan pins its output
   partitioning (``canChangeCachedPlanOutputPartitioning`` is off), so
   every write would land one tiny file per non-empty shuffle partition.
@@ -71,7 +77,8 @@ def upsert_parquet(
     key_schema = StructType([incoming.schema[k] for k in keys])
     created = not fs.exists(jpath)
     if created:
-        existing = spark.createDataFrame([], key_schema)
+        # an empty key frame the optimizer folds away (no pickled RDD)
+        existing = incoming.select(*keys).limit(0)
     else:
         existing = spark.read.schema(key_schema).parquet(path)
         if key_pruning_filter is not None:

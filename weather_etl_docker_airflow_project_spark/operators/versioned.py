@@ -1865,11 +1865,21 @@ class VersionedTable:
 
         schema = self._recorded_schema(version)
         files = sorted(f for d in dirs for f in _parquet_files(d))
-        spec = self.spark.createDataFrame(
-            [(f,) for f in files], "path string"
-        )
         par = self.spark.sparkContext.defaultParallelism
-        spec = spec.repartition(max(1, min(len(files), par)))
+        n = max(1, min(len(files), par))
+        # Each id of a JVM range indexes ``files``, which rides in the
+        # closure: no driver rows are pickled and nothing is shuffled. A
+        # task scans a contiguous id slice, so the files are dealt
+        # round-robin first to spread one commit dir over the tasks. The
+        # range goes through an RDD so the scan keeps Spark's unknown size
+        # estimate: a Range's exact 8 bytes per id would make every masked
+        # table look broadcastable to the join planner.
+        files = [f for k in range(n) for f in files[k::n]]
+        ids = self.spark._jsparkSession.range(0, len(files), 1, n).toDF()
+        spec = DataFrame(
+            self.spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()),
+            self.spark,
+        )
         # vector part files resolved ONCE at plan time (driver metadata);
         # each task filter-reads only its file's rows from them
         pdv_parts = [f for p in pdv_paths for f in _parquet_files(p)]
@@ -1879,9 +1889,9 @@ class VersionedTable:
 
         def _masked(batches):
             for b in batches:
-                for path in b.column(0).to_pylist():
+                for i in b.column(0).to_pylist():
                     yield from read_projected(
-                        path, arrow_schema, names,
+                        files[i], arrow_schema, names,
                         pdv_parts=pdv_parts, invert=inverted,
                     ).to_batches()
 

@@ -70,8 +70,6 @@ def build_session(
         # 5000 entries bounds the cache at tens of MB of driver
         # metaspace at any cluster scale.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        # testdata events.parquet stores TIMESTAMP(NANOS) — read as long.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Keep broadcast joins available for dimension tables.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Join strategy (guide §3.1): AQE converts a planned sort-merge

@@ -5,13 +5,20 @@ on HTTP errors, and parses the body as nested JSON
 (``airflow/dags/weather_etl.py:90-110``: GET at :103, raise_for_status at
 :104, json() at :105). Natively: the fetch stays a *driver-side* call (one
 tiny record per tick — shipping it to executors would be pure overhead),
-and the record immediately becomes a DataFrame with an explicit schema so
+and the records immediately become a DataFrame with an explicit schema so
 everything downstream is JVM-side.
+
+Driver records reach the JVM as one Arrow table in one partition
+(:func:`records_to_df`). ``spark.createDataFrame(list_of_dicts, schema)``
+would instead ``parallelize`` the pickled rows and run a Python worker in
+every partition before the first real stage — the largest single cost of
+a weather cycle — and the single partition lets the upsert's in-batch
+dedup run without a shuffle.
 
 At scale this generalizes: many endpoints/cities per tick -> parallelize
 the fetch list with ``spark.createDataFrame(urls).mapInPandas(fetch)`` so
-executors fetch concurrently; the single-record path below is the
-reference-fidelity case.
+executors fetch concurrently (:func:`fetch_many`); the driver-record path
+is the reference-fidelity case.
 """
 
 from __future__ import annotations
@@ -21,9 +28,13 @@ import urllib.error
 import urllib.request
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import WEATHER_RAW_SCHEMA
+
+_WEATHER_RAW_ARROW = pa.struct(list(to_arrow_schema(WEATHER_RAW_SCHEMA)))
 
 
 class ExtractError(RuntimeError):
@@ -93,9 +104,60 @@ def project_raw(rec: dict) -> dict:
     }
 
 
+def _arrow_column(values: list, dtype: pa.DataType, path: str) -> pa.Array:
+    """``values`` (JSON-decoded, ``None`` for missing) as an arrow array of
+    ``dtype``: structs and lists are assembled field by field, and each
+    leaf's type is inferred from its values, checked for kind, then cast
+    with ``safe=True`` — so an integral ``20`` loads into a double, while
+    a fractional ``55.5`` bound for an int, an overflow, a bool in a
+    numeric field or a number in a string field raise instead of being
+    coerced."""
+    if pa.types.is_struct(dtype):
+        children = [
+            _arrow_column([v.get(f.name) if v else None for v in values], f.type, f"{path}.{f.name}")
+            for f in dtype
+        ]
+        nulls = pa.array([v is None for v in values], pa.bool_())
+        return pa.StructArray.from_arrays(children, fields=list(dtype), mask=nulls)
+    if pa.types.is_list(dtype):
+        offsets, flat = [0], []
+        for v in values:
+            flat.extend(v or ())
+            offsets.append(len(flat))
+        items = _arrow_column(flat, dtype.value_type, f"{path}[]")
+        nulls = pa.array([v is None for v in values], pa.bool_())
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), items, type=dtype, mask=nulls)
+    try:
+        arr = pa.array(values)
+        src = arr.type
+        if pa.types.is_string(dtype):
+            ok = pa.types.is_string(src)
+        else:
+            ok = pa.types.is_integer(src) or pa.types.is_floating(src)
+        if not (ok or pa.types.is_null(src)):
+            raise pa.ArrowTypeError(f"{src} values do not load as {dtype}")
+        return arr.cast(dtype, safe=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
+        raise TypeError(f"records_to_df: field {path}: {exc}") from exc
+
+
 def records_to_df(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """Materialize raw JSON records with the explicit nested schema (S2)."""
-    return spark.createDataFrame([project_raw(r) for r in records], WEATHER_RAW_SCHEMA)
+    """Materialize raw JSON records with the explicit nested schema (S2).
+
+    The projected rows become one ``pyarrow.Table`` (:func:`_arrow_column`)
+    handed to ``spark.createDataFrame``, so no Python worker runs; the
+    frame is ``coalesce(1)``: driver records are driver-sized by
+    definition (:func:`fetch_many` is the executor-parallel path), and one
+    partition makes a downstream ``dropDuplicates`` exchange-free.
+
+    Type contract: JSON numbers load into numeric fields losslessly — an
+    integral ``"temp": 20`` is ``20.0`` — and a value that would lose
+    information (``"humidity": 55.5``) or has the wrong kind (a string
+    temperature) raises ``TypeError``. Missing keys load as NULL and a
+    missing ``weather`` list as ``[]`` (:func:`project_raw`)."""
+    rows = [project_raw(r) for r in records]
+    table = pa.Table.from_struct_array(_arrow_column(rows, _WEATHER_RAW_ARROW, "record"))
+    return spark.createDataFrame(table, WEATHER_RAW_SCHEMA).coalesce(1)
 
 
 def fetch_many(
