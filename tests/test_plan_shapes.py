@@ -259,6 +259,39 @@ def test_pdv_read_has_no_exchange(spark, tmp_path):
     assert sorted(out.collect()) == [r for r in before if not 100 <= r.k <= 199]
 
 
+def test_vector_covered_reads_run_no_job(spark, tmp_path):
+    """Building a ``read()`` and a ``read_where()`` covered by a key
+    deletion vector and a position deletion vector runs no job: the key
+    vector is typed from its footer, the position vector read with its
+    own schema."""
+    from pyspark.sql import functions as F
+
+    from weather_etl_docker_airflow_project_spark.operators.versioned import (
+        VersionedTable,
+        delete_by_keys,
+        delete_where,
+    )
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(
+        spark.range(0, 400)
+        .select(F.col("id").alias("k"), (F.col("id") * 2.0).alias("v"))
+        .repartition(4)
+    )
+    delete_by_keys(
+        t, spark.range(5, 8).select(F.col("id").alias("k")), ["k"], merge_on_read=True
+    )
+    v = delete_where(t, "k BETWEEN 100 AND 199", merge_on_read=True)
+    assert t.deletion_vectors(v) and t.position_dvs(v)
+    (full, (where, _)), jobs = _jobs_run(
+        spark, lambda: (t.read(), t.read_where("k < 300"))
+    )
+    assert jobs == 0
+    kept = [k for k in range(400) if not (5 <= k < 8 or 100 <= k <= 199)]
+    assert sorted(r.k for r in full.collect()) == kept
+    assert sorted(r.k for r in where.collect()) == [k for k in kept if k < 300]
+
+
 def test_salted_agg_spreads_hot_key(spark):
     """a13: the two-phase salted aggregate must (a) group by (key, _salt)
     in phase 1 — the plan carries TWO aggregate exchanges, the first

@@ -355,6 +355,27 @@ def _parquet_files(d: str) -> list[str]:
     )
 
 
+# The position-vector file schema: the library writes every vector with it.
+PDV_SCHEMA = "file string, pos long"
+
+
+def _read_key_vector(spark: SparkSession, path: str) -> DataFrame:
+    """A key deletion vector, typed from one driver-side footer read of
+    the Spark schema recorded when the vector was written, so building a
+    covered read runs no schema-inference job."""
+    parts = _parquet_files(path)
+    if not parts:
+        # missing or empty: Spark raises its own AnalysisException
+        return spark.read.parquet(path)
+    import pyarrow.parquet as pq  # local import: keep module light
+
+    meta = pq.read_schema(parts[0]).metadata
+    schema = StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def _feed_schema(schema: StructType) -> StructType:
     """The change-feed read schema (Delta's): the table's columns plus
     ``_change_type`` (string) and ``_commit_version`` (long)."""
@@ -1820,7 +1841,7 @@ class VersionedTable:
             else:
                 df = _delog(reader.parquet(*group))
             for dv_path in covering:
-                dv_keys = self.spark.read.parquet(dv_path).distinct()
+                dv_keys = _read_key_vector(self.spark, dv_path).distinct()
                 # KEY-SET DV size contract: vectors are applied as
                 # BROADCAST anti-joins, so a covered read stays one
                 # map-side pass with no shuffle of the (possibly huge)
@@ -2261,7 +2282,7 @@ class VersionedTable:
                 # pruned by read_at_keys; a dv key absent from the
                 # table produces no phantom delete)
                 for dv in d.new_dvs:
-                    dv_keys = self.spark.read.parquet(dv["path"]).select(
+                    dv_keys = _read_key_vector(self.spark, dv["path"]).select(
                         *keys
                     )
                     deleted = self.read_at_keys(
@@ -4061,13 +4082,14 @@ def _delete_where_positions(
             ],
         )
         for dv_path in cov:
-            dv_keys = spark.read.parquet(dv_path).distinct()
+            dv_keys = _read_key_vector(spark, dv_path).distinct()
             part = part.join(
                 F.broadcast(dv_keys), list(dv_keys.columns), "left_anti"
             )
         for p in pcov:
             prior = (
-                spark.read.parquet(p)
+                spark.read.schema(PDV_SCHEMA)
+                .parquet(p)
                 .select(F.col("file").alias(FCOL), F.col("pos").alias(PCOL))
                 .distinct()
             )
@@ -4261,14 +4283,7 @@ def _mapped_schema_commit_guards(
         import pyarrow.parquet as pq
 
         for dv in table.deletion_vectors(committed[-1]):
-            dv_cols = pq.read_schema(
-                next(
-                    os.path.join(r, f)
-                    for r, _s, fs in os.walk(dv["path"])
-                    for f in sorted(fs)
-                    if f.endswith(".parquet")
-                )
-            ).names
+            dv_cols = pq.read_schema(_parquet_files(dv["path"])[0]).names
             if col in dv_cols:
                 raise ValueError(
                     f"cannot {verb} {col!r}: an active deletion vector "

@@ -9,6 +9,29 @@ Scale posture: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), shuffle partitions sized for the local harness but meant to be
 overridden (``spark.sql.shuffle.partitions`` ~ 2-3x total cores on a real
 cluster). Arrow enabled for any Pandas-UDF path.
+
+Python workers: PySpark's worker calls ``importlib.invalidate_caches()``
+before every task (``pyspark/worker_util.py:setup_spark_files``). Under
+Python 3.11 and 3.12 every ``zipimporter`` answers that by re-reading its
+whole archive directory, and a worker's path always holds ``pyspark.zip``,
+the py4j zip and the ``spark-core`` jar: 16 importers, 150-230 ms before
+each task runs its function. ``build_session`` sets two things so the
+engine's sessions skip the re-read of unchanged archives:
+
+- ``spark.python.daemon.module`` = ``worker_daemon``, which re-reads an
+  archive only when its mtime or size changed, then runs PySpark's daemon;
+- ``spark.executorEnv.PYTHONPATH`` = the directory holding this package, so
+  workers can import that module whatever the driver's cwd and PYTHONPATH.
+  On a cluster the package must sit at that path or be installed on the
+  executors.
+
+Python worker memory: neither ``spark.executor.pyspark.memory`` nor
+``spark.executor.memoryOverhead`` is set. In local mode the workers are
+processes outside the driver heap, so neither applies. On a cluster the
+workers' memory counts against the executor's overhead; size it for
+cores-per-executor times the largest data file as decoded Arrow, because
+the position-vector scan and the Python DataSources read one whole file
+per task (``versioned.read_projected``).
 """
 
 from __future__ import annotations
@@ -19,6 +42,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The directory holding this package: the Python workers import the daemon
+# module from it whatever the driver's cwd or PYTHONPATH.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -106,6 +132,10 @@ def build_session(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers fork from the library's daemon, which stops the
+        # per-task re-read of unchanged zip archives (module docstring).
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
