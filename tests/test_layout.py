@@ -1,6 +1,5 @@
-"""Layout-management tests (operators/layout.py): compaction reduces file
-count without touching content; clustered writes give files disjoint key
-envelopes that a pruning scan can exploit."""
+"""Layout-management tests (operators/layout.py): clustered writes give
+files disjoint key envelopes that a pruning scan can exploit."""
 
 from __future__ import annotations
 
@@ -11,37 +10,8 @@ from pyspark.sql import functions as F
 
 from weather_etl_docker_airflow_project_spark.operators.layout import (
     clustered_write,
-    compact_parquet,
     file_column_envelopes,
-    _data_files,
 )
-
-
-def test_compaction_reduces_files_preserves_content(spark):
-    src = tempfile.mkdtemp(prefix="compact_src_")
-    dst = os.path.join(tempfile.mkdtemp(prefix="compact_dst_"), "out")
-    df = spark.range(10_000).select(
-        F.col("id"), F.md5(F.col("id").cast("string")).alias("payload")
-    )
-    df.repartition(64).write.mode("overwrite").parquet(src)  # 64 tiny files
-    assert len(_data_files(src)) == 64
-
-    n_out = compact_parquet(spark, src, dst, target_file_bytes=1 << 30)
-    assert n_out < 64
-    before = sorted(map(tuple, spark.read.parquet(src).collect()))
-    after = sorted(map(tuple, spark.read.parquet(dst).collect()))
-    assert before == after
-
-
-def test_compaction_sizes_output_from_input_bytes(spark):
-    """A tiny target size must yield multiple output files, not one."""
-    src = tempfile.mkdtemp(prefix="compact_src2_")
-    dst = os.path.join(tempfile.mkdtemp(prefix="compact_dst2_"), "out")
-    spark.range(50_000).select(
-        F.col("id"), F.md5(F.col("id").cast("string")).alias("p")
-    ).repartition(4).write.mode("overwrite").parquet(src)
-    n_out = compact_parquet(spark, src, dst, target_file_bytes=64 * 1024)
-    assert n_out > 1
 
 
 def test_clustered_write_disjoint_envelopes(spark):

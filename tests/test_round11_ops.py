@@ -436,7 +436,7 @@ def test_read_at_keys_prunes_and_matches(spark, tmp_path):
     )
 
     split = _granular_split(t, 1, probe, ["k"])
-    assert split is not None and len(split[1]) < len(t._manifest(1))
+    assert split[3] is not None and len(split[1]) < len(t._manifest(1))
 
 
 def test_read_at_keys_fallback_unbucketed(spark, tmp_path):

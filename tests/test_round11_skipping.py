@@ -368,7 +368,9 @@ def test_granular_split_key_type_mismatch_falls_back(spark, tmp_path):
     t.set_layout(["k"], 8)
     t.commit(spark.createDataFrame([(i, "old") for i in range(20)], "k bigint, v string"))
     src_int = spark.createDataFrame([(5, "new")], "k int, v string")
-    assert _granular_split(t, 1, src_int, ["k"]) is None  # guard trips
+    # guard trips: the whole manifest is the scope, not granular
+    carry, scope, _, n_touched = _granular_split(t, 1, src_int, ["k"])
+    assert n_touched is None and not carry and scope == t._manifest(1)
     merge_upsert(t, src_int.withColumn("k", F.col("k").cast("bigint")), keys=["k"])
     rows = {r.k: r.v for r in t.read().collect()}
     assert rows[5] == "new" and len(rows) == 20  # no duplicate key 5

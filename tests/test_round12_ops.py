@@ -231,7 +231,7 @@ def test_superset_key_merge_takes_granular_path(spark, tmp_path):
         [Row(k=7, extra=1, val=777.0), Row(k=500, extra=2, val=5.0)]
     )
     split = _granular_split(t, 1, src, ["k", "extra"])
-    assert split is not None, "superset-key rewrite did not take the granular path"
+    assert split[3] is not None, "superset-key rewrite did not take the granular path"
     v2 = merge_upsert(t, src, keys=["k", "extra"])
     carried = set(t._manifest(v2)) & base_dirs
     assert len(carried) >= len(base_dirs) - 2

@@ -9,6 +9,8 @@ Contract under test:
 - granular merge ∥ disjoint-bucket commit: commutes, auto-rebases;
 - granular merge ∥ same-bucket commit / DV change: hard conflict,
   ConcurrentCommitError (caller re-runs);
+- a keyed merge/delete that is NOT bucket-granular ∥ any commit, even
+  an append into a bucket no base dir holds: hard conflict;
 - scoped OPTIMIZE ∥ append: commutes, appended dirs carry unclustered.
 """
 
@@ -202,6 +204,46 @@ def test_disjoint_granular_deletes_both_land(spark, tmp_path, monkeypatch):
     assert 2 not in remaining and diff not in remaining
     assert len(remaining) == 62
     del same
+
+
+@pytest.mark.parametrize("rewrite", ["merge", "delete"])
+def test_non_granular_keyed_rewrite_refuses_disjoint_bucket_append(
+    spark, tmp_path, monkeypatch, rewrite
+):
+    """Keys that do not cover the bucket keys make the rewrite a
+    whole-snapshot one: a concurrent append can hold rows matching its
+    keys in ANY bucket, including one no base dir holds. Rebasing over
+    it (as a granular rewrite would over a disjoint bucket) would leave
+    the appended key-1 row unmerged / undeleted."""
+    ddl = "k long, g long, v string"
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.set_layout(["g"], 8)
+    t.commit(spark.createDataFrame([(i, 0, f"v{i}") for i in range(20)], ddl))
+    assert len(t._manifest(1)) == 1  # every base row is in g=0's bucket
+    _same, other_g = _keys_same_diff_bucket(spark, 0, 8, lo=1, hi=100)
+
+    def apply():
+        if rewrite == "merge":
+            src = spark.createDataFrame([(1, 0, "A")], ddl)
+            return merge_upsert(t, src, keys=["k"])
+        dels = spark.createDataFrame([(1,)], "k long")
+        return delete_by_keys(t, dels, keys=["k"])
+
+    _race_read(
+        monkeypatch,
+        t,
+        lambda: VersionedTable(spark, t.dir).commit(
+            spark.createDataFrame([(1, other_g, "late")], ddl)
+        ),
+    )
+    with pytest.raises(ConcurrentCommitError):
+        apply()
+    assert t.latest_version() == 2  # only the interloper landed
+    # the retry against the new base sees the appended key-1 row too
+    apply()
+    key1 = [r.v for r in t.read().collect() if r.k == 1]
+    assert key1 == (["A"] if rewrite == "merge" else [])
+    assert t.read().count() == (20 if rewrite == "merge" else 19)
 
 
 def test_optimize_rebases_over_concurrent_append(spark, tmp_path, monkeypatch):

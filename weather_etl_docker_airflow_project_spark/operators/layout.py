@@ -1,13 +1,7 @@
-"""File-layout management: small-file compaction and multi-column
-clustered writes (SURVEY.md §2.12 / S8 extensions).
+"""File-layout management: multi-column clustered writes (SURVEY.md
+§2.12 / S8 extensions). Small-file compaction lives with the versioned
+table (``operators/versioned.compact`` and ``compact_incremental``).
 
-These are the table-maintenance jobs a 100 TB lakehouse runs nightly:
-
-- **Compaction** fixes the small-files problem (streaming sinks and
-  over-parallel writers emit thousands of KB-sized files; scans then pay
-  per-file open/footer costs and the driver pays listing). The operator
-  sizes the output file count from the actual input bytes, never a
-  hardcoded partition count.
 - **Clustered write** is the poor-man's Z-order: repartitionByRange on the
   cluster keys + sortWithinPartitions gives each output file a narrow
   min/max envelope on those keys, so engines that prune on parquet
@@ -17,26 +11,16 @@ These are the table-maintenance jobs a 100 TB lakehouse runs nightly:
   common leading-dimension workload, range-cluster-then-sort is equal or
   better and needs no bit-interleave UDF.
 
-Neither operator changes row content — tests assert content equality plus
-the layout property (file count / per-file key envelopes via parquet
-footer statistics).
+Neither writer changes row content — tests assert content equality plus
+the layout property (per-file key envelopes via parquet footer
+statistics).
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+from pyspark.sql import DataFrame
 
 
 def _data_files(path: str, suffix: str = ".parquet") -> list[str]:
@@ -46,28 +30,6 @@ def _data_files(path: str, suffix: str = ".parquet") -> list[str]:
             if f.endswith(suffix) and not f.startswith(("_", ".")):
                 out.append(os.path.join(root, f))
     return sorted(out)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ``ceil(input_bytes / target)``
-    similarly-sized files. Returns the output file count.
-
-    Uses ``coalesce`` (narrow, no shuffle) when shrinking the file count —
-    the normal compaction direction — and falls back to ``repartition``
-    only when the input has FEWER partitions than the target (splitting
-    requires a shuffle). At scale this runs per table-partition, so the
-    coalesce never serializes the whole table through one task."""
-    n_files = max(1, math.ceil(_dir_bytes(src_dir) / target_file_bytes))
-    df = spark.read.parquet(src_dir)
-    in_parts = df.rdd.getNumPartitions()
-    out = df.coalesce(n_files) if in_parts >= n_files else df.repartition(n_files)
-    out.write.mode("overwrite").parquet(dst_dir)
-    return len(_data_files(dst_dir))
 
 
 def clustered_write(

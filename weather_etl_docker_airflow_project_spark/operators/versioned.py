@@ -1377,14 +1377,16 @@ class VersionedTable:
         expected_base_version: int | None = None,
         allow_schema_evolution: bool = False,
         op: str | None = None,
-        extra: dict | Callable[[], dict] | None = None,
+        extra: dict | None = None,
     ) -> int:
         """Write ``df`` as a new immutable batch and publish the next
         version. ``mode='append'`` extends the previous version's
         manifest; ``mode='overwrite'`` starts the new version from just
         this batch (old versions stay readable). ``extra`` holds this
-        commit's own :class:`Manifest` fields (``cdf``, ``sbatch``,
-        ``idhwm``); a callable is resolved once, after the batch write.
+        commit's own :class:`Manifest` fields (``sbatch``, ``idhwm``).
+        Row-rewriting writes (merge, key and predicate DML, compaction)
+        do not come through here: they stage and publish through
+        :func:`_rewrite`, which also stages their change feed.
 
         Concurrency: publication is optimistic CAS — the manifest lands
         via atomic create-if-absent (``os.link``), so when two writers
@@ -1397,8 +1399,8 @@ class VersionedTable:
         the same substrate Delta's commit protocol needs).
 
         ``expected_base_version`` is the read-modify-write guard: a
-        writer that READ version B to produce ``df`` (compaction, any
-        future MERGE) passes B, and the commit publishes B+1 or raises
+        writer that READ version B to produce ``df`` passes B, and the
+        commit publishes B+1 or raises
         :class:`ConcurrentCommitError` — never a later number. Without
         it, a concurrent append landing between that writer's read and
         its publish would get a LOWER version than the rewrite, and the
@@ -1514,10 +1516,7 @@ class VersionedTable:
             df.columns, existing[-1] if existing else None
         )
         new_dirs = self._write_batch(df, base + 1, colmap=colmap)
-        # deferred staging (a CDF dir written concurrently with the
-        # batch write — guide §2.6): resolve ONCE, after our own write,
-        # before any publish attempt
-        own = (extra() if callable(extra) else extra) or {}
+        own = extra or {}
 
         def build(b: int) -> Manifest:
             # an append extends the base manifest; its active deletion
@@ -1785,6 +1784,28 @@ class VersionedTable:
             (keep if hit else pruned).append(d)
         return keep, pruned
 
+    def _scan_reader(self, version: int) -> tuple:
+        """``(reader, logical)``: a parquet reader under the version's
+        recorded schema (when present), in PHYSICAL column names on a
+        column-mapped table, and the select list naming those columns
+        back to logical (None when the scan names already are)."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructField
+
+        reader = self.spark.read
+        schema = self.snapshot_schema(version)
+        colmap = self.column_mapping(version)
+        if schema is None:
+            return reader, None
+        if not colmap:
+            return reader.schema(schema), None
+        phys = [
+            StructField(colmap[f.name], f.dataType, f.nullable)
+            for f in schema.fields
+        ]
+        logical = [F.col(colmap[f.name]).alias(f.name) for f in schema.fields]
+        return reader.schema(StructType(phys)), logical
+
     def _read_dirs(self, dirs: list[str], version: int) -> DataFrame:
         """Scan a subset of a version's dirs under the VERSION's recorded
         schema (when present) — bucket-pruned reads must fill evolved-in
@@ -1794,37 +1815,14 @@ class VersionedTable:
         covering DV key sets, groups union back. A dir added after a DV
         was created is uncovered, so re-inserted keys stay visible."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField
 
-        reader = self.spark.read
-        schema = self.snapshot_schema(version)
-        colmap = self.column_mapping(version)
-        if schema is not None and colmap:
-            # scan under PHYSICAL names, alias back to logical right
+        reader, logical = self._scan_reader(version)
+
+        def _delog(df):
+            # scanned under PHYSICAL names, aliased back to logical right
             # after — everything downstream (DV anti-joins included)
             # stays logical
-            phys_schema = StructType(
-                [
-                    StructField(colmap[f.name], f.dataType, f.nullable)
-                    for f in schema.fields
-                ]
-            )
-            reader = reader.schema(phys_schema)
-
-            def _delog(df):
-                return df.select(
-                    *[
-                        F.col(colmap[f.name]).alias(f.name)
-                        for f in schema.fields
-                    ]
-                )
-
-        else:
-            if schema is not None:
-                reader = reader.schema(schema)
-
-            def _delog(df):
-                return df
+            return df.select(*logical) if logical else df
 
         if not self.deletion_vectors(version) and not self.position_dvs(version):
             return _delog(reader.parquet(*dirs))
@@ -1974,15 +1972,10 @@ class VersionedTable:
         same result, no pruning. NULL lookup keys match nothing (plain
         equality, consistent with merge/delete)."""
         v = self._resolve(version)
-        split = _granular_split(self, v, keys_df, keys)
-        if split is not None:
-            _carry, touched_dirs = split[0], split[1]
-            if not touched_dirs:
-                return self.read(version=v).limit(0)
-            base = self._read_dirs(touched_dirs, v)
-        else:
-            base = self.read(version=v)
-        return base.join(keys_df.select(*keys), keys, "left_semi")
+        _carry, scope, _, n_touched = _granular_split(self, v, keys_df, keys)
+        return _keyed_read(self, v, scope, n_touched).join(
+            keys_df.select(*keys), keys, "left_semi"
+        )
 
     def _deltas(
         self, v_from: int, v_to: int, complete: bool = False
@@ -2513,13 +2506,11 @@ def compact_incremental(
             or any((_dir_min_file_bytes(d) or 0) < min_bytes for d in ds)
         }
         scope = [d for d in dirs if _dir_bucket(d) in touched_buckets]
-        carry = [d for d in dirs if _dir_bucket(d) not in touched_buckets]
         if not scope:
             return _CompactReport(base_version, n_files_before, n_files_before)
-        rewritten = table._read_dirs(scope, base_version)
-        version = _commit_granular(
-            table, rewritten, scope, base_version, op="compact",
-            write_partitions=len(touched_buckets),
+        version = _rewrite(
+            table, base_version, scope, table._read_dirs(scope, base_version),
+            "compact", commute="buckets", write_partitions=len(touched_buckets),
         )
     else:
         # z-order chunk dirs are NEVER compaction candidates, whatever
@@ -2538,10 +2529,9 @@ def compact_incremental(
             return _CompactReport(base_version, n_files_before, n_files_before)
         scope_bytes = sum(fstats[d][1] for d in scope)
         n_parts = max(1, -(-scope_bytes // target_file_bytes))  # ceil
-        carry = [d for d in dirs if d not in set(scope)]
         rewritten = table._read_dirs(scope, base_version).coalesce(n_parts)
-        version = _commit_scoped_rewrite(
-            table, base_version, scope, rewritten, "compact", None
+        version = _rewrite(
+            table, base_version, scope, rewritten, "compact", commute="appends"
         )
     n_after = sum(
         _dir_file_stats(d)[0] for d in table._manifest(version)
@@ -2559,26 +2549,26 @@ def compact(
     that is the classic small-file problem (every scan pays per-file
     open/footer costs, the driver pays per-file listing). Compaction
     reads the latest snapshot, coalesces it to
-    ``ceil(bytes / target_file_bytes)`` partitions, and publishes the
-    rewrite as a normal OVERWRITE commit — one new batch dir, identical
-    rows.
+    ``ceil(bytes / target_file_bytes)`` partitions, and publishes it
+    through :func:`_rewrite` with every dir of the base in scope — one
+    new batch dir, identical rows.
 
-    Everything rides the existing commit machinery, so every invariant
+    Everything rides the shared rewrite machinery, so every invariant
     holds by construction: old versions stay readable (immutability), a
     torn compaction leaves no visible version, and :func:`vacuum`
     retires the fragment dirs once the retention window passes.
     Compaction is a READ-MODIFY-WRITE, so the bare manifest CAS is not
     enough on its own: a concurrent append landing between our read and
-    our publish would take a lower version number and be silently erased
-    by the rewrite's snapshot. The base version captured before the read
-    is therefore passed as ``expected_base_version`` — the commit
-    publishes exactly base+1 or raises :class:`ConcurrentCommitError`
-    (rows unchanged by definition, so retrying compact() is always
-    safe) — the same conflict rule Delta's OPTIMIZE enforces. Because the rewrite changes NO rows,
-    ``read_changes_cdc`` across the compaction commit emits an EMPTY
-    keyed diff (pytest-pinned) — consumers see a version bump, zero
-    changes; file-level ``read_changes`` refuses the range exactly as
-    for any overwrite (correct: the delta is not an append set).
+    our publish would be silently erased by the rewrite's snapshot. A
+    full compaction therefore refuses EVERY interloper: it publishes
+    exactly base+1 or raises :class:`ConcurrentCommitError` (rows
+    unchanged by definition, so retrying compact() is always safe) —
+    the same conflict rule Delta's OPTIMIZE enforces. Because the
+    rewrite changes NO rows, ``read_changes_cdc`` across the compaction
+    commit emits an EMPTY keyed diff (pytest-pinned) — consumers see a
+    version bump, zero changes; file-level ``read_changes`` refuses the
+    range exactly as for any overwrite (correct: the delta is not an
+    append set).
 
     ``coalesce`` (narrow, no shuffle), not ``repartition``: merging
     fragments needs no redistribution, and a full shuffle of a 100 TB
@@ -2595,14 +2585,8 @@ def compact(
     OPTIMIZE ZORDER."""
     base_version = table._resolve()
     dirs = table._manifest(base_version)
-    total_bytes = 0
-    n_files = 0
-    for d in dirs:
-        for root, _sub, files in os.walk(d):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total_bytes += os.path.getsize(os.path.join(root, f))
-                    n_files += 1
+    fstats = [_dir_file_stats(d) for d in dirs]
+    total_bytes = sum(b for _n, b in fstats)
     n_parts = max(1, -(-total_bytes // target_file_bytes))  # ceil
     df = table.read(version=base_version)
     if table.layout() is None:
@@ -2611,21 +2595,9 @@ def compact(
     # else: the layout-aware batch writer repartitions by bucket id and
     # writes one file per bucket — already the compacted shape; a
     # coalesce here would only serialize the read ahead of that shuffle
-    version = table.commit(
-        df,
-        mode="overwrite",
-        expected_base_version=base_version,
-        op="compact",
-    )
-    after_dirs = table._manifest(version)
-    n_after = sum(
-        1
-        for d in after_dirs
-        for _root, _sub, files in os.walk(d)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    return _CompactReport(version, n_files, n_after)
+    version = _rewrite(table, base_version, dirs, df, "compact", commute=None)
+    n_after = sum(_dir_file_stats(d)[0] for d in table._manifest(version))
+    return _CompactReport(version, sum(n for n, _b in fstats), n_after)
 
 
 class _VacuumReport:
@@ -2884,21 +2856,24 @@ def merge_upsert(
     and writes ~0.1% of the table instead of 100%. Correctness leans on
     one invariant: a key's bucket is a pure function of the key, so any
     target row that COULD match a source row is in a touched bucket by
-    construction. Tables with pre-layout (untagged) batch dirs fall
-    back to the full rewrite — which, being written through the
-    layout-aware batch writer, migrates the table to bucketed dirs so
-    the NEXT merge is granular.
+    construction. Otherwise (:func:`_granular_split`) the scope is the
+    whole snapshot — the same path, every base dir rewritten — which,
+    being written through the layout-aware batch writer, migrates a
+    table with pre-layout (untagged) dirs to bucketed dirs so the NEXT
+    merge is granular.
 
-    Read-modify-write safety: the base version is captured BEFORE the
-    target read and pinned through ``expected_base_version``, so a
-    concurrent append landing mid-merge fails THIS commit with
+    Read-modify-write safety: the merge publishes through
+    :func:`_rewrite` against the base version captured BEFORE the
+    target read. A bucket-granular merge rebases over interlopers
+    confined to DISJOINT buckets; any other concurrent commit — and
+    every interloper of a whole-snapshot merge — fails THIS commit with
     :class:`ConcurrentCommitError` (re-run to retry against the new
     base) instead of being silently erased by the rewrite — the same
     conflict rule as :func:`compact`.
 
     ``validate_source_keys``: Delta raises when multiple source rows
     match one target row (the merge would be ambiguous); one count
-    vs distinct-count job enforces the same contract here.
+    vs distinct-count aggregate enforces the same contract here.
     """
     if not keys:
         raise ValueError("merge_upsert needs at least one merge key")
@@ -2912,16 +2887,13 @@ def merge_upsert(
     # pin also freezes read-modify-write sources derived from this very
     # table). DISK_ONLY: tiny sources pay ~nothing, corpus-sized ones
     # must not park deserialized in the executors' heap (r10 lesson).
+    from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
     source = source.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
     target = table.read(version=base_version)
     val_aggs = None
-    val_fut = None
-    val_pool = None
     if validate_source_keys:
-        from pyspark.sql import functions as F
-
         # duplicate-key validation aggregates, piggybacked on the
         # granular split's bucket job when a layout applies (r16 — one
         # pass over the source instead of two). COUNT(DISTINCT k1..kn)
@@ -2935,22 +2907,12 @@ def merge_upsert(
             F.count(F.when(nn, F.lit(1))).alias("_n"),
             F.count_distinct(*[F.col(k) for k in keys]).alias("_nd"),
         ]
-    split = _granular_split(
+    _carry, scope, val_counts, n_touched = _granular_split(
         table, base_version, source, keys, extra_aggs=val_aggs
     )
-    val_counts = None
-    n_touched_buckets = None
-    if split is not None:
-        carry, touched_dirs, val_counts, n_touched_buckets = split
-        # the merge target shrinks to the touched buckets; everything
-        # else rides into the new manifest by reference below
-        target_side = (
-            table._read_dirs(touched_dirs, base_version)
-            if touched_dirs
-            else target.limit(0)
-        )
-    else:
-        target_side = target
+    # a granular merge's target shrinks to the touched buckets;
+    # everything else rides into the new manifest by reference
+    target_side = _keyed_read(table, base_version, scope, n_touched, target)
     missing = [k for k in keys if k not in source.columns]
     absent = [c for c in target.columns if c not in source.columns]
     extra = [c for c in source.columns if c not in target.columns]
@@ -2970,42 +2932,35 @@ def merge_upsert(
         # new manifest records the evolved schema while untouched bucket
         # dirs carry by reference — their old files null-fill at read
         # via the recorded-schema scan, so evolution costs nothing extra
-        from pyspark.sql import functions as F
-
         src_types = {f.name: f.dataType for f in source.schema.fields}
         target_side = target_side.select(
             "*",
             *[F.lit(None).cast(src_types[c]).alias(c) for c in extra],
         )
     out_cols = list(target.columns) + extra
+    check = None
     if validate_source_keys:
-        from pyspark.sql import functions as F
-
-        # count_distinct ignores NULLs, so restrict the duplicate check
-        # to non-NULL-key rows: a NULL merge key never equi-matches any
-        # target row (standard SQL MERGE: NOT MATCHED -> plain insert),
-        # so NULL-key source rows are legal and must not trip the
-        # ambiguity error — only true key collisions are ambiguous.
-        if val_counts is not None:
-            n, nd = val_counts  # rode the granular split's bucket job
+        def _unambiguous(n: int, nd: int) -> None:
             if n != nd:
                 raise ValueError(
                     f"merge source has {n - nd} duplicate merge-key rows: "
                     "a target row would match multiple source rows "
                     "(ambiguous merge, the Delta error contract)"
                 )
-        else:
-            # full-rewrite path (no bucket job to ride): run the
-            # validation aggregate CONCURRENTLY with the merged-batch
-            # write and check it right before the manifest publish (r16,
-            # guide §2.6) — the checkpointed source makes the two jobs
-            # independent. A duplicate-key source still publishes
-            # NOTHING: the check raises before _publish_manifest, so the
-            # staged batch stays unreferenced (torn-commit rollback, the
-            # same contract CHECK constraints use — they too validate
-            # during the write, not before it).
-            from concurrent.futures import ThreadPoolExecutor
 
+        if val_counts is not None:
+            _unambiguous(*val_counts)  # rode the granular split's bucket job
+        else:
+            # whole-snapshot path (no bucket job to ride): the aggregate
+            # runs alongside the merged-batch write and is checked before
+            # the publish (r16) — a duplicate-key source still publishes
+            # NOTHING, its staged batch stays unreferenced (torn-commit
+            # rollback, the contract CHECK constraints use too).
+            # count_distinct ignores NULLs, so the count skips NULL-key
+            # rows as well: a NULL merge key never equi-matches any
+            # target row (standard SQL MERGE: NOT MATCHED -> plain
+            # insert), so NULL-key source rows are legal and must not
+            # trip the ambiguity error — only true key collisions are.
             nonnull = source
             for k in keys:
                 nonnull = nonnull.filter(F.col(k).isNotNull())
@@ -3013,8 +2968,10 @@ def merge_upsert(
                 F.count(F.lit(1)),
                 F.count_distinct(*[F.col(k) for k in keys]),
             )
-            val_pool = ThreadPoolExecutor(max_workers=1)
-            val_fut = val_pool.submit(val_agg.first)
+
+            def check() -> None:
+                _unambiguous(*val_agg.first())
+
     if when_matched_condition is None:
         survivors = target_side.join(source.select(*keys), keys, "left_anti")
         merged = source.select(*out_cols).unionByName(survivors)
@@ -3027,8 +2984,6 @@ def merge_upsert(
         # is FALSE/UNKNOWN is carried over untouched; unmatched source
         # rows still insert. Same shuffle shape: every join keys on the
         # merge keys.
-        from pyspark.sql import functions as F
-
         s, t = source.alias("s"), target_side.alias("t")
         # plain equality (NULL never matches), consistent with the
         # unconditional path's anti-join semantics and SQL MERGE ON
@@ -3050,8 +3005,7 @@ def merge_upsert(
             .unionByName(upd)
             .unionByName(ins.select(*out_cols))
         )
-    cdf_headers = None
-    cdf_pool = None
+    changes = None
     if table.change_data_feed_enabled():
         # CHANGE DATA FEED: tag each source row update-vs-insert and
         # stage the result as this commit's cdf rows — ONE extra job:
@@ -3063,8 +3017,6 @@ def merge_upsert(
         # it re-executes the source plan twice.)
         # Matched-but-condition-false rows change nothing and emit
         # nothing.
-        from pyspark.sql import functions as F
-
         if when_matched_condition is None:
             # matched keys = target keys ∩ source keys, computed as ONE
             # map-side pass: a column-pruned scan of the touched
@@ -3084,7 +3036,7 @@ def merge_upsert(
                 .distinct()
                 .withColumn("_cdf_m", F.lit(1))
             )
-            change_df = (
+            changes = (
                 source.select(*out_cols)
                 .join(F.broadcast(matched), keys, "left")
                 .withColumn(
@@ -3096,62 +3048,18 @@ def merge_upsert(
                 .drop("_cdf_m")
             )
         else:
-            change_df = upd.withColumn(
+            changes = upd.withColumn(
                 "_change_type", F.lit("update")
             ).unionByName(
                 ins.select(*out_cols).withColumn(
                     "_change_type", F.lit("insert")
                 )
             )
-        # Stage the feed CONCURRENTLY with the merged-batch write (guide
-        # §2.6 — the two writes are independent: both read only the
-        # checkpointed source and the base version's immutable dirs).
-        # commit/_commit_granular resolve the callable right before the
-        # manifest publish, so the feed still lands atomically with the
-        # commit or not at all (a failure on either side leaves only
-        # unreferenced staging — vacuum bait, the torn-commit contract).
-        from concurrent.futures import ThreadPoolExecutor
-
-        cdf_pool = ThreadPoolExecutor(max_workers=1)
-        cdf_fut = cdf_pool.submit(
-            table._stage_cdf, change_df, base_version + 1
-        )
-        cdf_headers = lambda: {"cdf": cdf_fut.result()}  # noqa: E731
-    headers_cb = cdf_headers
-    if val_fut is not None:
-        # fold the deferred duplicate-key check into the pre-publish
-        # callable: commit resolves it after its own batch write and
-        # before any publish attempt, so an ambiguous merge still
-        # publishes nothing (the staged batch is vacuum bait)
-        _base_headers = cdf_headers
-
-        def headers_cb():
-            n, nd = val_fut.result()
-            if n != nd:
-                raise ValueError(
-                    f"merge source has {n - nd} duplicate merge-key rows: "
-                    "a target row would match multiple source rows "
-                    "(ambiguous merge, the Delta error contract)"
-                )
-            return _base_headers() if _base_headers else {}
-
-    try:
-        if split is not None:
-            return _commit_granular(
-                table, merged, touched_dirs, base_version, extra=headers_cb,
-                write_partitions=n_touched_buckets,
-            )
-        return table.commit(
-            merged, mode="overwrite", expected_base_version=base_version,
-            op="merge", allow_schema_evolution=bool(extra),
-            extra=headers_cb,
-        )
-    finally:
-        # an abort path must not leak staging/validation jobs past this call
-        if cdf_pool is not None:
-            cdf_pool.shutdown(wait=True)
-        if val_pool is not None:
-            val_pool.shutdown(wait=True)
+    return _rewrite(
+        table, base_version, scope, merged, "merge",
+        commute="buckets" if n_touched is not None else None,
+        changes=changes, check=check, write_partitions=n_touched,
+    )
 
 
 def _granular_split(
@@ -3160,13 +3068,17 @@ def _granular_split(
     keyed: DataFrame,
     keys: list[str],
     extra_aggs: list | None = None,
-) -> tuple[list[str], list[str], tuple | None, int] | None:
-    """Decide whether a keyed rewrite (merge/delete) can be
-    bucket-granular against ``base_version``, and split the manifest:
-    returns ``(carry_dirs, touched_dirs)`` — untouched bucket dirs to
-    carry by reference, touched bucket dirs to read/rewrite — or None
-    when the full-rewrite path must run (no layout, rewrite keys don't
-    cover the bucket keys, or pre-layout untagged dirs present).
+) -> tuple[list[str], list[str], tuple | None, int | None]:
+    """Split ``base_version``'s manifest for a keyed rewrite
+    (merge/delete) or lookup: returns ``(carry_dirs, scope_dirs, extra,
+    n_touched)``. When the rewrite can be bucket-granular, the scope is
+    the touched bucket dirs to read/rewrite, the carry the untouched
+    bucket dirs that ride by reference, and ``n_touched`` the number of
+    touched buckets. Otherwise — no layout, rewrite keys that don't
+    cover the bucket keys, a key type that hashes differently, or
+    pre-layout untagged dirs present — the scope is the WHOLE manifest,
+    nothing carries and ``n_touched`` is None: the caller rewrites the
+    whole snapshot (:func:`_keyed_read`) and refuses every interloper.
 
     The trigger is ``rewrite keys ⊇ bucket keys`` (r11 verdict item 5 —
     exact equality was correct but needlessly narrow): a rewrite keyed
@@ -3182,11 +3094,13 @@ def _granular_split(
     columns on that same job (r16 — merge_upsert folds its duplicate-key
     validation in, one pass over the keyed feed instead of two); their
     values come back as the third tuple element (None when no extras
-    were requested — including when the split itself returns None, in
-    which case the caller must run them separately)."""
+    were requested, and when no bucket job ran — the caller must then
+    run them separately)."""
+    dirs = table._manifest(base_version)
+    whole = [], dirs, None, None
     layout = table.layout()
     if layout is None or not set(layout["bucket_keys"]) <= set(keys):
-        return None
+        return whole
     # the bucket hash is TYPE-sensitive (xxhash64(int32 5) !=
     # xxhash64(int64 5), probed on this build): a source whose key dtype
     # differs from the table's committed dtype would compute the wrong
@@ -3200,10 +3114,9 @@ def _granular_split(
         for k in layout["bucket_keys"]:
             if k in table_types and k in keyed_types:
                 if table_types[k] != keyed_types[k]:
-                    return None
-    dirs = table._manifest(base_version)
+                    return whole
     if any(_dir_bucket(d) is None for d in dirs):
-        return None
+        return whole
     from pyspark.sql import functions as F
 
     bcol = _bucket_column(layout["bucket_keys"], layout["n_buckets"])
@@ -3216,11 +3129,30 @@ def _granular_split(
     carry = [d for d in dirs if _dir_bucket(d) not in touched]
     touched_dirs = [d for d in dirs if _dir_bucket(d) in touched]
     # len(touched) rides along so the rewrite's writer can size its
-    # shuffle to the buckets actually touched (r16, guide §6): a sparse
+    # shuffle to the buckets actually touched (r16): a sparse
     # merge/delete over a 32-bucket table otherwise schedules 32 write
     # tasks for 2 buckets of data — at any scale one task per touched
     # bucket is the layout-preserving minimum
     return carry, touched_dirs, extra, len(touched)
+
+
+def _keyed_read(
+    table: VersionedTable,
+    version: int,
+    scope: list[str],
+    n_touched: int | None,
+    whole: DataFrame | None = None,
+) -> DataFrame:
+    """The rows a keyed rewrite or lookup must see, per its
+    :func:`_granular_split`: the touched buckets' dirs when the split is
+    granular (no rows when no bucket holds a key), else the whole
+    snapshot through :meth:`VersionedTable.read` (``whole``, when the
+    caller already built it)."""
+    if n_touched is not None and scope:
+        return table._read_dirs(scope, version)
+    if whole is None:
+        whole = table.read(version=version)
+    return whole if n_touched is None else whole.limit(0)
 
 
 def _commuting_rebase(
@@ -3298,18 +3230,24 @@ def _publish_rewrite(
     colmap: dict | None,
     op: str,
     extra: dict | None = None,
-    forbid_buckets: set | None = None,
+    *,
+    commute: str | None,
 ) -> int:
     """Publish a scoped rewrite: the already-staged ``new_dirs`` replace
     the ``scope`` dirs, and every other dir of the base carries BY
     REFERENCE (with its recorded stats). Deletion vectors survive for
     carried dirs only: the scope was read WITH its vectors applied, so
     the rewrite materialized those deletions. A lost CAS race attempts
-    the metadata-only rebase of :func:`_commuting_rebase` (with
-    ``forbid_buckets`` for keyed granular rewrites) — the already-staged
-    batch is republished on top of the new latest, the carry list
-    recomputed from it."""
+    the metadata-only rebase of :func:`_commuting_rebase` under the
+    ``commute`` rule (see :func:`_rewrite`; None refuses every
+    interloper) — the already-staged batch is republished on top of the
+    new latest, the carry list recomputed from it."""
     scope_real = {os.path.realpath(d) for d in scope}
+    forbid_buckets = (
+        {_dir_bucket(d) for d in scope + new_dirs}
+        if commute == "buckets"
+        else None
+    )
 
     def build(b: int) -> Manifest:
         base = table._parsed(b)
@@ -3327,58 +3265,100 @@ def _publish_rewrite(
             **(extra or {}),
         )
 
-    return _publish_loop(
-        table,
-        base_version,
-        build,
-        lambda b: _commuting_rebase(table, b, scope, forbid_buckets),
-        op,
-    )
+    def rebase(b: int) -> int | None:
+        if commute is None:
+            return None
+        return _commuting_rebase(table, b, scope, forbid_buckets)
+
+    return _publish_loop(table, base_version, build, rebase, op)
 
 
-def _commit_granular(
+def _stage_alongside(
     table: VersionedTable,
-    rewritten: DataFrame,
-    touched_dirs: list[str],
+    version: int,
+    write: Callable[[], object],
+    changes: DataFrame | None = None,
+    check: Callable[[], None] | None = None,
+) -> tuple:
+    """Run a commit's own ``write`` while its change-feed rows
+    (``changes``, staged as the version's cdf dir) and a deferred
+    ``check`` run on worker threads: they are independent jobs over the
+    checkpointed input and the base's immutable dirs, so they overlap
+    the write instead of queueing behind it. Returns ``(write's result,
+    manifest fields)`` — the ``cdf`` field when a feed was staged. Both
+    workers are joined on every exit, so an aborted commit leaks no job
+    past the call; a failing ``check`` raises after the write and before
+    anything is published, leaving only unreferenced staging (vacuum
+    bait, the torn-commit contract)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        checked = pool.submit(check) if check is not None else None
+        staged = (
+            pool.submit(table._stage_cdf, changes, version)
+            if changes is not None
+            else None
+        )
+        out = write()
+        if checked is not None:
+            checked.result()
+        return out, ({"cdf": staged.result()} if staged is not None else {})
+
+
+def _rewrite(
+    table: VersionedTable,
     base_version: int,
-    op: str = "merge",
-    extra: dict | Callable[[], dict] | None = None,
+    scope: list[str],
+    rows: DataFrame,
+    op: str,
+    *,
+    commute: str | None,
+    changes: DataFrame | None = None,
+    check: Callable[[], None] | None = None,
     write_partitions: int | None = None,
 ) -> int:
-    """Publish a bucket-granular rewrite: stage the rewritten buckets as
-    a new batch (layout-aware writer -> per-bucket dirs) replacing the
-    ``touched_dirs`` of the base, every other bucket dir carried. The
-    read-modify-write guard is the version pin itself: a concurrent
-    commit landing after our base read takes base+1 first and our
-    ``os.link`` CAS loses.
+    """The ONE copy-on-write rewrite path — merge, copy-on-write key and
+    predicate DELETE, UPDATE and both compactions: stage ``rows`` (the
+    new content of ``base_version``'s ``scope`` dirs) as one batch
+    through the layout-aware writer and publish it in place of
+    ``scope``; every other dir of the base carries by reference
+    (:func:`_publish_rewrite`). ``write_partitions`` caps a bucketed
+    write's shuffle at the buckets a granular rewrite touched. The
+    colmap is :meth:`VersionedTable._next_colmap`'s, not the base map
+    verbatim: a merge with schema evolution introduces logical columns
+    the base map has never seen, and they need FRESH physical ids. The
+    change feed (``changes``) and a deferred ``check`` run alongside
+    the batch write (:func:`_stage_alongside`).
 
-    A lost race then attempts an AUTO-REBASE (:func:`_commuting_rebase`)
-    instead of failing straight back to the caller: interloper commits
-    confined to DISJOINT buckets (appends or granular merges — the
-    common concurrent-pipeline shape) commute with this rewrite, so the
-    already-staged batch is republished on top of the new latest —
-    metadata-only, no data rewrite. A crossing-bucket interloper, DV
-    change, or schema change still raises
-    :class:`ConcurrentCommitError` (caller re-runs against the new
-    base), Delta's OptimisticTransaction contract."""
-    # _next_colmap, not the base version's map verbatim: a granular
-    # merge with allow_schema_evolution=True introduces logical columns
-    # the base map has never seen — they need FRESH physical ids (same
-    # rule as the full-rewrite commit path; a stale map would KeyError
-    # in _write_batch and, worse, publish a colmap missing the evolved
-    # column)
-    colmap = table._next_colmap(rewritten.columns, base_version)
-    new_dirs = table._write_batch(
-        rewritten, base_version + 1, colmap=colmap,
-        write_partitions=write_partitions,
+    ``commute`` is the conflict rule for a lost publish race
+    (:func:`_commuting_rebase`):
+
+    - ``"buckets"`` (a bucket-granular keyed rewrite, or scoped
+      compaction of a bucketed table): commutes with interlopers whose
+      added and removed dirs all lie in buckets disjoint from ours;
+    - ``"appends"`` (predicate DML, scoped compaction of an unbucketed
+      table): commutes with interlopers that only added dirs — their
+      rows arrived after this rewrite's read and stay untouched;
+    - None (a rewrite that is not bucket-granular, a full compaction):
+      refuses every interloper, a concurrent commit's rows could match
+      or be erased by the rewrite.
+
+    DV, schema or colmap moves and removals of a scope dir always
+    conflict (:class:`ConcurrentCommitError`, the caller re-runs)."""
+    colmap = table._next_colmap(rows.columns, base_version)
+    new_dirs, own = _stage_alongside(
+        table,
+        base_version + 1,
+        lambda: table._write_batch(
+            rows, base_version + 1, colmap=colmap,
+            write_partitions=write_partitions,
+        ),
+        changes=changes,
+        check=check,
     )
-    # deferred staging (see commit()): resolve once, after our own
-    # batch write, before any publish attempt
-    own = extra() if callable(extra) else extra
-    our_buckets = {_dir_bucket(d) for d in touched_dirs + new_dirs}
     return _publish_rewrite(
-        table, base_version, touched_dirs, new_dirs, rewritten.schema,
-        colmap, op, own, forbid_buckets=our_buckets,
+        table, base_version, scope, new_dirs, rows.schema, colmap, op, own,
+        commute=commute,
     )
 
 
@@ -3396,8 +3376,10 @@ def delete_by_keys(
     anti-joined and rewritten; untouched bucket dirs carry into the new
     manifest by reference, so deleting a day's keys from a 100 TB table
     rewrites the touched buckets, not the table. NULL keys in the feed
-    match nothing (plain equality — SQL DELETE semantics). Commits
-    pinned to the base read (read-modify-write guard).
+    match nothing (plain equality — SQL DELETE semantics). Publishes
+    through :func:`_rewrite` with merge's conflict rule: a granular
+    delete rebases over interlopers in disjoint buckets, a
+    whole-snapshot delete refuses every interloper.
 
     ``merge_on_read=True`` switches to a DELETION VECTOR commit
     (Delta/Iceberg merge-on-read): the delete writes ONLY the key set
@@ -3411,64 +3393,44 @@ def delete_by_keys(
     rewrite) materializes the deletions. Because the vector covers only
     the dirs existing at creation, a later re-insert of a deleted key
     lands in an uncovered dir and is visible — SQL DELETE-then-INSERT
-    semantics, pytest-pinned."""
+    semantics, pytest-pinned.
+
+    With the change feed enabled, the delete's cdf rows are the rows
+    ACTUALLY removed (feed keys semi-joined to the snapshot — a key
+    absent from the table emits no phantom delete), full rows plus the
+    change type, staged alongside the commit's own write."""
     if not keys:
         raise ValueError("delete_by_keys needs at least one key")
     base_version = table._resolve()
     # materialize the key feed once — it feeds the bucket split, the
     # anti-join, the CDF semi-join (and the MOR distinct) through
     # lineage otherwise; same rationale/level as merge_upsert's source
+    from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
     delete_keys = delete_keys.localCheckpoint(
         storageLevel=StorageLevel.DISK_ONLY
     )
-
-    def _delete_cdf_async(deleted: DataFrame):
-        # CHANGE DATA FEED: the delete's cdf rows are the rows ACTUALLY
-        # removed (feed keys semi-joined to the snapshot — a key absent
-        # from the table emits no phantom delete), full rows + type.
-        # Staged from a 1-thread pool (guide §2.6) so the feed write
-        # overlaps the commit's own write (kept-rows rewrite or DV key
-        # file — independent jobs over immutable inputs); returns
-        # ``(headers_callable|None, pool|None)`` — the caller resolves
-        # the callable at publish time and joins the pool on every exit.
-        if not table.change_data_feed_enabled():
-            return None, None
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import functions as F
-
-        change_df = deleted.withColumn("_change_type", F.lit("delete"))
-        pool = ThreadPoolExecutor(max_workers=1)
-        fut = pool.submit(table._stage_cdf, change_df, base_version + 1)
-        return (lambda: {"cdf": fut.result()}), pool
-
+    key_set = delete_keys.select(*keys)
+    cdf_on = table.change_data_feed_enabled()
     if merge_on_read:
         version = base_version + 1
         dv_dir = os.path.join(
             table._data, f"dv_{version}_{uuid.uuid4().hex[:8]}"
         )
-        # bucket-pruned presence join — O(touched buckets), and only
-        # when the feed is enabled; staged concurrently with the DV key
-        # write below (independent jobs — guide §2.6)
-        cdf_headers, cdf_pool = (
-            _delete_cdf_async(
-                table.read_at_keys(
-                    delete_keys.select(*keys), keys=keys, version=base_version
-                )
-            )
-            if table.change_data_feed_enabled()
-            else (None, None)
+        # the feed is a bucket-pruned presence join — O(touched buckets)
+        changes = (
+            table.read_at_keys(key_set, keys=keys, version=base_version)
+            .withColumn("_change_type", F.lit("delete"))
+            if cdf_on
+            else None
         )
-        try:
-            delete_keys.select(*keys).distinct().write.mode(
-                "overwrite"
-            ).parquet(dv_dir)
-            cdf = cdf_headers() if cdf_headers else {}
-        finally:
-            if cdf_pool is not None:
-                cdf_pool.shutdown(wait=True)
+        _, cdf = _stage_alongside(
+            table,
+            version,
+            lambda: key_set.distinct().write.mode("overwrite").parquet(dv_dir),
+            changes=changes,
+        )
         # the vector covers the BASE snapshot's dirs only — a rebased
         # publish keeps that scope (delete-as-of-read semantics: rows an
         # interloper appended after our read land in uncovered dirs and
@@ -3495,38 +3457,22 @@ def delete_by_keys(
             lambda b: _commuting_rebase(table, b, base_dirs, None),
             "merge-on-read delete",
         )
-    split = _granular_split(table, base_version, delete_keys, keys)
-    if split is not None:
-        _carry, touched_dirs, _, n_touched = split
-        if not touched_dirs:  # no bucket holds any of these keys
-            base = table.read(version=base_version).limit(0)
-        else:
-            base = table._read_dirs(touched_dirs, base_version)
-        kept = base.join(delete_keys.select(*keys), keys, "left_anti")
-        cdf_headers, cdf_pool = _delete_cdf_async(
-            base.join(delete_keys.select(*keys), keys, "left_semi")
-        )
-        try:
-            return _commit_granular(
-                table, kept, touched_dirs, base_version, op="delete",
-                extra=cdf_headers, write_partitions=n_touched,
-            )
-        finally:
-            if cdf_pool is not None:
-                cdf_pool.shutdown(wait=True)
-    base = table.read(version=base_version)
-    kept = base.join(delete_keys.select(*keys), keys, "left_anti")
-    cdf_headers, cdf_pool = _delete_cdf_async(
-        base.join(delete_keys.select(*keys), keys, "left_semi")
+    _carry, scope, _, n_touched = _granular_split(
+        table, base_version, delete_keys, keys
     )
-    try:
-        return table.commit(
-            kept, mode="overwrite", expected_base_version=base_version,
-            op="delete", extra=cdf_headers,
-        )
-    finally:
-        if cdf_pool is not None:
-            cdf_pool.shutdown(wait=True)
+    base = _keyed_read(table, base_version, scope, n_touched)
+    return _rewrite(
+        table, base_version, scope, base.join(key_set, keys, "left_anti"),
+        "delete",
+        commute="buckets" if n_touched is not None else None,
+        changes=(
+            base.join(key_set, keys, "left_semi")
+            .withColumn("_change_type", F.lit("delete"))
+            if cdf_on
+            else None
+        ),
+        write_partitions=n_touched,
+    )
 
 
 def _dir_zchunk(path: str) -> bool:
@@ -3731,7 +3677,7 @@ def cluster_rewrite(
     # colmap still raise — caller re-runs.
     return _publish_rewrite(
         table, base_version, scope, new_dirs, df.select(*orig_cols).schema,
-        colmap, "zorder",
+        colmap, "zorder", commute="appends",
     )
 
 
@@ -3830,29 +3776,6 @@ def _predicate_condition(predicates: list[tuple]) -> Column:
     return cond
 
 
-def _commit_scoped_rewrite(
-    table: VersionedTable,
-    base_version: int,
-    scope: list[str],
-    rewritten: DataFrame,
-    op: str,
-    extra: dict | None,
-) -> int:
-    """Publish a predicate-scoped DML rewrite: stage ``rewritten`` (the
-    scope dirs' surviving rows) through the layout-aware batch writer
-    and publish it in place of ``scope``. Lost CAS races attempt the
-    add-only commuting rebase (an interloper APPEND's rows arrived
-    after this DML's read — as-of-read semantics leave them untouched,
-    exactly like a post-commit write); interlopers that removed a scope
-    dir rewrote rows this DML also rewrote — hard conflict."""
-    colmap = table.column_mapping(base_version)
-    new_dirs = table._write_batch(rewritten, base_version + 1, colmap=colmap)
-    return _publish_rewrite(
-        table, base_version, scope, new_dirs, rewritten.schema, colmap, op,
-        extra,
-    )
-
-
 def update_where(
     table: VersionedTable,
     set_exprs: dict[str, str],
@@ -3913,7 +3836,7 @@ def update_where(
             for c in df.columns
         ]
     )
-    cdf = None
+    changes = None
     if table.change_data_feed_enabled():
         # post-images: apply the SET to the matched rows directly (a
         # join-back would be wrong under duplicates) — one extra scoped
@@ -3926,10 +3849,10 @@ def update_where(
                 for c in df.columns
             ]
         )
-        change_df = post.withColumn("_change_type", F.lit("update"))
-        cdf = {"cdf": table._stage_cdf(change_df, base_version + 1)}
-    return _commit_scoped_rewrite(
-        table, base_version, scope, rewritten, "update", cdf
+        changes = post.withColumn("_change_type", F.lit("update"))
+    return _rewrite(
+        table, base_version, scope, rewritten, "update", commute="appends",
+        changes=changes,
     )
 
 
@@ -3973,14 +3896,12 @@ def delete_where(
         )
     df = table._read_dirs(scope, base_version)
     kept = df.filter(~F.coalesce(cond, F.lit(False)))
-    cdf = None
+    changes = None
     if table.change_data_feed_enabled():
-        change_df = df.filter(cond).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        cdf = {"cdf": table._stage_cdf(change_df, base_version + 1)}
-    return _commit_scoped_rewrite(
-        table, base_version, scope, kept, "delete", cdf
+        changes = df.filter(cond).withColumn("_change_type", F.lit("delete"))
+    return _rewrite(
+        table, base_version, scope, kept, "delete", commute="appends",
+        changes=changes,
     )
 
 
@@ -4001,10 +3922,9 @@ def _delete_where_positions(
     come from Spark's ``_metadata.row_index`` hidden column, file
     identity from ``_metadata.file_path`` with the ``file:`` URI prefix
     stripped to match the manifest's plain paths."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField
-
     from functools import reduce
+
+    from pyspark.sql import functions as F
 
     spark = table.spark
     schema = table.snapshot_schema(base_version)
@@ -4013,19 +3933,7 @@ def _delete_where_positions(
             f"position-vector delete at {table.dir} needs a recorded "
             "manifest schema (pre-tracking manifest) — commit once first"
         )
-    colmap = table.column_mapping(base_version) or {}
-    reader = spark.read
-    if colmap:
-        reader = reader.schema(
-            StructType(
-                [
-                    StructField(colmap[f.name], f.dataType, f.nullable)
-                    for f in schema.fields
-                ]
-            )
-        )
-    else:
-        reader = reader.schema(schema)
+    reader, logical = table._scan_reader(base_version)
 
     # VISIBLE rows with their (file, row_index) identity: prior vectors
     # of BOTH kinds are applied per coverage group exactly like
@@ -4033,24 +3941,9 @@ def _delete_where_positions(
     # DELETE removes — the change feed and manifest-CDC emit no phantom
     # deletes for rows an earlier vector already hid. The anti-joins
     # cost O(prior |DV|) once, at DELETE time — never at read time.
-    dvs = table.deletion_vectors(base_version)
-    pdvs = table.position_dvs(base_version)
-    cover_sets = [
-        (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-        for dv in dvs
-    ]
-    pdv_cover = [
-        (dv["path"], {os.path.realpath(c) for c in dv["covers"]})
-        for dv in pdvs
-    ]
     groups: dict[tuple, list[str]] = {}
-    for d in scope:
-        rd = os.path.realpath(d)
-        key = (
-            tuple(sorted(p for p, cc in cover_sets if rd in cc)),
-            tuple(sorted(p for p, cc in pdv_cover if rd in cc)),
-        )
-        groups.setdefault(key, []).append(d)
+    for d, cover in table._coverage(base_version, scope).items():
+        groups.setdefault(cover, []).append(d)
     # internal aliases, NOT "file"/"pos": a table column with either
     # name must neither collide in the select nor be stripped from the
     # change feed (the vector parquet itself keeps file/pos — we own
@@ -4076,10 +3969,7 @@ def _delete_where_positions(
         part = reader.parquet(*group).select(
             file_expr.alias(FCOL),
             F.col("_metadata.row_index").alias(PCOL),
-            *[
-                F.col(colmap.get(f.name, f.name)).alias(f.name)
-                for f in schema.fields
-            ],
+            *(logical or [F.col(f.name) for f in schema.fields]),
         )
         for dv_path in cov:
             dv_keys = _read_key_vector(spark, dv_path).distinct()
@@ -4518,8 +4408,8 @@ def replicate_changes(
       :func:`merge_upsert` — so each replayed commit inherits the
       read-modify-write conflict guard on the target.
     - ``delete`` keys are applied with :func:`delete_by_keys` — an
-      anti-join copy-on-write commit pinned to the target base version
-      the deletes were computed against (same guard).
+      anti-join copy-on-write rewrite published against the target
+      base version the deletes were computed against (same guard).
 
     Returns the target's final version. Replay cost is O(changed rows +
     one snapshot semi-join per replayed commit) — never a full-history

@@ -1171,8 +1171,8 @@ def s24_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/versioned.compact): orders lands as SIX append commits,
     each deliberately fragmented (repartition(8) → ~48 small parquet
     files — the small-file problem every long-lived append table
-    accretes), then one compact() rewrites the snapshot as a normal
-    overwrite commit with coalesced right-sized files. The declared
+    accretes), then one compact() rewrites every dir of the snapshot
+    in one commit with coalesced right-sized files. The declared
     output reads the COMPACTED version — count, key checksum, exact
     DECIMAL price sum — and the oracle recomputes from the source
     table, so any row lost/duplicated/mutated by the rewrite
@@ -1227,8 +1227,9 @@ def s25_versioned_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with o_orderstatus rewritten to 'M' — so %3-and-not-%4 keys are
     UPDATES (replaced wholesale), %3-and-%4 keys are INSERTS, the rest
     carry over untouched. One anti-join shuffle on the merge key builds
-    the new snapshot; the commit pins expected_base_version so a
-    concurrent append mid-merge fails loudly instead of being erased
+    the new snapshot; the whole-snapshot rewrite refuses every
+    interloper, so a concurrent append mid-merge fails loudly instead
+    of being erased
     (conflict + duplicate-source-key contracts pytest-gated in
     tests/test_round10_ops.py). The oracle restates the merged snapshot
     set-theoretically from the source table; any row lost, duplicated,
@@ -1319,9 +1320,9 @@ def cdc3_replicate_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 (zero-copy starting snapshot), then replay every later source
     commit into the clone — inserts/updates via merge_upsert (payloads
     re-attached from the pinned source snapshot by one keyed semi-join;
-    the feed ships keys only), deletes via an anti-join overwrite, every
-    replayed commit pinned to its target base version (the r10 conflict
-    guard). Source history is s23's exact shape: append, append, then
+    the feed ships keys only), deletes via an anti-join rewrite, every
+    replayed commit published against its target base version (the r10
+    conflict guard). Source history is s23's exact shape: append, append, then
     an overwrite that drops every %7 key and rewrites %5 keys to 'X'.
     The declared output is the REPLICA's final snapshot; the oracle
     restates the source's final state straight from the orders table —
@@ -1592,7 +1593,7 @@ def s30_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
     )
     split = _granular_split(t, 1, probe, ["o_orderkey"])
-    if split is None or len(split[1]) >= len(t._manifest(1)):
+    if split[3] is None or len(split[1]) >= len(t._manifest(1)):
         raise AssertionError("lookup did not prune buckets")
     return t.read_at_keys(probe, keys=["o_orderkey"])
 
