@@ -229,6 +229,27 @@ def test_spread_width_ignores_sentinel_size_estimates(spark):
         assert n <= _MAX_EXPLODE_WIDTH
 
 
+def test_spread_width_floor_is_core_count(spark, monkeypatch):
+    """The explode spread is a fixed-count repartition, which AQE never
+    coalesces: a small input spreads to exactly the core count (not the
+    shuffle width), and only a large size estimate widens it, up to the
+    cap."""
+    from weather_etl_docker_airflow_project_spark.operators import dedup as d
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} text") for i in range(10)], ["doc_id", "text"]
+    )
+
+    def width():
+        return d._spread_for_explode(docs, "doc_id").rdd.getNumPartitions()
+
+    assert width() == spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(d, "_estimated_size_bytes", lambda df: 10 << 30)
+    assert width() == (10 << 30) * 100 // (128 << 20)
+    monkeypatch.setattr(d, "_estimated_size_bytes", lambda df: 1 << 49)
+    assert width() == d._MAX_EXPLODE_WIDTH
+
+
 def test_hot_bucket_cap_bounds_pair_volume(spark):
     """max_bucket_size drops over-popular buckets: identical docs in a
     small group still pair, while a hot 20-doc bucket is excluded."""

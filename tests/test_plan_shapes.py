@@ -292,6 +292,45 @@ def test_vector_covered_reads_run_no_job(spark, tmp_path):
     assert sorted(r.k for r in where.collect()) == [k for k in kept if k < 300]
 
 
+def test_bucket_pruned_lookup_build_runs_one_bucket_job(spark):
+    """Building s30 runs the table's commit and one bucket aggregate (the
+    one inside ``read_at_keys``); its pruning check reads the built
+    scan's file list, which runs no job."""
+    _df, jobs = _jobs_run(
+        spark, lambda: catalog.REGISTRY["s30_bucket_pruned_lookup"].fn(spark, SF)
+    )
+    assert jobs <= 3, f"building s30 ran {jobs} Spark jobs"
+
+
+def test_column_calls_capture_no_call_site(spark, monkeypatch):
+    """The engine's sessions turn PySpark's per-call call-site capture
+    off, so building a plan costs few py4j round trips: 465 for
+    ``minhash_signatures(shingles(...))`` on Spark 4.1.2, against 1375
+    with the capture on."""
+    import py4j.clientserver
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from weather_etl_docker_airflow_project_spark.operators import dedup
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} some words here") for i in range(10)], "doc_id long, text string"
+    )
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    trips = [0]
+
+    def counted(self, command):
+        trips[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(conn, "send_command", counted)
+    dedup.minhash_signatures(dedup.shingles(docs, "doc_id", "text"), "doc_id")
+    monkeypatch.undo()
+    assert trips[0] <= 580, f"building minhash signatures took {trips[0]} py4j round trips"
+
+
 def test_salted_agg_spreads_hot_key(spark):
     """a13: the two-phase salted aggregate must (a) group by (key, _salt)
     in phase 1 — the plan carries TWO aggregate exchanges, the first

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from weather_etl_docker_airflow_project_spark.operators.retrieval import bm25_topk
+from weather_etl_docker_airflow_project_spark.operators.retrieval import (
+    bm25_oracle_sql,
+    bm25_topk,
+)
 from weather_etl_docker_airflow_project_spark.operators.sampling import (
     weighted_bernoulli_sample,
 )
@@ -38,6 +41,45 @@ def test_bm25_ranks_tf_and_rarity(spark):
     again = {r["doc_id"]: r["score"] for r in
              bm25_topk(docs, "doc_id", "text", ["cat", "dog"], k=10).collect()}
     assert all(by_id[i]["score"] == again[i] for i in again)
+
+
+def test_bm25_edge_documents_match_duckdb_bit_for_bit(spark):
+    """Documents with NULL, empty or whitespace-only text count in the
+    corpus with length 0; repeated query terms raise tf; a document with
+    no query term is not retrieved. Scores equal the DuckDB twin's (which
+    takes lengths from a grouped token count) bit for bit."""
+    import duckdb
+
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "   \t  "),
+        (4, "cat cat cat cat dog"),
+        (5, "  cat   dog  bird "),
+        (6, "bird fish fish"),
+        (7, "dog dog"),
+        (8, "cat"),
+        (9, "the cat sat on the mat with a dog and a cat"),
+    ]
+    terms = ["cat", "dog", "owl"]
+    conn = duckdb.connect()
+    try:
+        conn.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        conn.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        want = [tuple(r) for r in conn.execute(bm25_oracle_sql(terms, k=20)).fetchall()]
+    finally:
+        conn.close()
+    assert {r[0] for r in want} == {4, 5, 7, 8, 9}
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        # size() of a NULL array is NULL under ANSI and -1 without it
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            got = bm25_topk(docs, "doc_id", "text", terms, k=20).collect()
+            assert [tuple(r) for r in got] == want, f"ansi={mode}"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_weighted_sample_monotone_in_weight(spark):

@@ -43,7 +43,7 @@ _POST_EXPLODE_PART_BYTES = 128 << 20  # target partition size after fan-out
 # computeStats report spark.sql.defaultSizeInBytes (Long.MaxValue). Trusting
 # such a number once turned a 10-row test input into a 1,000,000-partition
 # repartition (a ~90-minute no-op shuffle). Anything this side of a real
-# petabyte pre-explode input is a lie — fall back to the session floor.
+# petabyte pre-explode input is a lie — fall back to the core-count floor.
 _SIZE_ESTIMATE_SANE_MAX = 1 << 50
 # Scheduler-practical stage width ceiling: beyond ~64k tasks per stage,
 # driver-side task bookkeeping (not data) dominates; inputs that genuinely
@@ -67,22 +67,26 @@ def _estimated_size_bytes(df: DataFrame) -> int:
 def _spread_for_explode(df: DataFrame, id_col: str) -> DataFrame:
     """Hash-repartition the compact pre-explode input so the ~100x
     shingle/token fan-out runs wide. The width is sized FROM THE DATA:
-    estimated input bytes x fan-out / 128 MB-per-partition, floored at the
-    session's shuffle width — so a many-thousand-partition 100 TB scan is
-    never collapsed to ~200 partitions right before the explode (AQE
-    coalesces overshoot but never splits undershoot), while small inputs
-    still spread to every core.
+    estimated input bytes x fan-out / 128 MB-per-partition (capped at
+    ``_MAX_EXPLODE_WIDTH``), so a many-thousand-partition 100 TB scan is
+    never collapsed to a few hundred partitions right before the explode.
+
+    The floor is the core count (``defaultParallelism``), not
+    ``spark.sql.shuffle.partitions``: a fixed-count ``repartition(n, col)``
+    is one AQE never coalesces, so every stage after the spread (explode,
+    signatures, banding, the persisted buckets, the checkpointed pair
+    join's input) runs exactly ``n`` tasks. With 32 shuffle partitions
+    on 4 cores, that floor gave ``l2_minhash_lsh_pairs`` 130 tasks to
+    build and 32 to collect over the analytic_mix documents; at the core
+    count it runs 18 and 4. On a host with at least as many cores as
+    shuffle partitions the width is the same either way.
 
     The shuffle itself is deliberately unconditional: probing the current
     partition count needs ``df.rdd`` (forcing an RDD-lineage
     materialization of the plan), while repartitioning the pre-explode
     side is one narrow shuffle of the SMALL representation — at 100 TB
     that moves ~100x fewer bytes than shuffling exploded shingles."""
-    sess = df.sparkSession
-    floor_width = max(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    floor_width = df.sparkSession.sparkContext.defaultParallelism
     data_width = (
         _estimated_size_bytes(df) * _EXPLODE_FANOUT // _POST_EXPLODE_PART_BYTES
     )

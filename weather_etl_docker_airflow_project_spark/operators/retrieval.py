@@ -17,13 +17,15 @@ then ``t1 + t2 + ... + tn``) instead of a float SUM aggregate whose
 reduction order is engine-dependent. Scalar IEEE arithmetic is exactly
 rounded and therefore bit-deterministic; only reductions and libm drift.
 
-Scale shape: one explode+groupBy computes per-doc tf for the (tiny) query
-vocabulary — the filter on query terms happens BEFORE the shuffle, so the
-corpus-wide token stream never shuffles, only matching (doc, term, tf)
-rows do. Document lengths ride the same scan via a grouped count. The
-per-term document frequencies and the corpus stats are single-row /
-few-row side tables (broadcast). Top-k compiles to
-TakeOrderedAndProject — no global sort.
+Scale shape: one projection of the scan gives each document its length
+(``size`` of its token array) and the tokens that are query terms
+(``filter`` on the array); only those are exploded, so the corpus-wide
+token stream is never exploded, aggregated or shuffled. The per-doc tf
+groupBy carries the length through, so no per-document length table is
+aggregated and joined back. The corpus stats (``n_docs``, ``sum_dl``) are
+one aggregate of the same projection; they and the per-term document
+frequencies are single-row / few-row side tables (broadcast). Top-k
+compiles to TakeOrderedAndProject — no global sort.
 """
 
 from __future__ import annotations
@@ -45,27 +47,31 @@ def bm25_topk(
     k: int = 20,
 ) -> DataFrame:
     """Top-``k`` documents for the bag-of-words query ``terms`` under
-    rational-idf BM25 (see module docstring). Returns
+    rational-idf BM25 (see module docstring); ``id_col`` is the
+    documents' key. Returns
     ``(id_col, score DOUBLE, n_hit_terms BIGINT)`` ordered by
     (score desc, id asc) — callers get a deterministic, hash-stable
     ranking."""
-    tok = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
+    # NULL text is a document with no tokens (dl 0), whatever the
+    # session's size-of-NULL rule
+    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
+    per_doc = docs.select(
+        F.col(id_col),
+        F.size(toks).cast("long").alias("dl"),
+        F.filter(toks, lambda t: t.isin(terms)).alias("hits"),
     )
-    dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("dl"))
-    hits = tok.filter(F.col("token").isin(terms))
-    tf = hits.groupBy(id_col, "token").agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    hits = per_doc.select(id_col, "dl", F.explode("hits").alias("token"))
+    tf = hits.groupBy(id_col, "dl", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("tf")
+    )
     dfreq = hits.groupBy("token").agg(
         F.countDistinct(id_col).cast("long").alias("doc_freq")
     )
-    stats = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs")).crossJoin(
-        dl.agg(F.sum("dl").cast("long").alias("sum_dl"))
+    stats = per_doc.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("sum_dl"),
     )
-    scored = (
-        tf.join(F.broadcast(dfreq), "token")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-    )
+    scored = tf.join(F.broadcast(dfreq), "token").crossJoin(F.broadcast(stats))
     idf = (F.col("n_docs") - F.col("doc_freq") + F.lit(0.5)) / (
         F.col("doc_freq") + F.lit(0.5)
     )

@@ -1572,15 +1572,16 @@ def s30_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only live in ≤20 of the 64 bucket dirs, so the scan opens those dirs
     only — at 100 TB a key lookup reads ~20/64ths of nothing, not the
     table — and an exact semi-join inside the pruned scan returns the
-    rows. The engine asserts the pruning actually happened (touched-dir
-    count < manifest size, an os-level metadata check); the oracle
+    rows. The engine asserts the pruning actually happened (the bucket dirs
+    in the built scan's file list are fewer than the manifest's); the oracle
     restates the lookup as a plain join, so a bucket mis-route (a key
     written to one bucket but probed in another) returns missing rows
     and hash-fails. Constant probe count keeps the check
     scale-independent (the s28 lesson)."""
     import os as _os
+    from urllib.parse import urlparse
 
-    from ..operators.versioned import VersionedTable, _granular_split
+    from ..operators.versioned import VersionedTable
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     t = VersionedTable(spark, _os.path.join(scratch_dir("vlkp_"), "orders_v"))
@@ -1592,10 +1593,18 @@ def s30_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .select("o_orderkey")
     )
-    split = _granular_split(t, 1, probe, ["o_orderkey"])
-    if split[3] is None or len(split[1]) >= len(t._manifest(1)):
+    out = t.read_at_keys(probe, keys=["o_orderkey"])
+    # the scan's own file list (a driver-side listing of <=20 dirs, no
+    # job) shows the pruning, not a second run of the bucket aggregate
+    table_dir = _os.path.realpath(t.dir) + _os.sep
+    scanned = {
+        _os.path.dirname(path)
+        for path in (_os.path.realpath(urlparse(f).path) for f in out.inputFiles())
+        if path.startswith(table_dir)
+    }
+    if not 0 < len(scanned) < len(t._manifest(1)):
         raise AssertionError("lookup did not prune buckets")
-    return t.read_at_keys(probe, keys=["o_orderkey"])
+    return out
 
 
 @query(

@@ -25,6 +25,20 @@ engine's sessions skip the re-read of unchanged archives:
   On a cluster the package must sit at that path or be installed on the
   executors.
 
+Call-site capture: ``build_session`` sets
+``spark.python.sql.dataFrameDebugging.enabled=false``, PySpark's own switch
+for this cost. At its default (true) every ``F.*`` and Column call runs
+through ``_with_origin``, which walks the Python stack, retries
+``import IPython, ipykernel`` (a ``sys.path`` re-scan whenever one is not
+installed), and makes a ``conf.get`` plus an origin set and clear on the
+JVM. Building ``minhash_signatures(shingles(...))`` over a 10-row frame
+took 1375 py4j round trips and ~120 ms with it, 465 round trips and
+~80 ms without (4 cores, Spark 4.1.2). What error messages lose: the
+"DataFrame" query context naming the Python line that built the failing
+expression; the error class, message and JVM stack are unchanged.
+PySpark reads the setting once per process, from the first active
+session it sees.
+
 Python worker memory: neither ``spark.executor.pyspark.memory`` nor
 ``spark.executor.memoryOverhead`` is set. In local mode the workers are
 processes outside the driver heap, so neither applies. On a cluster the
@@ -136,6 +150,8 @@ def build_session(
         # per-task re-read of unchanged zip archives (module docstring).
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # No Python call-site capture per Column call (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
