@@ -1,4 +1,4 @@
-"""Sources/sinks coverage (SURVEY.md §2.1): CSV/JSON schema scans (S7),
+"""Sources/sinks coverage (SURVEY.md §2.1): CSV schema scans (S7),
 partitioned parquet sink with partition pruning (S8), catalog DDL (S4/S5),
 and the T1 processingTime trigger of the weather stream."""
 
@@ -13,7 +13,6 @@ from pyspark.sql import types as T
 from weather_etl_docker_airflow_project_spark.fixtures import CANNED_WEATHER
 from weather_etl_docker_airflow_project_spark.io import (
     read_csv,
-    read_json,
     write_partitioned_parquet,
 )
 from weather_etl_docker_airflow_project_spark.sources.jdbc import (
@@ -43,15 +42,6 @@ def test_csv_scan_with_schema(spark, tmp_path):
     path = str(tmp_path / "w.csv")
     df.write.option("header", "true").csv(path)
     back = read_csv(spark, path, SCHEMA)
-    assert back.schema == SCHEMA
-    assert sorted(tuple(r) for r in back.collect()) == sorted(ROWS)
-
-
-def test_json_scan_with_schema(spark, tmp_path):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    path = str(tmp_path / "w.json")
-    df.write.json(path)
-    back = read_json(spark, path, SCHEMA)
     assert back.schema == SCHEMA
     assert sorted(tuple(r) for r in back.collect()) == sorted(ROWS)
 

@@ -18,8 +18,6 @@ from pyspark.sql import types as T
 
 from .schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one testdata table (S6) under its pinned schema.
@@ -108,11 +106,6 @@ def read_csv(spark: SparkSession, path: str, schema, header: bool = True) -> Dat
     """S7: CSV scan with an explicit schema — never inference in production
     paths (inference double-reads the data and guesses types)."""
     return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema) -> DataFrame:
-    """S7: JSON-lines scan with an explicit schema."""
-    return spark.read.schema(schema).json(path)
 
 
 def write_partitioned_parquet(

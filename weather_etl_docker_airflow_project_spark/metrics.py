@@ -1,8 +1,8 @@
 """Executed-plan SQLMetrics access: measure what a plan actually moved.
 
-Used by the Bloom-join shuffle-reduction gate (tests/test_bloomjoin.py)
-and the scale-pass measurement tools — assertions about shuffles should
-be metric-backed (SQLMetrics), not prose.
+Used by the Bloom-join shuffle-reduction gate (tests/test_bloomjoin.py):
+assertions about shuffles should be metric-backed (SQLMetrics), not
+prose.
 """
 
 from __future__ import annotations

@@ -1209,7 +1209,7 @@ def p5_predicate_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p6_pruned_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-column read of an 11-column table: ReadSchema in the physical
     plan must show only l_returnflag + l_shipdate (pruning verified in
-    tests/test_plans.py)."""
+    tests/test_plan_shapes.py)."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") >= F.lit("2001-01-01 00:00:00").cast("timestamp"))
@@ -2946,7 +2946,7 @@ def j13_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unpruned plan shuffles all of lineitem; this one shuffles ~0.4%
     of it (selectivity of one nation's suppliers) plus a ~2^-13
     false-positive tail at the default 1 Mi-bit / 5-hash sizing.
-    Measured at sf1 (tools/measure_bloom_sf1.py, SQLMetrics): the pruned
+    Measured at sf1 (metrics.shuffle_written, SQLMetrics): the pruned
     join shuffles 4.03% of the unpruned plan's records and 3.78% of its
     bytes — one nation's 1/25 supplier selectivity plus a ~0.03% fp
     tail, exactly the designed envelope (SCALE.md §bloom)."""

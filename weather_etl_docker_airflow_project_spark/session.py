@@ -120,7 +120,7 @@ def build_session(
         # verdict item 1 / ADVICE): sf1 A/B plans show ZERO
         # ShuffledHashJoin or SortMergeJoin with the flag either way on
         # the queries it claimed to speed up (q9/a19/q8/q17/j13 are
-        # all-broadcast; plans/r16/shj_sf1_*), so the flag bought
+        # all-broadcast; OPTIMIZATION_r16.md), so the flag bought
         # nothing measurable while letting the planner pick a
         # non-spillable hash build off the same static size estimates
         # the repo documents as broken on corpus-derived frames (the r9
@@ -136,8 +136,8 @@ def build_session(
         # localCheckpoint blocks. The LIBRARY default stays 8g — enough
         # for every test/sf0.01 path and safe on small hosts (a 32g
         # default would get the JVM OOM-killed on a <32 GB container).
-        # The decade-scale harnesses (bench.py, tools/measure_*) export
-        # SPARK_GRAFT_DRIVER_MEM=32g themselves: 8g tipped over at the
+        # The headline harness (bench.py) exports
+        # SPARK_GRAFT_DRIVER_MEM=32g itself: 8g tipped over at the
         # 30x decade (accumulated checkpoints + one 36M-edge
         # orientation), but that is a bench-host sizing, not a library
         # policy. On a real cluster this is per-executor ordinary.
