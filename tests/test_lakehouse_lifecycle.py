@@ -46,13 +46,14 @@ def test_full_lakehouse_lifecycle(spark, tmp_path):
     t.set_stats_columns(["ek"])
     t.set_constraints(["ek >= 0"])
 
-    # v1: identity commit (GENERATED ids 1..20 in ek order)
-    commit_with_identity(
+    # v1: identity commit (GENERATED ids 1..20 in ek order); the four
+    # properties above ride the empty table's record, not versions
+    assert commit_with_identity(
         t,
         spark.createDataFrame([(i, f"v{i}") for i in range(20)], "ek long, v string"),
         "row_id",
         ["ek"],
-    )
+    ) == 1
     state = {i: [f"v{i}"] for i in range(20)}
     _assert_state(t, state)
     assert sorted(r.row_id for r in t.read().collect()) == list(range(1, 21))
@@ -149,6 +150,15 @@ def test_full_lakehouse_lifecycle(spark, tmp_path):
     assert sorted(live.removed_dirs) == sorted(dry.removed_dirs)
     assert t.versions() == [7]
     _assert_state(t, state, cols=("ek", "v"))
+    # every table property lives in the manifests: no side files
+    for d in (t.dir, c.dir):
+        assert set(os.listdir(d)) == {"_versions", "data"}
+    # the clone took the source's constraints with it
+    with pytest.raises(ConstraintViolation):
+        c.commit(
+            spark.createDataFrame([(98, -5, "bad")], "row_id long, ek long, v string"),
+            mode="append",
+        )
 
     # identity never rewound by the restore: next id continues
     commit_with_identity(

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 
 from weather_etl_docker_airflow_project_spark.operators.versioned import (
     Manifest,
+    TableProps,
     VersionedTable,
     identity_high_water,
 )
@@ -79,6 +80,7 @@ def test_old_format_manifest_parses_every_header_kind():
             "k": {"lo": 1, "hi": 9, "nulls": 0, "rows": 9}
         }
     }
+    assert m.props == TableProps()  # written before properties rode it
     assert Manifest.parse(m.dumps()) == m
     # a metadata-only successor keeps the table state, not the
     # per-commit fields
@@ -185,6 +187,19 @@ _manifests = st.builds(
     ),
     sbatch=st.dictionaries(_text, st.integers(), max_size=3),
     idhwm=st.none() | st.tuples(_text, st.integers()),
+    props=st.builds(
+        TableProps,
+        checks=st.lists(_text, max_size=3),
+        layout=st.none()
+        | st.fixed_dictionaries(
+            {
+                "bucket_keys": st.lists(_text, min_size=1, max_size=2),
+                "n_buckets": st.integers(min_value=1),
+            }
+        ),
+        stats_cols=st.lists(_text, max_size=3),
+        change_feed=st.booleans(),
+    ),
 )
 
 

@@ -233,16 +233,16 @@ def test_cdc_prune_skips_identical_commit(spark, tmp_path):
 def test_layout_migration_via_first_merge(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.commit(_mk(spark, [(i, f"v{i}") for i in range(30)]))  # untagged batch
-    t.set_layout(["k"], 4)
+    assert t.set_layout(["k"], 4) == 2  # a metadata-only commit
     # first merge: fallback full rewrite, but written bucketed
     merge_upsert(t, _mk(spark, [(1, "X")]), keys=["k"])
-    m2 = t._manifest(2)
-    assert all(_dir_bucket(d) is not None for d in m2)
-    # second merge: granular (carries untouched buckets)
-    m_before = set(m2)
-    merge_upsert(t, _mk(spark, [(2, "Y")]), keys=["k"])
     m3 = t._manifest(3)
-    assert len([d for d in m3 if d in m_before]) == 3
+    assert all(_dir_bucket(d) is not None for d in m3)
+    # second merge: granular (carries untouched buckets)
+    m_before = set(m3)
+    merge_upsert(t, _mk(spark, [(2, "Y")]), keys=["k"])
+    m4 = t._manifest(4)
+    assert len([d for d in m4 if d in m_before]) == 3
     snap = {r["k"]: r["v"] for r in t.read().collect()}
     assert snap[1] == "X" and snap[2] == "Y" and len(snap) == 30
 

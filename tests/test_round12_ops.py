@@ -7,8 +7,8 @@ granular-merge trigger.
   can no longer issue duplicate id ranges)
 - ignoreChanges delivers a rewrite commit's NEW dirs (Delta's exact
   contract: duplicates possible, removals invisible)
-- rename_column publishes the manifest CAS before mutating the
-  unversioned _layout/_stats_cols side files
+- rename_column re-keys the layout and stats columns inside its own
+  manifest commit, so a lost race leaves them untouched
 - a vacuumed stream offset raises instead of re-delivering the next
   manifest wholesale
 - rewrite keys ⊇ bucket keys still takes the bucket-granular path with
@@ -146,10 +146,10 @@ def test_ignore_changes_delivers_rewrite_new_dirs(spark, tmp_path):
 
 
 def test_rename_lost_race_leaves_layout_and_stats_untouched(spark, tmp_path):
-    """rename_column publishes the manifest FIRST: when the CAS loses a
-    concurrent-commit race, the unversioned _layout/_stats_cols side
-    files must keep the OLD column name (before the fix a lost race
-    left the table bucketing/collecting stats under a name the schema
+    """rename_column re-keys the layout and stats columns in the same
+    manifest commit as the schema: when the CAS loses a concurrent-commit
+    race, both must keep the OLD column name (a lost race must never
+    leave the table bucketing/collecting stats under a name the schema
     doesn't have)."""
 
     class RacedTable(VersionedTable):

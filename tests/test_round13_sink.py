@@ -488,3 +488,32 @@ def test_add_constraint_preserves_concurrent_writer(spark, tmp_path, monkeypatch
     t.add_constraint("k >= 0")
     assert state["raced"]
     assert set(t.constraints()) == {"v IS NOT NULL", "k >= 0"}
+
+
+def test_add_constraint_refuses_batch_staged_before_it(spark, tmp_path):
+    """A library commit whose batch was staged BEFORE a concurrent
+    add_constraint landed loses its publish: the constraint is a commit
+    of its own, and a write never rebases across a property change —
+    so the staged violating row never becomes visible."""
+
+    class RacedTable(VersionedTable):
+        raced = False
+
+        def _publish_manifest(self, manifest, version):
+            if not RacedTable.raced and version == 2:
+                RacedTable.raced = True
+                # the batch (holding k = -1) is staged; the constraint
+                # validates the clean snapshot and publishes first
+                VersionedTable(self.spark, self.dir).add_constraint("k >= 0")
+            return super()._publish_manifest(manifest, version)
+
+    t = RacedTable(spark, str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([Row(k=i, v=1.0) for i in range(5)]))
+    with pytest.raises(ConcurrentCommitError, match="constraints"):
+        t.commit(
+            spark.createDataFrame([Row(k=-1, v=1.0)]), mode="append"
+        )
+    assert RacedTable.raced
+    assert t.versions() == [1, 2]  # the data commit published nothing
+    assert t.commit_op(2) == "add_constraint"
+    assert t.read().filter("k < 0").count() == 0

@@ -167,8 +167,11 @@ def test_enable_change_data_feed_statement(spark, tmp_path):
     r = engine_sql(
         spark, f"ALTER TABLE '{t.dir}' ENABLE CHANGE DATA FEED"
     ).first()
-    assert r.op == "enable_cdf"
+    assert (r.op, r.version) == ("enable_cdf", 2)  # its own commit
     assert t.change_data_feed_enabled()
+    hist = engine_sql(spark, f"DESCRIBE HISTORY '{t.dir}'").collect()
+    assert hist[-1].version == 2
+    assert hist[-1].op == "enable_change_data_feed"
     engine_sql(spark, f"DELETE FROM '{t.dir}' WHERE k < 5")
-    feed = t.read_changes_cdf(1, 2)
+    feed = t.read_changes_cdf(1, 3)
     assert feed.filter("_change_type = 'delete'").count() == 5

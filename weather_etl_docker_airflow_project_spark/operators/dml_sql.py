@@ -51,7 +51,9 @@ Safety model, deliberately layered:
   documents the determinism contract.
 
 Everything returns a one-row result DataFrame ``(op, table, version)``
-so a SQL-driven pipeline can assert/log outcomes uniformly."""
+so a SQL-driven pipeline can assert/log outcomes uniformly; a table
+property statement reports its own commit (NULL when the property was
+already set)."""
 
 from __future__ import annotations
 
@@ -187,7 +189,7 @@ def _split_top_level(text: str, sep: str = ",") -> list[str]:
 
 
 def _result(
-    spark: SparkSession, op: str, table_dir: str, version: int
+    spark: SparkSession, op: str, table_dir: str, version: int | None
 ) -> DataFrame:
     return spark.createDataFrame(
         [(op, table_dir, version)], "op string, table string, version bigint"
@@ -443,21 +445,14 @@ def engine_sql(
     m = _ADD_CONSTRAINT.match(stmt)
     if m:
         t = VersionedTable(spark, m.group("path"))
-        t.add_constraint(m.group("expr").strip())
-        committed = t.versions()
-        return _result(
-            spark, "add_constraint", t.dir,
-            committed[-1] if committed else 0,
-        )
+        v = t.add_constraint(m.group("expr").strip())
+        return _result(spark, "add_constraint", t.dir, v)
 
     m = _ENABLE_CDF.match(stmt)
     if m:
         t = VersionedTable(spark, m.group("path"))
-        t.enable_change_data_feed()
-        committed = t.versions()
-        return _result(
-            spark, "enable_cdf", t.dir, committed[-1] if committed else 0
-        )
+        v = t.enable_change_data_feed()
+        return _result(spark, "enable_cdf", t.dir, v)
 
     m = _RENAME_COL.match(stmt)
     if m:

@@ -7,17 +7,21 @@ Layout under ``table_dir``::
 
     data/batch_<version>_<salt>/   immutable parquet fragments
     _versions/<n>                  manifest: newline list of data dirs
-    _constraints                   optional CHECK expressions (one/line)
-    _layout                        optional key-bucket layout (JSON)
-    _stats_cols                    optional data-skipping columns (one/line)
-    _column_mapping                opt-in flag: physical col_<id> names
+    _versions/0                    the empty table's record: properties
+                                   (and the column-mapping opt-in) set
+                                   before the first commit
 
 Each manifest is one :class:`Manifest` record — the dir list plus its
 commit metadata (timestamp, operation, schema, column map, deletion
 vectors, skipping stats, change-feed dir, streaming and identity
-watermarks). ``Manifest.parse``/``Manifest.dumps`` are the one place
-its line format is defined; every field rides the same atomic CAS
-write as the dir list, so none can tear apart from the data.
+watermarks) and the table's properties (:class:`TableProps`: CHECK
+constraints, key-bucket layout, stats columns, change-data-feed flag;
+column mapping is on when the column map is present).
+``Manifest.parse``/``Manifest.dumps`` are the one place its line
+format is defined; every field rides the same atomic CAS write as the
+dir list, so none can tear apart from the data, and a property change
+is a commit of its own that conflicts like any other (Delta keeps its
+table properties in the log for the same reason).
 
 With a declared layout (:meth:`VersionedTable.set_layout`) every batch
 is written partitioned by ``bkt = pmod(xxhash64(keys...), n_buckets)``
@@ -53,12 +57,13 @@ The rules that make this a real table format in miniature:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
 import uuid
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field, replace
+from dataclasses import asdict, dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -96,6 +101,23 @@ PUBLISH_ATTEMPTS = 10
 
 
 @dataclass(frozen=True)
+class TableProps:
+    """The table's declared properties, one record per manifest (the
+    ``#props=`` header, JSON, written only when any is set): CHECK
+    expressions, the key-bucket layout (``{"bucket_keys": [...],
+    "n_buckets": n}``), the data-skipping stats columns and the
+    change-data-feed flag. Every write reads them from its base
+    manifest and every commit carries them forward. Shared through the
+    manifest cache like :class:`Manifest`: treat the containers as
+    read-only."""
+
+    checks: list[str] = field(default_factory=list)
+    layout: dict | None = None
+    stats_cols: list[str] = field(default_factory=list)
+    change_feed: bool = False
+
+
+@dataclass(frozen=True)
 class Manifest:
     """One version's commit record, and the ONLY code that knows the
     ``_versions/<n>`` line format: a ``#<key>=<value>`` line per header
@@ -110,7 +132,8 @@ class Manifest:
       ``<path>::<covered dir>::...``;
     - ``stats`` per-dir skipping stats, one JSON line per dir;
     - ``sbatch`` streaming exactly-once watermark, one ``<app>:<batch>``
-      line per txn app; ``idhwm`` identity high-water ``<col>::<n>``.
+      line per txn app; ``idhwm`` identity high-water ``<col>::<n>``;
+    - ``props`` the table's :class:`TableProps` (JSON).
 
     Paths cannot hold a newline, and vector paths cannot hold ``::``.
     Instances are shared through the manifest cache: treat the list and
@@ -127,6 +150,7 @@ class Manifest:
     stats: dict[str, dict] = field(default_factory=dict)
     sbatch: dict[str, int] = field(default_factory=dict)
     idhwm: tuple[str, int] | None = None
+    props: TableProps = field(default_factory=TableProps)
 
     @classmethod
     def parse(cls, text: str) -> Manifest:
@@ -157,6 +181,8 @@ class Manifest:
             elif key == "idhwm":
                 col, _, n = val.rpartition("::")
                 f["idhwm"] = (col, int(n))
+            elif key == "props":
+                f["props"] = TableProps(**json.loads(val))
         return cls(**f)
 
     def dumps(self) -> str:
@@ -175,6 +201,8 @@ class Manifest:
             ]
         if self.colmap is not None:
             out.append(f"#colmap={json.dumps(self.colmap)}")
+        if self.props != TableProps():
+            out.append(f"#props={json.dumps(asdict(self.props))}")
         out += [
             "#stats=" + json.dumps({"dir": d, "cols": self.stats[d]})
             for d in sorted(self.stats)
@@ -636,6 +664,7 @@ def _publish_loop(
     build: Callable[[int], Manifest | None],
     rebase: Callable[[int], int | None],
     what: str,
+    sets_props: bool = False,
 ) -> int | None:
     """The ONE optimistic-commit path every writer publishes through
     (Delta's OptimisticTransaction in miniature). Each attempt builds
@@ -649,10 +678,16 @@ def _publish_loop(
     Everything a retry redoes is manifest metadata; staged data is
     never rewritten.
 
+    A write never rebases across a change of the table's properties:
+    its batch was staged and checked under the first base's constraints,
+    layout and stats columns. Only a property commit (``sets_props``),
+    which re-applies its change to the new base's properties, may.
+
     Retries back off linearly (5 ms x attempt): a loser re-reading
     metadata in lockstep with the winner's next publish can starve
     inside the cap (seen at 2 writers x 7 commits); a few ms of skew
     breaks the lockstep at zero cost to the uncontended path."""
+    staged = None if sets_props else table._at(base).props
     for attempt in range(PUBLISH_ATTEMPTS):
         if attempt:
             time.sleep(0.005 * attempt)
@@ -666,6 +701,11 @@ def _publish_loop(
             nxt = rebase(base)
             if nxt is None or nxt <= base:  # conflict, or a stale view
                 raise
+            if staged is not None and table._at(nxt).props != staged:
+                raise ConcurrentCommitError(
+                    f"{what} at {table.dir}: version {nxt} changed the table "
+                    "properties (constraints, layout, ...) it was staged under"
+                ) from lost
             base, last = nxt, lost
     raise ConcurrentCommitError(
         f"{what} at {table.dir} lost {PUBLISH_ATTEMPTS} publish races in "
@@ -679,11 +719,6 @@ class VersionedTable:
         self.dir = table_dir
         self._versions = os.path.join(table_dir, "_versions")
         self._data = os.path.join(table_dir, "data")
-        self._constraints_file = os.path.join(table_dir, "_constraints")
-        self._layout_file = os.path.join(table_dir, "_layout")
-        self._stats_file = os.path.join(table_dir, "_stats_cols")
-        self._colmap_flag = os.path.join(table_dir, "_column_mapping")
-        self._cdf_flag = os.path.join(table_dir, "_cdf")
         self._ckpt_path = os.path.join(self._versions, "_checkpoint")
         # cache key prefix: resolved once — manifests are addressed
         # through it thousands of times on CDC walks
@@ -756,9 +791,7 @@ class VersionedTable:
                 raise ValueError("pass version= OR timestamp=, not both")
             return self.version_at_timestamp(timestamp)
         v = self.latest_version() if version is None else version
-        if v is not None and os.path.exists(
-            os.path.join(self._versions, str(v))
-        ):
+        if v and os.path.exists(os.path.join(self._versions, str(v))):
             return v
         committed = self.versions()
         if not committed:
@@ -866,99 +899,114 @@ class VersionedTable:
             (self._versions_key, version), path, _parse_manifest
         )
 
-    def set_constraints(self, exprs: list[str]) -> None:
+    def _at(self, version: int) -> Manifest:
+        """The manifest a commit on top of ``version`` starts from.
+        Version 0 is the empty table: ``_versions/0`` records the
+        properties set before the first commit, or is absent (an empty
+        manifest). It is the one manifest rewritten in place, so it is
+        read uncached."""
+        if version:
+            return self._parsed(version)
+        try:
+            return _parse_manifest(os.path.join(self._versions, "0"))
+        except FileNotFoundError:
+            return Manifest()
+
+    def _props(self) -> TableProps:
+        return self._at(self.latest_version() or 0).props
+
+    def _set_props(
+        self,
+        op: str,
+        change: Callable[[TableProps], TableProps],
+        validate: Callable[[int], None] = lambda version: None,
+    ) -> int | None:
+        """Publish ``change(props)`` as a metadata-only commit named
+        ``op``; returns its version, or None when the properties did not
+        change. On a table with no commits the record is ``_versions/0``
+        (rewritten in place; the first data commit is still version 1).
+        If a commit landed meanwhile, the change is also published on
+        top of it. ``validate(version)`` checks a snapshot before the
+        publish and again after every rebase."""
+
+        def build(b: int) -> Manifest | None:
+            m = self._at(b)
+            props = change(m.props)
+            return None if props == m.props else m.derive(props=props, op=op)
+
+        def rebase(b: int) -> int | None:
+            latest = self.latest_version()
+            validate(latest)
+            return latest
+
+        head = self.latest_version()
+        if head is None:
+            empty = build(0)
+            if empty is None:
+                return None
+            self._publish_manifest(empty, 0)
+            if (head := self.latest_version()) is None:
+                return 0
+        validate(head)
+        return _publish_loop(self, head, build, rebase, op, sets_props=True)
+
+    def set_constraints(self, exprs: list[str]) -> int | None:
         """Declare table-level CHECK constraints (Delta's ``ALTER TABLE
         ADD CONSTRAINT ... CHECK`` in miniature): SQL boolean expressions
         every subsequently committed row must satisfy. SQL CHECK
         semantics — a row violates only when the expression is FALSE;
         UNKNOWN/NULL satisfies (enforce non-nullness with an explicit
-        ``IS NOT NULL`` constraint). Persisted tmp+fsync+rename like the
-        manifests; pass ``[]`` to drop all constraints."""
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = self._constraints_file + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(exprs) + ("\n" if exprs else ""))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._constraints_file)
+        ``IS NOT NULL`` constraint). A property commit (see
+        :meth:`_set_props`) that skips validating existing rows —
+        :meth:`add_constraint` validates; pass ``[]`` to drop all
+        constraints."""
+        return self._set_props(
+            "set_constraints", lambda p: replace(p, checks=list(exprs))
+        )
 
     def constraints(self) -> list[str]:
-        if not os.path.exists(self._constraints_file):
-            return []
-        with open(self._constraints_file) as f:
-            return [line.strip() for line in f if line.strip()]
+        return list(self._props().checks)
 
-    def add_constraint(self, expr: str) -> None:
+    def add_constraint(self, expr: str) -> int | None:
         """``ALTER TABLE ADD CONSTRAINT ... CHECK`` with Delta's full
-        contract: before the constraint starts gating future commits,
-        the CURRENT snapshot is validated against it in one scan — a
-        constraint existing rows violate is REFUSED, so a reader can
-        trust that every CHECK in :meth:`constraints` holds over all
-        visible data, not just rows committed after it was declared
-        (:meth:`set_constraints` is the raw primitive that skips the
-        scan — right for empty/new tables, documented trade). SQL CHECK
-        semantics as everywhere: FALSE violates, UNKNOWN satisfies.
+        contract: the snapshot the constraint commits on top of is
+        validated against it in one scan, and a constraint existing rows
+        violate is REFUSED — so a reader can trust that every CHECK in
+        :meth:`constraints` holds over all visible data, not just rows
+        committed after it was declared. SQL CHECK semantics as
+        everywhere: FALSE violates, UNKNOWN satisfies.
 
-        Concurrency: the validated version is PINNED before each scan
-        and, after the constraint file lands, the loop re-validates any
-        snapshot a racing writer published in between (rolling the
-        constraint back on a late violation) — so commits that land
-        DURING validation are still covered. The residual window is a
-        writer that STAGED its batch under the old constraint set and
-        publishes after the final re-check: its rows bypass this
-        constraint (the side file is not part of the manifest CAS, the
-        documented gap vs Delta's in-log metadata commits)."""
-        from pyspark.sql import functions as F
+        Concurrency: the constraint is a commit of its own. A data
+        commit that lands first is validated when the publish rebases
+        onto it, a property another writer set meanwhile is kept, and a
+        writer that staged its batch under the old constraint set loses
+        its publish (:func:`_publish_loop` never rebases a write across
+        a property change) — no row bypasses the constraint."""
 
-        def _first_violation(version: int) -> int:
-            return (
-                self.read(version=version)
-                .filter(F.expr(f"NOT coalesce(({expr}), true)"))
-                .limit(1)
-                .count()
-            )
+        def validate(version: int) -> None:
+            rows = self.read(version=version)
+            if rows.filter(f"NOT coalesce(({expr}), true)").limit(1).count():
+                raise ConstraintViolation(
+                    f"cannot add CHECK constraint {expr!r} at {self.dir}: "
+                    "existing rows violate it (Delta's ADD CONSTRAINT "
+                    "validation); clean the data first"
+                )
 
-        published = False
-        validated: int | None = -1  # sentinel: nothing validated yet
-        try:
-            while True:
-                committed = self.versions()
-                latest = committed[-1] if committed else None
-                if latest == validated:
-                    return  # no commit landed since the validated scan
-                if latest is not None and _first_violation(latest):
-                    raise ConstraintViolation(
-                        f"cannot add CHECK constraint {expr!r} at "
-                        f"{self.dir}: existing rows violate it (Delta's "
-                        "ADD CONSTRAINT validation); clean the data first"
-                    )
-                validated = latest
-                if not published:
-                    # re-read AT publish time (the validation scan can
-                    # be long — a constraint another writer added
-                    # meanwhile must not be clobbered)
-                    self.set_constraints(self.constraints() + [expr])
-                    published = True
-        except ConstraintViolation:
-            if published:
-                # a racing commit (staged pre-constraint) slipped in
-                # violating rows: withdraw exactly ONE occurrence of
-                # what we appended — a pre-existing identical CHECK and
-                # any constraint a concurrent writer added both survive
-                cur = self.constraints()
-                if expr in cur:
-                    cur.remove(expr)
-                self.set_constraints(cur)
-            raise
+        return self._set_props(
+            "add_constraint",
+            lambda p: p if expr in p.checks else replace(p, checks=[*p.checks, expr]),
+            validate,
+        )
 
-    def set_layout(self, bucket_keys: list[str], n_buckets: int) -> None:
+    def set_layout(self, bucket_keys: list[str], n_buckets: int) -> int | None:
         """Declare a key-bucket layout: every subsequent commit writes its
         batch partitioned by ``pmod(xxhash64(bucket_keys...), n_buckets)``
         and the manifest lists per-bucket dirs, enabling bucket-granular
         copy-on-write for :func:`merge_upsert` / :func:`delete_by_keys`
         and bucket-pruned diffs in :meth:`read_changes_cdc`. Declare it
         BEFORE the first commit for full effect; on an existing table the
-        next full-rewrite commit (merge/compact) migrates the data.
+        next full-rewrite commit (merge/compact) migrates the data. A
+        property commit (see :meth:`_set_props`).
 
         Sizing ``n_buckets``: it is both the rewrite granularity (a
         sparse merge rewrites ~touched buckets / n_buckets of the table)
@@ -972,23 +1020,13 @@ class VersionedTable:
             raise ValueError("n_buckets must be >= 1")
         if BUCKET_COL in bucket_keys:
             raise ValueError(f"bucket key may not be named {BUCKET_COL!r}")
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = self._layout_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"bucket_keys": list(bucket_keys), "n_buckets": n_buckets}, f
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._layout_file)
+        layout = {"bucket_keys": list(bucket_keys), "n_buckets": n_buckets}
+        return self._set_props("set_layout", lambda p: replace(p, layout=layout))
 
     def layout(self) -> dict | None:
-        if not os.path.exists(self._layout_file):
-            return None
-        with open(self._layout_file) as f:
-            return json.load(f)
+        return copy.deepcopy(self._props().layout)
 
-    def set_stats_columns(self, cols: list[str]) -> None:
+    def set_stats_columns(self, cols: list[str]) -> int | None:
         """Declare the columns whose per-dir min/max/null statistics ride
         every subsequent manifest (``#stats=`` header lines) — Delta's
         ``dataSkippingNumIndexedCols`` in miniature. Collection is a
@@ -997,20 +1035,14 @@ class VersionedTable:
         100 TB a commit pays O(new files) metadata reads, zero bytes of
         data. :meth:`read_where` uses the recorded ranges to open only
         the dirs a predicate can match. Pass ``[]`` to stop collecting
-        (existing manifests keep their recorded stats)."""
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = self._stats_file + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(cols) + ("\n" if cols else ""))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._stats_file)
+        (existing manifests keep their recorded stats). A property
+        commit (see :meth:`_set_props`)."""
+        return self._set_props(
+            "set_stats_columns", lambda p: replace(p, stats_cols=list(cols))
+        )
 
     def stats_columns(self) -> list[str]:
-        if not os.path.exists(self._stats_file):
-            return []
-        with open(self._stats_file) as f:
-            return [line.strip() for line in f if line.strip()]
+        return list(self._props().stats_cols)
 
     def dir_stats(self, version: int) -> dict[str, dict]:
         """The version's recorded per-dir column statistics (``#stats=``
@@ -1028,7 +1060,7 @@ class VersionedTable:
         }
 
     def _collect_dir_stats(
-        self, dirs: list[str], colmap: dict | None = None
+        self, dirs: list[str], cols: list[str], colmap: dict | None = None
     ) -> dict[str, dict]:
         """Per-dir min/max/null-count for the declared stats columns,
         aggregated from PARQUET ROW-GROUP FOOTERS (pyarrow metadata
@@ -1040,7 +1072,6 @@ class VersionedTable:
         unsound. Parquet writers only emit binary min/max that remain
         valid BOUNDS under truncation, so recorded ranges may be loose
         but never exclude a present value."""
-        cols = self.stats_columns()
         if not cols:
             return {}
         import pyarrow.parquet as pq
@@ -1113,10 +1144,11 @@ class VersionedTable:
         return out
 
     def versions(self) -> list[int]:
-        """Sorted committed version numbers (manifest presence = commit)."""
+        """Sorted committed version numbers (manifest presence = commit;
+        version 0, the empty table's record, is not a commit)."""
         if not os.path.isdir(self._versions):
             return []
-        return sorted(int(f) for f in os.listdir(self._versions) if f.isdigit())
+        return sorted({int(f) for f in os.listdir(self._versions) if f.isdigit()} - {0})
 
     def _manifest(self, version: int) -> list[str]:
         return list(self._parsed(version).dirs)
@@ -1142,28 +1174,28 @@ class VersionedTable:
         written under stable PHYSICAL column names (``col_<id>``,
         assigned once per logical column, never reused) and every
         manifest records the logical→physical map in a ``#colmap=``
-        header. That makes :func:`rename_column` and :func:`drop_column`
-        pure METADATA commits — renaming or dropping a column on a
-        100 TB table rewrites one manifest line, zero data files — at
-        the standard cost: the raw parquet is only readable through the
-        table (physical names), exactly Delta's trade."""
+        header — the map's presence is the opt-in, recorded in
+        ``_versions/0``, the empty table's record. That makes
+        :func:`rename_column` and :func:`drop_column` pure METADATA
+        commits — renaming or dropping a column on a 100 TB table
+        rewrites one manifest line, zero data files — at the standard
+        cost: the raw parquet is only readable through the table
+        (physical names), exactly Delta's trade."""
         if self.versions():
             raise ValueError(
                 "column mapping must be enabled before the first commit "
                 "(existing batches were written under logical names)"
             )
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = self._colmap_flag + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("enabled\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._colmap_flag)
+        empty = self._at(0)
+        if empty.colmap is None:
+            self._publish_manifest(
+                empty.derive(colmap={}, op="enable_column_mapping"), 0
+            )
 
     def column_mapping_enabled(self) -> bool:
-        return os.path.exists(self._colmap_flag)
+        return self._at(self.latest_version() or 0).colmap is not None
 
-    def enable_change_data_feed(self) -> None:
+    def enable_change_data_feed(self) -> int | None:
         """Opt the table into CHANGE DATA FEED materialization (Delta's
         ``delta.enableChangeDataFeed``): every subsequent row-CHANGING
         rewrite commit (MERGE, DELETE — copy-on-write or deletion-
@@ -1179,17 +1211,14 @@ class VersionedTable:
         payoff is the STREAMING change feed (t23,
         ``sources/versioned_stream.VersionedCDFStreamSource``): a
         replica follows a 100 TB table by reading O(changed rows) per
-        commit, with no per-commit snapshot diffs."""
-        os.makedirs(self.dir, exist_ok=True)
-        tmp = self._cdf_flag + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("enabled\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._cdf_flag)
+        commit, with no per-commit snapshot diffs. A property commit
+        (see :meth:`_set_props`)."""
+        return self._set_props(
+            "enable_change_data_feed", lambda p: replace(p, change_feed=True)
+        )
 
     def change_data_feed_enabled(self) -> bool:
-        return os.path.exists(self._cdf_flag)
+        return self._props().change_feed
 
     def cdf_path(self, version: int) -> str | None:
         """The version's materialized change-data dir (``#cdf=`` manifest
@@ -1215,19 +1244,16 @@ class VersionedTable:
         colmap = self._parsed(version).colmap
         return dict(colmap) if colmap is not None else None
 
-    def _next_colmap(self, df_columns: list[str], base_version: int | None):
-        """The colmap for a commit introducing ``df_columns``: carried
-        entries keep their physical ids, never-seen logical names get
-        the next id. Ids are never reused — a re-added logical name maps
-        to a FRESH physical column, so dropped data never resurrects
-        (Delta's rule)."""
-        if not self.column_mapping_enabled():
+    def _next_colmap(self, df_columns: list[str], base_version: int):
+        """The colmap for a commit on top of ``base_version`` (0 = the
+        empty table) introducing ``df_columns``, or None when the base
+        is unmapped: carried entries keep their physical ids, never-seen
+        logical names get the next id. Ids are never reused — a re-added
+        logical name maps to a FRESH physical column, so dropped data
+        never resurrects (Delta's rule)."""
+        prev = self._at(base_version).colmap
+        if prev is None:
             return None
-        prev = (
-            self.column_mapping(base_version) or {}
-            if base_version is not None
-            else {}
-        )
         # "never reused" must survive DROP COLUMN: the dropped entry left
         # the current map, but its physical id still holds old data in
         # immutable files — reassigning it would resurrect that data
@@ -1427,11 +1453,11 @@ class VersionedTable:
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         # latest-only resolution (checkpoint-bounded): commits never
-        # need the full version listing
-        head = self.latest_version()
-        existing = [head] if head is not None else []
-        if existing:
-            prev_schema = self.snapshot_schema(existing[-1])
+        # need the full version listing; the batch is staged under the
+        # base's properties (0 = the empty table's)
+        base = self.latest_version() or 0
+        if base:
+            prev_schema = self.snapshot_schema(base)
             if prev_schema is not None:
                 prev_fields = {f.name: f.dataType for f in prev_schema.fields}
                 new_fields = {f.name: f.dataType for f in df.schema.fields}
@@ -1483,7 +1509,7 @@ class VersionedTable:
                             f"{sorted(changed)}; pass "
                             "allow_schema_evolution=True to accept"
                         )
-                    layout = self.layout()
+                    layout = self._at(base).props.layout
                     if layout is not None:
                         widened_keys = [
                             n for n in changed if n in layout["bucket_keys"]
@@ -1502,7 +1528,6 @@ class VersionedTable:
                                 "via a full rewrite (overwrite commit) "
                                 "instead"
                             )
-        base = existing[-1] if existing else 0
         if expected_base_version is not None and base != expected_base_version:
             raise ConcurrentCommitError(
                 f"commit at {self.dir} expected base version "
@@ -1512,24 +1537,22 @@ class VersionedTable:
             )
         # overwrite keeps carried physical ids for same-named columns —
         # stable ids are what make renames/drops metadata-only later
-        colmap = self._next_colmap(
-            df.columns, existing[-1] if existing else None
-        )
+        colmap = self._next_colmap(df.columns, base)
         new_dirs = self._write_batch(df, base + 1, colmap=colmap)
         own = extra or {}
 
         def build(b: int) -> Manifest:
             # an append extends the base manifest; its active deletion
             # vectors (both kinds) ride along unchanged — they cover
-            # only the dirs they already covered, never the new batch
-            carried = b if b and mode == "append" else None
-            prev = self._parsed(carried) if carried else Manifest()
+            # only the dirs they already covered, never the new batch.
+            # An overwrite starts from the base's properties alone.
+            prev = self._at(b)
+            if mode != "append":
+                prev = Manifest(props=prev.props)
             dirs = prev.dirs + new_dirs
             return prev.derive(
                 dirs=dirs, schema=df.schema, colmap=colmap, op=op or mode,
-                stats=self._stats_for_commit(
-                    new_dirs, carried, dirs, colmap=colmap
-                ),
+                stats=self._stats_for_commit(new_dirs, prev, dirs, colmap),
                 **own,
             )
 
@@ -1560,24 +1583,22 @@ class VersionedTable:
     def _stats_for_commit(
         self,
         new_dirs: list[str],
-        base_version: int | None,
+        base: Manifest,
         final_dirs: list[str],
         colmap: dict | None = None,
     ) -> dict[str, dict]:
-        """Stats for a commit publishing ``final_dirs``: carried
-        dirs keep the bounds their ORIGINAL commit recorded (data files
-        are immutable, so recorded stats never go stale), new dirs get a
-        footer harvest. Carrying survives even when stats collection has
+        """Stats for a commit on top of ``base`` publishing
+        ``final_dirs``: carried dirs keep the bounds their ORIGINAL
+        commit recorded (data files are immutable, so recorded stats
+        never go stale), new dirs get a footer harvest of the base's
+        stats columns. Carrying survives even when stats collection has
         since been turned off — recorded metadata is never dropped."""
-        carried: dict[str, dict] = {}
-        if base_version is not None:
-            final = set(final_dirs)
-            carried = {
-                d: s
-                for d, s in self.dir_stats(base_version).items()
-                if d in final
-            }
-        return {**carried, **self._collect_dir_stats(new_dirs, colmap=colmap)}
+        final = set(final_dirs)
+        carried = {d: s for d, s in base.stats.items() if d in final}
+        fresh = self._collect_dir_stats(
+            new_dirs, base.props.stats_cols, colmap=colmap
+        )
+        return {**carried, **fresh}
 
     def _write_batch(
         self,
@@ -1586,7 +1607,8 @@ class VersionedTable:
         colmap: dict | None = None,
         write_partitions: int | None = None,
     ) -> list[str]:
-        """Stage ``df`` as a new immutable batch; return the manifest
+        """Stage ``df`` as a new immutable batch for ``version``, under
+        the properties of its base ``version - 1``; return the manifest
         dirs it contributes (the batch dir, or its per-bucket subdirs
         when a layout is declared). CHECK constraints are evaluated in
         the SAME pass as the batch write (df.observe piggybacks on the
@@ -1610,7 +1632,8 @@ class VersionedTable:
         column names; everything upstream of this method stays
         logical."""
         batch = os.path.join(self._data, f"batch_{version}_{uuid.uuid4().hex[:8]}")
-        checks = self.constraints()
+        props = self._at(version - 1).props
+        checks = props.checks
         obs = None
         if checks:
             from functools import reduce
@@ -1624,7 +1647,7 @@ class VersionedTable:
             )
             obs = Observation(f"constraints_{uuid.uuid4().hex[:8]}")
             df = df.observe(obs, F.sum(viol.cast("long")).alias("n_bad"))
-        layout = self.layout()
+        layout = props.layout
         if layout is not None:
             if BUCKET_COL in df.columns:
                 raise ValueError(
@@ -1692,7 +1715,8 @@ class VersionedTable:
         substrate Delta's commit protocol needs). The record is stamped
         with the commit wall-clock and the newest watermarks
         (:meth:`_carry`; the commit's own ``sbatch``/``idhwm`` win), all
-        in the same atomic write as the dir list."""
+        in the same atomic write as the dir list. Version 0, the empty
+        table's record, is not raced for: it is replaced in place."""
         carry = self._carry()
         manifest = replace(
             manifest,
@@ -1701,12 +1725,17 @@ class VersionedTable:
             idhwm=manifest.idhwm or carry.idhwm,
         )
         os.makedirs(self._versions, exist_ok=True)
-        tmp = os.path.join(self._versions, f".{version}.tmp")
+        # one tmp per writer: racers for one version must never write
+        # through each other's file
+        tmp = os.path.join(self._versions, f".{version}.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(manifest.dumps())
             f.flush()
             os.fsync(f.fileno())
         final = os.path.join(self._versions, str(version))
+        if not version:
+            os.replace(tmp, final)
+            return
         try:
             os.link(tmp, final)  # atomic create-if-absent: loser raises
         except FileExistsError:
@@ -2494,7 +2523,7 @@ def compact_incremental(
     min_bytes = (
         min_dir_bytes if min_dir_bytes is not None else target_file_bytes // 8
     )
-    layout = table.layout()
+    layout = table._at(base_version).props.layout
     if layout is not None and all(_dir_bucket(d) is not None for d in dirs):
         by_bucket: dict[int, list[str]] = {}
         for d in dirs:
@@ -2589,7 +2618,7 @@ def compact(
     total_bytes = sum(b for _n, b in fstats)
     n_parts = max(1, -(-total_bytes // target_file_bytes))  # ceil
     df = table.read(version=base_version)
-    if table.layout() is None:
+    if table._at(base_version).props.layout is None:
         # merging fragments needs no redistribution — narrow coalesce
         df = df.coalesce(n_parts)
     # else: the layout-aware batch writer repartitions by bucket id and
@@ -3006,7 +3035,7 @@ def merge_upsert(
             .unionByName(ins.select(*out_cols))
         )
     changes = None
-    if table.change_data_feed_enabled():
+    if table._at(base_version).props.change_feed:
         # CHANGE DATA FEED: tag each source row update-vs-insert and
         # stage the result as this commit's cdf rows — ONE extra job:
         # a single left join against the DISTINCT merge keys of the
@@ -3098,7 +3127,7 @@ def _granular_split(
     run them separately)."""
     dirs = table._manifest(base_version)
     whole = [], dirs, None, None
-    layout = table.layout()
+    layout = table._at(base_version).props.layout
     if layout is None or not set(layout["bucket_keys"]) <= set(keys):
         return whole
     # the bucket hash is TYPE-sensitive (xxhash64(int32 5) !=
@@ -3260,7 +3289,7 @@ def _publish_rewrite(
             dvs=_restrict_cover(base.dvs, carry),
             pdvs=_restrict_cover(base.pdvs, carry),
             stats=table._stats_for_commit(
-                new_dirs, b, carry + new_dirs, colmap=colmap
+                new_dirs, base, carry + new_dirs, colmap=colmap
             ),
             **(extra or {}),
         )
@@ -3412,7 +3441,7 @@ def delete_by_keys(
         storageLevel=StorageLevel.DISK_ONLY
     )
     key_set = delete_keys.select(*keys)
-    cdf_on = table.change_data_feed_enabled()
+    cdf_on = table._at(base_version).props.change_feed
     if merge_on_read:
         version = base_version + 1
         dv_dir = os.path.join(
@@ -3629,7 +3658,7 @@ def cluster_rewrite(
         if colmap
         else list(orig_cols)
     )
-    layout = table.layout()
+    layout = table._at(base_version).props.layout
     zdf = zdf.withColumn("zc", chunk)
     if layout is not None:
         # preserve the key-bucket organization inside each chunk: the
@@ -3837,7 +3866,7 @@ def update_where(
         ]
     )
     changes = None
-    if table.change_data_feed_enabled():
+    if table._at(base_version).props.change_feed:
         # post-images: apply the SET to the matched rows directly (a
         # join-back would be wrong under duplicates) — one extra scoped
         # filter job, O(matched rows) written
@@ -3897,7 +3926,7 @@ def delete_where(
     df = table._read_dirs(scope, base_version)
     kept = df.filter(~F.coalesce(cond, F.lit(False)))
     changes = None
-    if table.change_data_feed_enabled():
+    if table._at(base_version).props.change_feed:
         changes = df.filter(cond).withColumn("_change_type", F.lit("delete"))
     return _rewrite(
         table, base_version, scope, kept, "delete", commute="appends",
@@ -4017,7 +4046,7 @@ def _delete_where_positions(
             shutil.rmtree(pdv_dir, ignore_errors=True)
             return base_version
         cdf = {}
-        if table.change_data_feed_enabled():
+        if table._at(base_version).props.change_feed:
             # the persisted matched set is the feed, minus the
             # position identity
             change_df = matched.drop(FCOL, PCOL).withColumn(
@@ -4147,39 +4176,36 @@ def commit_with_identity(
     )
 
 
-def _mapped_schema_commit_guards(
-    table: VersionedTable, col: str, verb: str
-) -> None:
-    """Shared refusals for metadata-only column DDL: anything whose
-    semantics are keyed by the column NAME outside the manifest would
-    silently break — refuse loudly instead."""
+def _mapped_schema_commit_guards(m: Manifest, col: str, verb: str) -> None:
+    """Shared refusals for metadata-only column DDL over the base
+    manifest ``m``: anything whose semantics are keyed by the column
+    NAME in a way the commit cannot rewrite would silently break —
+    refuse loudly instead."""
     import re
 
-    if not table.column_mapping_enabled():
+    import pyarrow.parquet as pq
+
+    if m.colmap is None:
         raise ValueError(
             f"{verb} is metadata-only and needs column mapping "
             "(enable_column_mapping() before the first commit); without "
             "it the data files carry logical names and a rename/drop "
             "would require a full rewrite"
         )
-    for c in table.constraints():
+    for c in m.props.checks:
         if re.search(rf"\b{re.escape(col)}\b", c):
             raise ValueError(
                 f"cannot {verb} {col!r}: CHECK constraint {c!r} references "
                 "it; drop/update the constraint first"
             )
-    committed = table.versions()
-    if committed:
-        import pyarrow.parquet as pq
-
-        for dv in table.deletion_vectors(committed[-1]):
-            dv_cols = pq.read_schema(_parquet_files(dv["path"])[0]).names
-            if col in dv_cols:
-                raise ValueError(
-                    f"cannot {verb} {col!r}: an active deletion vector "
-                    "keys on it; compact() to materialize the deletes "
-                    "first"
-                )
+    for dv in m.dvs:
+        dv_cols = pq.read_schema(_parquet_files(dv["path"])[0]).names
+        if col in dv_cols:
+            raise ValueError(
+                f"cannot {verb} {col!r}: an active deletion vector "
+                "keys on it; compact() to materialize the deletes "
+                "first"
+            )
 
 
 def rename_column(table: VersionedTable, old: str, new: str) -> int:
@@ -4188,14 +4214,15 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
     renamed logical schema and points the new logical name at the SAME
     physical column — renaming a column on a 100 TB table rewrites one
     manifest, zero data files. Time travel keeps each version's own
-    names; recorded data-skipping stats re-key to the new name; a
-    bucket-key rename updates the layout declaration (safe: the bucket
-    hash is over VALUES, names never enter it). Refused when a CHECK
-    constraint or an active deletion vector references the column (their
-    semantics key on the name outside the manifest)."""
-    _mapped_schema_commit_guards(table, old, "rename")
+    names; recorded data-skipping stats, the stats columns and a
+    bucket-key layout re-key to the new name in the same commit (safe:
+    the bucket hash is over VALUES, names never enter it), so a lost
+    publish race leaves every one of them untouched. Refused when a
+    CHECK constraint or an active deletion vector references the
+    column (their expressions and files name it)."""
     base = table._resolve()
     m = table._parsed(base)
+    _mapped_schema_commit_guards(m, old, "rename")
     schema = table.snapshot_schema(base)
     names = [f.name for f in schema.fields]
     if old not in names:
@@ -4216,27 +4243,18 @@ def rename_column(table: VersionedTable, old: str, new: str) -> int:
         d: {(new if c == old else c): s for c, s in cols.items()}
         for d, cols in m.stats.items()
     }
-    # CAS FIRST, side files after: _layout and _stats_cols are
-    # unversioned, so mutating them before the manifest publish would —
-    # on a lost concurrent-commit race — leave the table with the OLD
-    # schema but RENAMED layout/stats config (later commits would
-    # bucket/collect stats under a column the schema doesn't have).
-    # Publishing first makes a lost race a clean no-op.
+    layout = m.props.layout
+    if layout is not None:
+        keys = [new if k == old else k for k in layout["bucket_keys"]]
+        layout = {**layout, "bucket_keys": keys}
+    stats_cols = [new if c == old else c for c in m.props.stats_cols]
     table._publish_manifest(
         m.derive(
-            schema=new_schema, stats=stats, colmap=colmap, op="rename_column"
+            schema=new_schema, stats=stats, colmap=colmap, op="rename_column",
+            props=replace(m.props, layout=layout, stats_cols=stats_cols),
         ),
         base + 1,
     )
-    layout = table.layout()
-    if layout is not None and old in layout["bucket_keys"]:
-        table.set_layout(
-            [new if k == old else k for k in layout["bucket_keys"]],
-            layout["n_buckets"],
-        )
-    stat_cols = table.stats_columns()
-    if old in stat_cols:
-        table.set_stats_columns([new if c == old else c for c in stat_cols])
     return base + 1
 
 
@@ -4249,16 +4267,17 @@ def drop_column(table: VersionedTable, col: str) -> int:
     column — dropped data cannot resurrect (Delta's rule, pytest-
     pinned). Bucket-key columns cannot be dropped (the layout needs
     them); constraint- or DV-referenced columns are refused like
-    rename."""
-    _mapped_schema_commit_guards(table, col, "drop")
+    rename. A stats column leaves the stats columns in the same
+    commit."""
     base = table._resolve()
-    layout = table.layout()
+    m = table._parsed(base)
+    _mapped_schema_commit_guards(m, col, "drop")
+    layout = m.props.layout
     if layout is not None and col in layout["bucket_keys"]:
         raise ValueError(
             f"cannot drop bucket-key column {col!r}: the layout's "
             "granular rewrites need it"
         )
-    m = table._parsed(base)
     names = [f.name for f in m.schema.fields]
     if col not in names:
         raise ValueError(f"no column {col!r} (have {names})")
@@ -4268,14 +4287,13 @@ def drop_column(table: VersionedTable, col: str) -> int:
         d: {c: s for c, s in cols.items() if c != col}
         for d, cols in m.stats.items()
     }
-    stat_cols = table.stats_columns()
-    if col in stat_cols:
-        table.set_stats_columns([c for c in stat_cols if c != col])
+    stat_cols = [c for c in m.props.stats_cols if c != col]
     table._publish_manifest(
         m.derive(
             schema=StructType([f for f in m.schema.fields if f.name != col]),
             colmap={k: v for k, v in m.colmap.items() if k != col},
             stats={d: cols for d, cols in stats.items() if cols},
+            props=replace(m.props, stats_cols=stat_cols),
             op="drop_column",
         ),
         base + 1,
@@ -4295,7 +4313,9 @@ def restore(table: VersionedTable, to_version: int) -> int:
     subsequent vacuum keeps them alive by the ordinary reference rule —
     no special casing. Publication rides the same CAS as every commit
     (base+1 or :class:`ConcurrentCommitError`). Fails cleanly when the
-    target snapshot's data has already been vacuumed."""
+    target snapshot's data has already been vacuumed. The table's
+    properties stay the latest version's: RESTORE rolls back data and
+    schema, not constraints or layout."""
     table._resolve(to_version)
     dirs = table._manifest(to_version)
     missing = [d for d in dirs if not os.path.isdir(d)]
@@ -4304,15 +4324,16 @@ def restore(table: VersionedTable, to_version: int) -> int:
             f"cannot restore to version {to_version}: {len(missing)} of "
             f"its data dirs were vacuumed (first: {missing[0]})"
         )
-    return_version = table._resolve() + 1
+    latest = table._resolve()
     table._publish_manifest(
         table._parsed(to_version).derive(
             schema=table.snapshot_schema(to_version),
+            props=table._parsed(latest).props,
             op=f"restore (to v{to_version})",
         ),
-        return_version,
+        latest + 1,
     )
-    return return_version
+    return latest + 1
 
 
 def clone(
@@ -4329,11 +4350,12 @@ def clone(
     touching the source (copy-on-write at batch granularity).
 
     Table METADATA travels with the clone (Delta's SHALLOW CLONE carries
-    table properties): the source's CHECK constraints and key-bucket
-    layout files are copied into the clone dir, so commits to the clone
-    stay constraint-enforced and bucket-granular-mergeable (round-10
-    advice: a clone that silently dropped constraints would un-enforce
-    every subsequent commit).
+    table properties): the clone's first manifest records the source's
+    LATEST properties — CHECK constraints, key-bucket layout, stats
+    columns, change feed — whichever version is cloned, so commits to
+    the clone stay constraint-enforced and bucket-granular-mergeable (a
+    clone that silently dropped constraints would un-enforce every
+    subsequent commit).
 
     The standard shallow-clone caveat applies and is inherited
     deliberately: :func:`vacuum` on the SOURCE retires dirs the clone
@@ -4362,25 +4384,11 @@ def clone(
             pdvs=_real(m.pdvs),
             stats={real(d): s for d, s in m.stats.items()},
             idhwm=table._carry().idhwm,
+            props=table._props(),
             op=f"clone (of v{v})",
         ),
         1,
     )
-    # carry table metadata: constraints + bucket layout (tmp+fsync+rename
-    # like every metadata write)
-    for src_file, dst_file in (
-        (table._constraints_file, target._constraints_file),
-        (table._layout_file, target._layout_file),
-        (table._stats_file, target._stats_file),
-        (table._colmap_flag, target._colmap_flag),
-        (table._cdf_flag, target._cdf_flag),
-    ):
-        if os.path.exists(src_file):
-            import shutil
-
-            tmp_meta = dst_file + ".tmp"
-            shutil.copyfile(src_file, tmp_meta)
-            os.replace(tmp_meta, dst_file)
     return target
 
 

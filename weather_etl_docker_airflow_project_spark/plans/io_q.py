@@ -3079,9 +3079,9 @@ def s49_versioned_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested NumPy xxHash64, and footer-harvested skipping
     stats. History: v1 = %3==0 keys written VANILLA, v2 = %3==1 keys
     written through the LIBRARY (interop both ways on one log), v3 =
-    %3==2 keys vanilla again under a CHECK constraint; then a violating
-    vanilla write (negative totalprice) is REFUSED with no version
-    published. Declared output aggregates the latest snapshot and the
+    the CHECK constraint (a property commit), v4 = %3==2 keys vanilla
+    again under it; then a violating vanilla write (negative
+    totalprice) is REFUSED with no version published. Declared output aggregates the latest snapshot and the
     v1 snapshot (time travel over vanilla commits); concurrency,
     column-mapping, and vacuum-grace behavior are pytest-gated in
     tests/test_round13_sink.py. Reference parity: the reference's load
@@ -3109,7 +3109,7 @@ def s49_versioned_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.commit(o.filter(F.col("o_orderkey") % 3 == 1), mode="append")
     t.set_constraints(["o_totalprice >= 0.0", "o_orderkey IS NOT NULL"])
     vanilla(o.filter(F.col("o_orderkey") % 3 == 2))
-    if t.versions() != [1, 2, 3]:
+    if t.versions() != [1, 2, 3, 4]:
         raise AssertionError(f"sink/library interleave broke: {t.versions()}")
     try:
         vanilla(
@@ -3121,7 +3121,7 @@ def s49_versioned_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception as e:  # noqa: BLE001 - Spark wraps the task error
         if "CHECK constraint" not in str(e):
             raise
-    if t.versions() != [1, 2, 3]:
+    if t.versions() != [1, 2, 3, 4]:
         raise AssertionError("violating write published a version")
     latest = (
         spark.read.format("versioned_table").option("tableDir", t.dir).load()

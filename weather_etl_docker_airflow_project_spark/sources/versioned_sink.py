@@ -29,9 +29,10 @@ How each library-writer responsibility is met WITHOUT a SparkSession
   versioned table's one optimistic-commit loop
   (``operators/versioned._publish_loop``), republishing against the
   newest manifest on a lost race exactly like ``VersionedTable.commit``'s
-  append auto-rebase; every attempt re-verifies schema / column-map /
-  constraints / layout against the current latest, refusing when an
-  interloper changed table metadata.
+  append auto-rebase. Every attempt refuses a base whose table
+  properties (constraints, layout, stats columns, change feed — one
+  field of its manifest) differ from those the tasks enforced, and
+  re-verifies schema and column map against it.
 - **CHECK constraints**: parsed at PLAN time with the round-13
   predicate grammar (``operators/predicate.py``) and evaluated
   executor-side over Arrow batches with Kleene 3VL (violates only on
@@ -92,8 +93,10 @@ class VersionedTableWriter(DataSourceArrowWriter):
         self._dir = table_dir
         self._mode = "overwrite" if overwrite else "append"
         table = VersionedTable(None, table_dir)
-        committed = table.versions()
-        self._base = committed[-1] if committed else None
+        self._base = table.latest_version()
+        # the table properties the tasks enforce; commit() refuses a base
+        # whose properties differ
+        self._props = table._at(self._base or 0).props
 
         # ---- schema contract (plan time, against the current latest;
         # re-verified at commit) --------------------------------------
@@ -150,15 +153,14 @@ class VersionedTableWriter(DataSourceArrowWriter):
         self._columns = [f.name for f in schema.fields]
 
         # ---- column mapping: data files carry PHYSICAL names ---------
-        colmap = table._next_colmap(self._columns, self._base)
+        colmap = table._next_colmap(self._columns, self._base or 0)
         self._colmap = colmap
 
         # ---- CHECK constraints: parse now, evaluate per batch --------
         from ..operators.predicate import atom_columns, parse_predicate
 
-        self._constraints_raw = table.constraints()
         self._checks = []
-        for expr in self._constraints_raw:
+        for expr in self._props.checks:
             try:
                 ast = parse_predicate(expr)
             except ValueError as e:
@@ -179,7 +181,7 @@ class VersionedTableWriter(DataSourceArrowWriter):
             self._checks.append((expr, ast))
 
         # ---- layout: executor-side bucket placement ------------------
-        self._layout = table.layout()
+        self._layout = self._props.layout
         if self._layout is not None:
             missing = [
                 k for k in self._layout["bucket_keys"] if k not in self._columns
@@ -365,24 +367,13 @@ class VersionedTableWriter(DataSourceArrowWriter):
 
         self._publish(table, new_dirs)
 
-    def _verify(self, table: VersionedTable, latest: int) -> None:
-        """Re-verify the table metadata the tasks enforced against the
-        CURRENT latest: an interloper that changed constraints / layout /
-        colmap / schema mid-write invalidates the staged batch."""
-        if table.constraints() != self._constraints_raw:
-            raise ConcurrentCommitError(
-                f"table constraints at {self._dir} changed during the "
-                "write; the staged batch was validated against the old "
-                "set — re-run the write"
-            )
-        if table.layout() != self._layout:
-            raise ConcurrentCommitError(
-                f"table layout at {self._dir} changed during the "
-                "write; staged bucket placement is stale — re-run"
-            )
+    def _verify(self, latest: int, cur: Manifest) -> None:
+        """Re-verify the schema and column map an append staged under
+        against ``cur``, the CURRENT latest manifest: an interloper that
+        evolved the schema or renamed/dropped a column mid-write
+        invalidates the staged batch."""
         if not latest or self._mode != "append":
             return
-        cur = table._parsed(latest)
         if cur.schema is not None:
             cur_fields = {
                 f.name: f.dataType.simpleString() for f in cur.schema.fields
@@ -428,9 +419,16 @@ class VersionedTableWriter(DataSourceArrowWriter):
         def build(base: int) -> Manifest | None:
             if applied is not None and applied(table):
                 return None
-            self._verify(table, base)
-            carried = base if base and self._mode == "append" else None
-            prev = table._parsed(carried) if carried else Manifest()
+            prev = table._at(base)
+            if prev.props != self._props:
+                raise ConcurrentCommitError(
+                    "table properties (constraints, layout, stats columns, "
+                    f"change feed) at {self._dir} changed during the write; "
+                    "the staged batch enforced the old ones — re-run"
+                )
+            self._verify(base, prev)
+            if self._mode != "append":
+                prev = Manifest(props=prev.props)
             dirs = prev.dirs + new_dirs
             return prev.derive(
                 dirs=dirs,
@@ -438,7 +436,7 @@ class VersionedTableWriter(DataSourceArrowWriter):
                 colmap=self._colmap,
                 op=op or self._mode,
                 stats=table._stats_for_commit(
-                    new_dirs, carried, dirs, colmap=self._colmap
+                    new_dirs, prev, dirs, colmap=self._colmap
                 ),
                 **(extra or {}),
             )
